@@ -9,7 +9,7 @@ corpus needs (dedup, similarity search, text analysis, multimodal plumbing).
 Layout
 ------
 - ``session``    : SparkSession factory (AQE on, Arrow on, sane shuffle dims)
-- ``schemas``    : canonical StructTypes (interactions / knowledge_base / testdata)
+- ``schemas``    : canonical StructTypes (interactions / testdata tables)
 - ``sources``    : parquet catalog + multi-tenant storage layer + sinks
 - ``functions``  : pure Column-expression libraries (vector, text, json, hashing)
 - ``operators``  : composed DataFrame operators (top-k, IVF, dedup, windows, ...)

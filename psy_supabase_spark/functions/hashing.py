@@ -1,10 +1,11 @@
-"""Deterministic hashing / shingling primitives for dedup + fingerprints.
+"""Deterministic hashing primitives for dedup + fingerprints.
 
 All engine-internal hashes use Spark's built-ins (xxhash64 / crc32 /
-murmur hash) — JVM-side, codegen'd.  Where a DuckDB oracle must reproduce
-the hash exactly we instead use an explicit polynomial rolling hash over
-code points, expressible identically in both engines (see
-operators/textanalysis.fingerprint).
+murmur hash) — JVM-side, codegen'd.  Where a DuckDB oracle must
+reproduce a hash exactly, the engine uses
+:func:`md5_hash32` (expressible identically in both engines, see
+operators/textanalysis.fingerprint) and affine MinHash arithmetic mod
+:data:`POLY_MOD` (operators/dedup.minhash_signatures).
 """
 
 from __future__ import annotations
@@ -14,36 +15,14 @@ from pyspark.sql import functions as F
 
 ColumnOrName = Column | str
 
-# modulus < 2^31 keeps every intermediate (acc*BASE + cp) < 2^63 → no
-# overflow divergence between engines.
-POLY_BASE = 1_000_003
+# Mersenne prime 2^31-1: every (a*h + b) of the MinHash seeds over a
+# 32-bit hash stays < 2^63, so there is no overflow divergence between
+# engines.
 POLY_MOD = 2_147_483_647
 
 
 def _c(col: ColumnOrName) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-def char_shingles(col: ColumnOrName, n: int = 5) -> Column:
-    """All overlapping character n-grams of a string, as an array.
-
-    Native expression: sequence over start offsets + substring — no UDF.
-    Empty/short strings yield a single shingle of the whole string.
-    """
-    s = _c(col)
-    ln = F.length(s)
-    starts = F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(1)))
-    return F.transform(starts, lambda i: s.substr(i, F.lit(n)))
-
-
-def word_ngrams(tokens: ColumnOrName, n: int = 3) -> Column:
-    """Word n-grams (space-joined) from a token array."""
-    t = _c(tokens)
-    cnt = F.size(t)
-    starts = F.sequence(F.lit(0), F.greatest(cnt - F.lit(n), F.lit(0)))
-    return F.when(cnt < n, F.array(F.array_join(t, " "))).otherwise(
-        F.transform(starts, lambda i: F.array_join(F.slice(t, i + 1, n), " "))
-    )
 
 
 def md5_hash32(col: ColumnOrName) -> Column:
@@ -55,35 +34,3 @@ def md5_hash32(col: ColumnOrName) -> Column:
     inside whole-stage codegen instead of an interpreted lambda loop.
     The hash of choice for dedup shingles/fingerprints."""
     return F.conv(F.substring(F.md5(_c(col)), 1, 8), 16, 10).cast("bigint")
-
-
-def poly_hash(col: ColumnOrName) -> Column:
-    """Polynomial rolling hash over unicode code points, mod 2^31-1.
-
-    acc = (acc * POLY_BASE + codepoint) % POLY_MOD, folded left-to-right.
-    Deterministic and engine-portable (pure 64-bit integer arithmetic) —
-    used where a SQL oracle must reproduce the value bit-for-bit.
-    """
-    cps = F.transform(F.split(_c(col), ""), lambda ch: F.ascii(ch).cast("bigint"))
-    return F.aggregate(
-        cps,
-        F.lit(0).cast("bigint"),
-        lambda acc, cp: (acc * F.lit(POLY_BASE) + cp) % F.lit(POLY_MOD),
-    )
-
-
-def minhash_signature(shingle_hashes: ColumnOrName, seeds: list[tuple[int, int]]) -> Column:
-    """MinHash signature: for each (a,b) seed, min over shingle hashes of
-    (a*h + b) % POLY_MOD.  Input is an array of int64 shingle hashes."""
-    h = _c(shingle_hashes)
-    return F.array(
-        *[
-            F.array_min(F.transform(h, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(POLY_MOD)))
-            for a, b in seeds
-        ]
-    )
-
-
-def xxhash_tokens(tokens: ColumnOrName) -> Column:
-    """xxhash64 per token — engine-internal fast path (not oracle-portable)."""
-    return F.transform(_c(tokens), lambda t: F.xxhash64(t))

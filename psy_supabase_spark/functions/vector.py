@@ -46,10 +46,6 @@ def l2_norm(a: ColumnOrName) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def l2_norm_sq(a: ColumnOrName) -> Column:
-    return dot(a, a)
-
-
 def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
     """cos(a,b) in [-1,1]; NULL if either vector has zero norm."""
     na, nb = l2_norm(a), l2_norm(b)
@@ -59,11 +55,6 @@ def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
 def cosine_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
     """pgvector `<=>` parity: 1 - cosine_similarity (reference query.txt:198)."""
     return F.lit(1.0) - cosine_similarity(a, b)
-
-
-def l2_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    diff = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") - y.cast("double"))
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def normalize(a: ColumnOrName) -> Column:

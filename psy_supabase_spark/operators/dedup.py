@@ -213,8 +213,8 @@ def ngram_jaccard_pairs(
     sizes = gram_sizes(grams)
     inv = grams
     if df_cap is not None:
-        # window count, not aggregate+semi-join (the cap_buckets lesson,
-        # r9: this stage is training_pipeline's top marginal cost): the
+        # window count, not aggregate+semi-join (see counted_buckets;
+        # this stage is training_pipeline's top marginal cost): the
         # window's (gram) exchange is the exact partitioning the candidate
         # self-join needs, so both join sides read ONE ReusedExchange of
         # this subtree instead of paying a separate aggregate shuffle
@@ -227,18 +227,13 @@ def ngram_jaccard_pairs(
         )
     a = inv.select(F.col("id").alias("id_a"), "gram")
     b = inv.select(F.col("id").alias("id_b"), "gram")
-    # merge hint (r14 opt, re-adjudicated r15 verdict #2 and KEPT —
-    # unlike minhash_lsh_pairs, whose hint was reverted): both sides are
-    # the same gram pipeline ending in the df_cap window's (gram)
-    # exchange.  With the hint the executed plan runs one query stage
-    # fewer (8 vs 9) and cold-JVM cpu drops 36.2 → 33.0 cpu-s (min-of-3
-    # walls 7.01 → 6.26 s); at corpus scale the planner picks SMJ here
-    # anyway.  SPARK_GRAFT_MINHASH_MERGE_HINT=0 disables (the A/B
-    # lever; evidence in adjudicate_minhash_r15.json).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_MINHASH_MERGE_HINT", "1") != "0":
-        b = b.hint("merge")
+    # merge hint: both sides are the same gram pipeline ending in the
+    # df_cap window's (gram) exchange, so forcing a sort-merge join lets
+    # the b side reuse that exchange instead of planning a second one.
+    # The executed plan runs one query stage fewer and uses less CPU than
+    # without the hint (evidence: adjudicate_minhash_r15.json); at corpus
+    # scale the planner picks SMJ here anyway.
+    b = b.hint("merge")
     cand_grams = (
         a.join(b, "gram")
         .where(F.col("id_a") < F.col("id_b"))
@@ -314,9 +309,11 @@ def minhash_banded(sig: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
     )
 
 
-def cap_buckets(banded: DataFrame, bucket_cap: int | None) -> DataFrame:
-    """Drop LSH buckets with more than ``bucket_cap`` member ids — the
-    ``df_cap`` valve transferred to banded candidate joins.
+def counted_buckets(banded: DataFrame, bucket_cap: int | None) -> DataFrame:
+    """Drop LSH buckets with more than ``bucket_cap`` member ids (None
+    keeps every bucket) — the ``df_cap`` valve transferred to banded
+    candidate joins — keeping each row's bucket size as ``_bn`` so
+    downstream hot-id estimation can reuse it instead of re-aggregating.
 
     A bucket over the cap means the signature slice failed to spread the
     corpus (empty/boilerplate docs collapsing to one slice) — its pairs
@@ -331,31 +328,20 @@ def cap_buckets(banded: DataFrame, bucket_cap: int | None) -> DataFrame:
     subtree and the valve costs a per-partition count instead of a second
     shuffle branch.
 
-    Valve-spelling bake-off (sf0.1, min-of-3, identical outputs — the r4
-    verdict asked for the +8-12%-vs-unvalved cost to be recovered or
-    named):  window (this) 3.27s / 2.49s (minhash / simhash);
-    aggregate+semi-join 4.12s (the aggregate's partial stage below the
-    exchange breaks subtree reuse, so the whole signature pipeline runs
-    twice); grouped collect_list arrays with map-side pair generation
-    3.06s / 2.47s.  The array spelling's 1-6% win is rejected on scale
-    grounds: collect_list materializes each bucket's FULL member array in
-    the aggregation buffer before the cap filter can drop it — a
-    degenerate mega-bucket (10⁹ empty docs) is an unspillable multi-GB
-    array in one task, while the window's sort spills to disk and counts
-    streaming.  The window's residual cost is one sort over (band, key)
-    per join side above a ReusedExchange (verified in the AQE final
-    plan), which is the price of the only spelling that is both
-    single-subtree and spill-safe.
+    Valve-spelling bake-off (sf0.1, min-of-3, identical outputs):
+    window (this) 3.27s / 2.49s (minhash / simhash); aggregate+semi-join
+    4.12s (the aggregate's partial stage below the exchange breaks
+    subtree reuse, so the whole signature pipeline runs twice); grouped
+    collect_list arrays with map-side pair generation 3.06s / 2.47s.  The
+    array spelling's 1-6% win is rejected on scale grounds: collect_list
+    materializes each bucket's FULL member array in the aggregation
+    buffer before the cap filter can drop it — a degenerate mega-bucket
+    (10⁹ empty docs) is an unspillable multi-GB array in one task, while
+    the window's sort spills to disk and counts streaming.  The window's
+    residual cost is one sort over (band, key) per join side above a
+    ReusedExchange (verified in the AQE final plan), which is the price
+    of the only spelling that is both single-subtree and spill-safe.
     """
-    if bucket_cap is None:
-        return banded
-    return counted_buckets(banded, bucket_cap).drop("_bn")
-
-
-def counted_buckets(banded: DataFrame, bucket_cap: int | None) -> DataFrame:
-    """:func:`cap_buckets` keeping the bucket size as ``_bn`` — the same
-    valve window, with its per-row count left in place so downstream hot-id
-    estimation can reuse it instead of re-aggregating."""
     w = Window.partitionBy("band", "key")
     counted = banded.withColumn("_bn", F.count(F.lit(1)).over(w))
     if bucket_cap is not None:
@@ -426,22 +412,15 @@ def minhash_lsh_pairs(
     banded = minhash_banded(sig, bands)
     counted = counted_buckets(banded, bucket_cap)
     banded = counted.drop("_bn")
-    # NO merge hint here (r15 adjudication of the r14 hint, verdict #2):
-    # the r14 rationale claimed forcing SMJ would let the b-side read a
-    # ReusedExchange of the valve window's (band, key) shuffle.  The
-    # executed (isFinalPlan=true) plans show NO stage reuse either way
-    # (13 query stages with and without the hint — the hot-estimate
-    # branch between the window and the join changes the b-side subtree,
-    # so the exchanges never canonicalize equal), and the cold-JVM A/B
-    # under the driver bench's protocol (fresh JVM, probe, min of 3,
-    # noop sink; tools/adjudicate_minhash_hint.py) measured the hint at
-    # 5.81 s vs 4.11 s without — the r14 driver regression reproduced.
-    # At corpus scale the planner picks SMJ by size anyway, so dropping
-    # the hint costs nothing at 100 TB and wins at every measured SF
-    # (committed evidence: adjudicate_minhash_r15.json, plans/r15/
-    # dedup_minhash_lsh_executed_*.txt).  Contrast ngram_jaccard_pairs,
-    # where the same hint KEEPS a measured win — its two sides really do
-    # share one canonical subtree.
+    # NO merge hint here, unlike ngram_jaccard_pairs: the hot-estimate
+    # branch between the valve window and this join changes the b-side
+    # subtree, so the two (band, key) exchanges never canonicalize equal
+    # and forcing SMJ reuses nothing.  The executed plans run the same
+    # number of query stages with and without the hint, and the hinted
+    # plan measured slower in a cold-JVM A/B (evidence:
+    # adjudicate_minhash_r15.json, plans/r15/
+    # dedup_minhash_lsh_executed_*.txt).  At corpus scale the planner
+    # picks SMJ by size anyway, so the hint buys nothing there either.
     cands = (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "key"])
@@ -667,14 +646,6 @@ def simhash_neardup_pairs(
         .where((F.col("id_a") < F.col("id_b")) & (ham <= max_hamming))
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", ham.cast("bigint").alias("hamming"))
-    )
-
-
-# ---- kept for array-shaped callers (api/tests); row path above is the hot one
-def gram_sets(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    grams = F.array_distinct(hashing.word_ngrams(TX.tokenize(F.col(text_col)), NGRAM_N))
-    return docs.select(F.col(id_col).alias("id"), grams.alias("grams")).withColumn(
-        "n_grams", F.size("grams")
     )
 
 

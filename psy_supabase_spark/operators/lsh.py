@@ -312,7 +312,7 @@ def srp_topk(
        cosine, which is where top-k neighbors live);
     2. candidates = (query, corpus row) sharing ≥1 band — an ids-only
        equi-join with the query side BROADCAST (queries ≪ corpus by
-       contract, the `knn_join` shape) and the `cap_buckets` valve on
+       contract, the `knn_join` shape) and the `counted_buckets` valve on
        the corpus side;
     3. exact cosine over candidates only (kernel auto-picked by width,
        like the near-dup verify), then the salted two-phase per-query
@@ -578,7 +578,7 @@ def srp_neardup_pairs(
     precomputed per vector), so output ⊆ exact output always.
 
     ``bucket_cap`` (None disables): drop (band, key) buckets with more
-    members — see :func:`.dedup.cap_buckets` for the quadratic-reducer
+    members — see :func:`.dedup.counted_buckets` for the quadratic-reducer
     rationale.  Zero/degenerate embeddings all signature to the same
     slice, so at corpus scale the valve is load-bearing, not theoretical.
 

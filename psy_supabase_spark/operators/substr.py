@@ -97,7 +97,7 @@ def duplicated_window_rows(
     # anyway — measured 4.29 s → 1.92 s at sf0.1/L=20, row-identical.
     # Skew: a gram duplicated 10⁹ times already routed all its
     # occurrences to one reducer in the join spelling; the window sorts
-    # and spills the same group (the cap_buckets trade, documented
+    # and spills the same group (the counted_buckets trade, documented
     # there).  Same treatment for the phase-2 string-verify count.
     wh = Window.partitionBy("gh")
     cand = (

@@ -184,8 +184,7 @@ def text_profile(
 def fingerprint(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Deterministic document fingerprint: md5-based 32-bit hash of the
     cleaned text (engine-portable AND codegen'd, functions/hashing
-    .md5_hash32; the per-character polynomial fold is kept in
-    functions/hashing.poly_hash for order-sensitive rolling use cases)."""
+    .md5_hash32)."""
     return docs.select(
         id_col,
         hashing.md5_hash32(TX.clean_text(F.col(text_col))).alias("fingerprint"),

@@ -62,7 +62,6 @@ _EXACT_JACCARD_SQL = f"""
     SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.5
 """
 
-from ..functions.hashing import POLY_MOD  # noqa: E402  (minhash affine modulus)
 from ..operators import dedup, ivf, lsh  # noqa: E402
 from ..registry import register  # noqa: E402
 from ..sources.catalog import load_table  # noqa: E402
@@ -142,14 +141,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle is the exact answer: with near-identical planted dups
     (j ≥ 0.9) per-pair detection probability is 1-(1-0.81)^8 ≈ 0.9999998."""
     return dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), 0.5)
-
-
-def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash per document over gram poly-hashes — bit-identical
-    integer math in both engines.  Unregistered since the registry
-    consolidation: `simhash_neardup` computes these fingerprints as its
-    first stage and stays oracle-gated; kept for tests."""
-    return dedup.simhash(load_table(spark, sf_dir, "documents"))
 
 
 @register(

@@ -8,11 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import text as TX
 from ..registry import register
 from ..sources.catalog import load_table, register_views
-
-from ..functions.text import KEEP_WORDS  # keep-words parity (keep_words.py:16-19)
 
 
 @register(
@@ -70,22 +67,6 @@ def event_user_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_list(items: list[str]) -> str:
     return "[" + ", ".join("'" + s.replace("'", "''") + "'" for s in items) + "]"
-
-
-def tokens_stopstripped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T3 (cheap approximation of the reference's spaCy lemma+stop strip,
-    utilities/text_utils.py:51-75): tokenize, drop stopwords EXCEPT the
-    keep-words list (utilities/keep_words.py) — the reference's signature
-    quirk, preserved.  The spaCy lemmatizer itself is a pandas-UDF
-    extension point (gated import, not in this container).
-    Unregistered since the registry consolidation: the same n_kept
-    expression is driver-gated inside `text_profile`; kept for tests."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = TX.tokenize(F.col("text"))
-    sw = F.array(*[F.lit(w) for w in TX.STOPWORDS])
-    keep = F.array(*[F.lit(w) for w in KEEP_WORDS])
-    kept = F.filter(toks, lambda t: ~F.array_contains(sw, t) | F.array_contains(keep, t))
-    return docs.select("doc_id", F.size(kept).cast("bigint").alias("n_kept"))
 
 
 @register(

@@ -172,18 +172,6 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_type_rollup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP grouping sets (per-type + grand total) — new surface vs the
-    reference (SURVEY.md §2.4 notes it had none).  Unregistered since the
-    registry consolidation: ROLLUP ⊂ CUBE and `events_cube` gates the
-    same Expand machinery (plus distinct/decimal aggs); kept for tests."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.rollup("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(_dec("value")).cast("double").alias("total_value"),
-    )
-
-
 @register(
     "event_type_pivot_per_user",
     oracle="""
@@ -203,16 +191,6 @@ def event_type_pivot_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     piv = ev.groupBy("user_id").pivot("event_type", EVENT_TYPES).agg(F.count(F.lit(1)))
     return piv.select(
         "user_id", *[F.coalesce(F.col(t), F.lit(0)).cast("long").alias(t) for t in EVENT_TYPES]
-    )
-
-
-def distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregate (expand + two-phase agg under the hood).
-    Unregistered since the registry consolidation: the distinct-count
-    path is driver-gated inside `events_cube`; kept for tests."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"), F.count("*").alias("n_events")
     )
 
 
@@ -353,9 +331,9 @@ def large_orders_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets over (event_type, user bucket) — all four
     grouping combinations in one pass, carrying the distinct-user count
-    (expand + two-phase agg) and the decimal-exact value total; absorbs
-    the consolidated `events_type_rollup_totals` / `distinct_users_by_type`
-    registry slots."""
+    (expand + two-phase agg) and the decimal-exact value total, so it
+    also covers the per-type rollup and the distinct-users-by-type
+    aggregate."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(

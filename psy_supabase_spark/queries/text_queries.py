@@ -265,16 +265,6 @@ def topic_classify_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textanalysis.classify_topics_native(docs)
 
 
-def length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: response-length buckets (reference prompt_selector.py:320-330).
-    Unregistered since the registry consolidation: the same bucket
-    expression is driver-gated inside `text_profile`; kept for tests."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy(TX.length_bucket("text").alias("length_bucket")).agg(
-        F.count("*").alias("n_docs")
-    )
-
-
 # Gopher/C4 gate mirror (functions/quality.py, same thresholds as the
 # query's overrides: min_words=25, min_stopword_hits=1, rest defaults).
 # gw/nw/no_uni come from the `gates` CTE below.

@@ -199,81 +199,15 @@ STAGE_ORDER = [
 ]
 
 
-# Size gate for the materialize-once docs intermediate (r15, verdict
-# #1).  The composed DAG's ~6 branches re-derive the documents scan ~19
-# times at runtime (r14 executed-plan census); the r14 verdict asked for
-# a gated spill of docs to scratch parquet so large inputs pay 1 write +
-# 19 cheap scans.  The r15 pricing (tools/scale_step.py `tp` family,
-# committed in SCALE_STEP_EXTRA.json: direct vs materialized at
-# 1×/3×/10×/30× the sf0.1 corpus, row-identity cross-checked at every
-# factor) found the materialized path LOSES at every measurable factor
-# (x1 +4.6%, x3 +10.3%, x10 +9.5%, x30 see sidecar) — and first
-# principles say it cannot win on I/O arithmetic: the spill materializes
-# the RAW SCAN itself, so every branch re-reads the same bytes either
-# way and the write is pure overhead; the narrow-scan parallelism
-# motivation also evaporates exactly where spill cost matters (a >128 MB
-# parquet input already splits into wide scan tasks).  A materialized
-# intermediate only wins when it embeds shared DERIVED work (e.g. a
-# tokenized relation — future work, see OPTIMIZATION_r15.md "Not yet
-# optimized").  So the DEFAULT keeps the spill OFF at any input size;
-# the machinery stays as an explicit operator opt-in
-# (SPARK_GRAFT_TP_MAT_MIN_BYTES=<bytes>; 0 forces the spill on — the
-# A/B lever) for I/O regimes a local box cannot reproduce (e.g. remote
-# object-store scans with fast local scratch).
-_MAT_MIN_BYTES_DEFAULT = 1 << 60
-
-
-def _tp_mat_min_bytes() -> int:
-    import os
-
-    return int(
-        os.environ.get("SPARK_GRAFT_TP_MAT_MIN_BYTES", _MAT_MIN_BYTES_DEFAULT)
-    )
-
-
-def _docs_scan_bytes(docs: DataFrame) -> int:
-    """Catalyst's own size estimate for the scan — the file index's byte
-    total, one driver-side call (no per-file RPC fan-out at scale)."""
-    return int(docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def _materialize_docs(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Spill ``docs`` once to scratch parquet at cluster-width layout and
-    return the read-back — the fault-tolerant shared input every branch
-    scans (the `operators.robots.resolve_sitemap_index` spill pattern:
-    parquet, not ``persist``/``localCheckpoint``, so the intermediate
-    survives executor loss and nothing stays pinned in storage memory).
-    The path is keyed on the Spark applicationId: repeated calls in one
-    session overwrite one directory (bounded scratch growth), and a new
-    session can never read a previous session's spill — every run
-    recomputes from the source parquet (no cross-run caching).  Scratch
-    base is the session checkpoint dir when set (the cluster-correct
-    shared location), else the driver-local temp dir (local mode)."""
-    import tempfile
-
-    sc = spark.sparkContext
-    ckpt = sc.getCheckpointDir()
-    base = ckpt.rstrip("/") if ckpt else tempfile.gettempdir()
-    path = f"{base}/tp_docs_spill_{sc.applicationId}"
-    docs.repartition(sc.defaultParallelism).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 def build_prefix(spark: SparkSession, sf_dir: str, upto: str = "reshape") -> DataFrame:
     """The training_pipeline DAG truncated after stage ``upto`` (a name
     from :data:`STAGE_ORDER`).  ``training_pipeline`` itself is
     ``build_prefix(..., "reshape")``, so the registered query and the
     per-stage bench prefixes can never drift apart.  Eager driver-side
-    work (the LM model's train-time count scalar, and — above the size
-    gate — the materialize-once docs spill) only happens when its stage
-    is included, so prefix timings charge it where it belongs."""
+    work (the LM model's train-time count scalar) only happens when its
+    stage is included, so prefix timings charge it where it belongs."""
     k = STAGE_ORDER.index(upto)
     docs = load_table(spark, sf_dir, "documents")
-    if k >= 2 and _docs_scan_bytes(docs) >= _tp_mat_min_bytes():
-        # k >= 2 is where the DAG starts fanning out over docs (near-dup
-        # + decontam + LM + span branches); a 0/1-stage prefix scans docs
-        # at most twice and the spill could only lose
-        docs = _materialize_docs(spark, docs)
     out = docs
 
     if k >= 1:

@@ -10,7 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import vector as V
 from ..operators import topk
 from ..registry import register
 from ..sources.catalog import load_table
@@ -72,19 +71,6 @@ def vector_topk_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference query.txt:186-205)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return topk.topk_distance(emb, _query_vec(spark, sf_dir), k=TOPK)
-
-
-def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4: per-row L2 norm + dimension (reference rag_processor.py:57).
-    Precomputed at ingest in the engine to halve query-time cosine cost.
-    Unregistered since the registry consolidation: the same columns are
-    driver-gated inside `embedding_codec_roundtrip`; kept for tests."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id",
-        V.round6(V.l2_norm("embedding")).alias("l2_norm"),
-        F.size("embedding").cast("bigint").alias("dim"),
-    )
 
 
 @register(

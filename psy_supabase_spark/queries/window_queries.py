@@ -121,17 +121,3 @@ def sessionize_gap30m(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
     )
-
-
-def recency_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O2/S3 ordered recency top-k (reference query.txt:155-156) — plans
-    as TakeOrderedAndProject (per-partition heap, k-row merge).
-    Unregistered since the registry consolidation: the identical plan
-    shape is driver-gated via `json_filter_recency_topk` and
-    `top_orders_by_revenue`; kept for tests/benchmarks."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-        .orderBy(F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
-        .limit(10)
-    )

@@ -2,20 +2,16 @@
 
 The reference declares two DDL tables per tenant (`query.txt:68-85` in the
 reference repo): ``interactions`` (conversation log, JSONB metadata) and
-``knowledge_base`` (content + `vector(1536)` embedding).  We re-express them
-as single multi-tenant tables with a ``user_id`` column (partition column at
-scale — partition pruning replaces schema-per-user isolation,
-`database.py:24` in the reference).
-
-Embedding dim is parameterized (the reference's DDL says 1536 but its model
-actually emits hidden-size vectors, `text_generator.py:314-316`).
+``knowledge_base`` (content + `vector(1536)` embedding).  We re-express
+``interactions`` as a single multi-tenant table with a ``user_id`` column
+(partition column at scale — partition pruning replaces schema-per-user
+isolation, `database.py:24` in the reference); the tenant store's own
+scan schemas for both tables live in ``sources.tenancy.TABLE_SCHEMAS``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-EMBEDDING_DIM_DEFAULT = 1536
 
 # Reference `interactions` (query.txt:68-76) + tenancy column.
 INTERACTIONS_SCHEMA = T.StructType(
@@ -55,21 +51,6 @@ METADATA_STRUCT = T.StructType(
         T.StructField("severity", T.StringType(), True),
     ]
 )
-
-
-def knowledge_base_schema(dim: int = EMBEDDING_DIM_DEFAULT) -> T.StructType:
-    """Reference `knowledge_base` (query.txt:79-85) with a native array
-    embedding column — no `"[0.1,...]"` string round-trip (the reference
-    serializes vectors to text, database.py:394-399; native arrays make the
-    codec disappear and keep cosine math JVM-side)."""
-    return T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("user_id", T.StringType(), False),
-            T.StructField("content", T.StringType(), True),
-            T.StructField("embedding", T.ArrayType(T.FloatType(), containsNull=False), True),
-        ]
-    )
 
 
 # ---- driver testdata tables (TESTDATA.md) ----

@@ -216,15 +216,13 @@ class TenantStore:
         Postgres absorbs in heap pages but a parquet lake turns into
         thousands of KB-sized files whose open/footer cost comes to
         dominate scan time (the classic small-file problem; on
-        Delta/Iceberg this is OPTIMIZE / rewrite_data_files).  The
-        generic `operators.scale.compact_partitions` is NOT usable
-        here: it rewrites the table flat, destroying the ``user_id=``
-        partition layout this store's pruning depends on.
-
-        Compacts each tenant partition IN PLACE: read the partition
-        dir (merged footers — legacy and stamped files coexist),
-        rewrite to ``ceil(rows / target_rows_per_file)`` files in a
-        dot-prefixed sibling dir (parquet readers ignore hidden dirs,
+        Delta/Iceberg this is OPTIMIZE / rewrite_data_files).  A flat
+        whole-table rewrite would destroy the ``user_id=`` partition
+        layout this store's pruning depends on, so this compacts each
+        tenant partition IN PLACE: read the partition dir (merged
+        footers — legacy and stamped files coexist), rewrite to
+        ``ceil(rows / target_rows_per_file)`` files in a dot-prefixed
+        sibling dir (parquet readers ignore hidden dirs,
         so a concurrent scan keeps seeing the old files until the
         swap), then delete-and-rename through the path's own Hadoop
         filesystem (cluster-correct: works on s3a://, hdfs://, not

@@ -437,7 +437,7 @@ class StreamingEmbeddingNearDupFilter:
     oversized buckets (its band join is provably lossless and must stay
     so); SRP banding is probabilistic already, so oversized index
     buckets are DROPPED from the candidate join — the batch operator's
-    `cap_buckets` argument verbatim (a bucket that deep carries no
+    `counted_buckets` argument verbatim (a bucket that deep carries no
     discriminating signal); precision stays 1.0 because every emitted
     rejection is exact-verified.
 

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from psy_supabase_spark.operators import dedup, ivf, lsh, topk
+from psy_supabase_spark.plans.explain import physical_plan
 from psy_supabase_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -52,6 +53,16 @@ def test_df_cap_keeps_high_jaccard_pairs(spark):
     capped = {(r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(table, 0.9, df_cap=50).collect()}
     # capping drops undistinguishing grams; near-identical pairs must survive
     assert exact <= capped or exact == capped
+
+
+def test_ngram_jaccard_keeps_merge_hint(spark):
+    # the ngram candidate self-join is hinted to sort-merge so its b side
+    # reuses the df_cap window's (gram) exchange; at sf0.001 the planner
+    # would otherwise broadcast it, so the one SortMergeJoin in the plan
+    # is the hint's (the later size joins stay broadcast)
+    table = load_table(spark, SF, "documents")
+    plan = physical_plan(dedup.ngram_jaccard_pairs(table, 0.5))
+    assert plan.count("SortMergeJoin") == 1
 
 
 def test_ngram_df_cap_audit_accounts_for_dropped_grams(spark):

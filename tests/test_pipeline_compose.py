@@ -113,23 +113,3 @@ def test_training_pipeline_prefix_contract(spark):
     full = TP.training_pipeline(spark, SF)
     assert {r[0] for r in full.select("doc_id").collect()} == ids_by_stage[-1]
     assert full.columns == TP.build_prefix(spark, SF, "reshape").columns
-
-
-def test_training_pipeline_materialize_gate_row_identical(spark, monkeypatch):
-    """r15: build_prefix carries a materialize-once docs spill behind an
-    input-size gate whose DEFAULT keeps it OFF at any size (the r15
-    pricing found no winning regime locally — see training_pipeline.py
-    and OPTIMIZATION_r15.md §1); SPARK_GRAFT_TP_MAT_MIN_BYTES=0 is the
-    operator opt-in.  Pin that the forced-on spill path is ROW-IDENTICAL
-    to the direct path on the full composed query, and that the default
-    gate stays off (the bench keeps its r14 shape)."""
-    from psy_supabase_spark.queries import training_pipeline as TP
-
-    docs = load_table(spark, SF, "documents")
-    assert TP._docs_scan_bytes(docs) < TP._MAT_MIN_BYTES_DEFAULT
-
-    direct = TP.build_prefix(spark, SF, "reshape").collect()
-    monkeypatch.setenv("SPARK_GRAFT_TP_MAT_MIN_BYTES", "0")
-    spilled = TP.build_prefix(spark, SF, "reshape").collect()
-    key = lambda r: r["doc_id"]  # noqa: E731
-    assert sorted(direct, key=key) == sorted(spilled, key=key)

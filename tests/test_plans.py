@@ -71,13 +71,6 @@ def test_topic_classify_join_twin_plan_and_rows(spark):
     assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, native.collect()))
 
 
-def test_recency_topk_plan(spark):
-    # unregistered helper keeps its heap-based plan shape
-    from psy_supabase_spark.queries.window_queries import recency_topk_orders
-
-    assert_plan_contains(recency_topk_orders(spark, SF), "TakeOrderedAndProject")
-
-
 def test_scan_prunes_columns(spark):
     # 2-column projection must not read all 11 lineitem columns
     df = QUERIES["top_orders_by_revenue"](spark, SF)
@@ -119,7 +112,7 @@ def test_gram_rows_single_exchange(spark):
 
 
 def test_valved_lsh_reuses_band_exchange(spark):
-    # the cap_buckets window must ride the same (band, key) exchange the
+    # the counted_buckets window must ride the same (band, key) exchange the
     # candidate self-join needs: one shuffle subtree, reused on the other
     # join side — not a second aggregate branch
     from psy_supabase_spark.operators import dedup

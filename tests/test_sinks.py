@@ -8,7 +8,6 @@ import os
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from psy_supabase_spark.operators import scale
 from psy_supabase_spark.streaming import ingest
 
 
@@ -113,20 +112,6 @@ def test_rate_stream_demo_schema_and_rows(spark):
     for r in rows:
         assert r.event_type in {"click", "view", "purchase", "signup", "error"}
         assert r.user_id == r.event_id % 50
-
-
-def test_compact_partitions(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    df = spark.range(0, 10_000).select(
-        F.col("id"), (F.col("id") % 7).alias("k")
-    )
-    df.repartition(64).write.parquet(path)  # 64 small files
-    before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    after = scale.compact_partitions(spark, path, target_rows_per_file=5_000)
-    assert before == 64 and after == 2
-    got = spark.read.parquet(path)
-    assert got.count() == 10_000
-    assert got.agg(F.sum("id")).head()[0] == sum(range(10_000))
 
 
 def test_upsert_replay_recovers_mid_swap_crash(spark, tmp_path):

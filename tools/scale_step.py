@@ -54,7 +54,7 @@ WIDE_MODES_PER_X = 1_000
 # SPARK_GRAFT_FAMILIES=docs,srp,ivf,wide,analytics — default all.
 ALL_FAMILIES = (
     "docs", "srp", "ivf", "wide", "analytics", "warc", "cdx", "linkgraph",
-    "frontier", "hll", "compact", "tp", "stream",
+    "frontier", "hll", "compact", "stream",
 )
 FAMILIES = frozenset(
     os.environ.get("SPARK_GRAFT_FAMILIES", ",".join(ALL_FAMILIES)).split(",")
@@ -512,69 +512,6 @@ def main() -> None:
             fam["compact_sec"] = round(time.time() - t0, 2)
             fam["compact_scan_after_sec"] = round(_scan_wall(), 2)
             shutil.rmtree(wh, ignore_errors=True)
-
-        if "tp" in FAMILIES:
-            # training_pipeline materialize-once gate (r15, verdict #1):
-            # price the direct vs the forced-spill path at each factor —
-            # the env override is the A/B lever (1<<60 forces direct, 0
-            # forces the spill) — so the gate's default is a committed
-            # measurement, not an assertion.  Outcome (r15): the spill
-            # LOSES at every measured factor (it re-materializes the raw
-            # scan, saving nothing per branch), so the default threshold
-            # keeps it OFF; this family remains the re-runnable curve.
-            # Also check row-identity of the two paths at this factor
-            # (md5-of-row hash), since the default gate never trips.
-            import shutil as _sh
-
-            from psy_supabase_spark.queries import training_pipeline as TP
-
-            tp_dir = tempfile.mkdtemp(prefix=f"scale_tp{fx}_")
-            scaled_documents(base_docs, fx).write.parquet(
-                tp_dir + "/documents.parquet"
-            )
-            fam["tp_docs_bytes"] = sum(
-                f.stat().st_size
-                for f in Path(tp_dir + "/documents.parquet").glob("*.parquet")
-            )
-            saved_env = os.environ.get("SPARK_GRAFT_TP_MAT_MIN_BYTES")
-            hashes = {}
-            for label, env in (("direct", str(1 << 60)), ("materialized", "0")):
-                os.environ["SPARK_GRAFT_TP_MAT_MIN_BYTES"] = env
-                best = None
-                for _ in range(2):
-                    t0 = time.time()
-                    TP.build_prefix(spark, tp_dir, "reshape").write.mode(
-                        "overwrite"
-                    ).format("noop").save()
-                    dt = time.time() - t0
-                    best = dt if best is None else min(best, dt)
-                fam[f"tp_{label}_sec"] = round(best, 2)
-                df = TP.build_prefix(spark, tp_dir, "reshape")
-                hashes[label] = (
-                    df.select(
-                        F.md5(F.concat_ws("\x1f", *df.columns)).alias("h")
-                    )
-                    .agg(F.count("*").alias("n"), F.sum(F.crc32("h")).alias("s"))
-                    .collect()[0]
-                )
-            if saved_env is None:
-                os.environ.pop("SPARK_GRAFT_TP_MAT_MIN_BYTES", None)
-            else:
-                os.environ["SPARK_GRAFT_TP_MAT_MIN_BYTES"] = saved_env
-            fam["tp_rows_match"] = (
-                hashes["direct"]["n"] == hashes["materialized"]["n"]
-                and hashes["direct"]["s"] == hashes["materialized"]["s"]
-            )
-            # gate check with the gate's OWN estimator (Catalyst scan
-            # stats), not raw file bytes — they can disagree near the
-            # threshold
-            fam["tp_gate_default_trips"] = bool(
-                TP._docs_scan_bytes(
-                    spark.read.parquet(tp_dir + "/documents.parquet")
-                )
-                >= TP._MAT_MIN_BYTES_DEFAULT
-            )
-            _sh.rmtree(tp_dir, ignore_errors=True)
 
         if "stream" in FAMILIES:
             # streaming near-dup filters (r15, r14 verdict #7): the r14
