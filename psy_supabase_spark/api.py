@@ -23,6 +23,7 @@ from .functions import json_ops
 from .functions import text as TX
 from .operators import ivf as ivf_ops
 from .operators import ml_udfs, topk, windows
+from .sources.local import local_frame
 from .sources.tenancy import DEFAULT_TENANT, TenantStore, sanitize_tenant_id
 
 INTERACTIONS = "interactions"
@@ -53,8 +54,11 @@ class PsyEngine:
         and a STORED per-tenant interaction_id at insert time — the
         reference's SERIAL (query.txt:63, r13 verdict: assign-at-append
         keeps ids stable across later appends and makes the
-        build_context read path sort-free)."""
-        df = self.spark.createDataFrame(
+        build_context read path sort-free).  The one-row turn is a
+        local frame (`sources.local.local_frame`): the append's ordinal
+        probe, window and write then run no Python task."""
+        df = local_frame(
+            self.spark,
             [(context, question, answer, metadata)],
             "context string, question string, answer string, metadata string",
         )
@@ -128,38 +132,35 @@ class PsyEngine:
 
     @staticmethod
     def _head_dim(kb: DataFrame) -> int | None:
-        """One head probe for the embedding width (None = no non-null
-        vectors).  Facade calls are per-request, so the probe job is
-        acceptable here — never inside a registered query plan.  The
-        single spelling shared by every width-routed facade (r13
-        review: three inline copies carried two copies of the 256
-        threshold)."""
+        """Width of the first NON-NULL stored embedding (None = no non-null
+        vectors), at the cost of one head job whose filter may read past
+        the first row.  The batch facades probe with it once per batch;
+        the single-query path runs it only when :meth:`_probe_kb` finds a
+        NULL first vector.  Never inside a registered query plan."""
         head = kb.select(F.size("embedding").alias("d")).where(
             F.col("embedding").isNotNull()
         ).head()
         return None if head is None else int(head["d"])
 
     @classmethod
-    def _is_wide(cls, kb: DataFrame) -> bool:
-        d = cls._head_dim(kb)
-        return d is not None and d >= cls._GEMM_MIN_DIM
+    def _probe_kb(cls, kb: DataFrame) -> tuple[bool, int | None]:
+        """``(has rows, embedding width)`` from ONE head() of
+        ``size(embedding)`` over the scan, unfiltered: no row means an
+        empty knowledge base, a non-null width routes the query.  A
+        NULL first vector (``size`` gives NULL, or -1 with ANSI mode
+        off) falls back to :meth:`_head_dim`."""
+        head = kb.select(F.size("embedding").alias("d")).head()
+        if head is None:
+            return False, None
+        d = head["d"]
+        if d is None or d < 0:
+            return True, cls._head_dim(kb)
+        return True, int(d)
 
-    @staticmethod
-    def _single_query_gemm(kb: DataFrame, query_vec: Sequence[float], k: int) -> DataFrame:
-        """Single-query brute top-k through the batch GEMM kernel (a
-        1-row query frame; same rounding and (sim DESC, id ASC) ranking
-        as topk.topk_similarity — parity pinned in tests)."""
-        queries = kb.sparkSession.createDataFrame(
-            [(0, [float(x) for x in query_vec])],
-            "query_id long, query_embedding array<double>",
-        )
-        return (
-            topk.knn_join_gemm(
-                kb, queries, k=k, corpus_id="content", corpus_vec="embedding"
-            )
-            .orderBy("rank")
-            .drop("query_id", "rank")
-        )
+    @classmethod
+    def _is_wide(cls, dim: int | None) -> bool:
+        """The one spelling of the GEMM threshold test, for every route."""
+        return dim is not None and dim >= cls._GEMM_MIN_DIM
 
     def find_similar_documents(self, user_id: str, query_vec: Sequence[float], k: int = 5) -> DataFrame:
         """J1 server semantics: cosine DISTANCE ASC LIMIT k.  Uses the IVF
@@ -170,8 +171,11 @@ class PsyEngine:
             hits = ivf_ops.ivf_search(index, list(query_vec), k=k, id_col="content", vec_col="embedding")
             return hits.select("content", (F.lit(1.0) - F.col("similarity")).alias("distance"))
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
-        if self._is_wide(kb):
-            hits = self._single_query_gemm(kb, query_vec, k)
+        _, dim = self._probe_kb(kb)
+        if self._is_wide(dim):
+            hits = topk.topk_similarity_gemm(
+                kb, query_vec, k, dim=dim, id_col="content", embedding_col="embedding"
+            )
             return hits.select(
                 "content", (F.lit(1.0) - F.col("similarity")).alias("distance")
             )
@@ -181,12 +185,29 @@ class PsyEngine:
 
     def get_relevant_documents(self, user_id: str, query_vec: Sequence[float], k: int = 5) -> DataFrame:
         """J2 client semantics: cosine SIMILARITY DESC top-k, with the
-        reference's default-KB fallback (rag_processor.py:125-126)."""
+        reference's default-KB fallback (rag_processor.py:125-126).
+
+        Serving is bound by per-job latency, so the path is cut to the
+        scan, ONE probe and one top-k job.  The probe answers both "is
+        the tenant's KB empty?" and "how wide are its vectors?".  Wide
+        KBs hand the query vector to the GEMM scorer straight from the
+        driver: a query frame built from a Python list would cost a job
+        of ``defaultParallelism`` Python tasks, each with a worker
+        set-up far above its work, only to be collected back.  The
+        finish is one ordered limit (TakeOrderedAndProject), so the
+        scorer's tasks are the request's only Python tasks.  Same
+        rounding and (similarity DESC, content ASC) ranking as
+        :func:`topk.topk_similarity` on either route (parity pinned in
+        tests)."""
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
-        if kb.isEmpty():
+        found, dim = self._probe_kb(kb)
+        if not found:
             kb = self.store.scan(KNOWLEDGE_BASE, user_id=DEFAULT_TENANT)
-        if self._is_wide(kb):
-            return self._single_query_gemm(kb, query_vec, k).select("content", "similarity")
+            _, dim = self._probe_kb(kb)
+        if self._is_wide(dim):
+            return topk.topk_similarity_gemm(
+                kb, query_vec, k, dim=dim, id_col="content", embedding_col="embedding"
+            )
         return topk.topk_similarity(
             kb, list(query_vec), k=k, id_col="content", embedding_col="embedding"
         ).select("content", "similarity")
@@ -262,10 +283,14 @@ class PsyEngine:
         # KNN's per-pair fold is the narrow-dim winner (no Python
         # boundary); at the reference's real widths (1536/2048) the GEMM
         # twin wins by ~40× (SCALE.md §width validation).
-        join_fn = topk.knn_join_gemm if self._is_wide(kb) else topk.knn_join
-        return join_fn(kb, queries, k=k, corpus_id="content", corpus_vec="embedding").select(
-            "query_id", F.col("content"), "similarity", "rank"
-        )
+        d = self._head_dim(kb)
+        if self._is_wide(d):
+            hits = topk.knn_join_gemm(
+                kb, queries, k=k, corpus_id="content", corpus_vec="embedding", dim=d
+            )
+        else:
+            hits = topk.knn_join(kb, queries, k=k, corpus_id="content", corpus_vec="embedding")
+        return hits.select("query_id", F.col("content"), "similarity", "rank")
 
     # ---- pipeline scalars (reference safety_handler / prompt_selector) ----
 
@@ -1049,7 +1074,7 @@ class PsyEngine:
                 for c in sketch_cols
             ]
         )
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def plan_crawl_round(
         self,
@@ -1158,9 +1183,7 @@ class PsyEngine:
             .drop("allowed")
         )
         if delays is None:
-            delays = self.spark.createDataFrame(
-                [], "host string, crawl_delay double"
-            )
+            delays = local_frame(self.spark, [], "host string, crawl_delay double")
         return schedule_frontier(
             hosted,
             delays,

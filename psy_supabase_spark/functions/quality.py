@@ -35,7 +35,6 @@ def _c(col: ColumnOrName) -> Column:
 
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 _BULLET_RE = r"^\s*([-*•‣◦]|\d+[.)])\s"
-_TERMINAL_PUNCT = (".", "!", "?", '"', "'")
 
 
 def gopher_quality_flags(

@@ -649,21 +649,148 @@ class QueryBatchTooLarge(ValueError):
 
 
 def _collect_query_batch(
-    queries: DataFrame, query_id: str, query_vec: str, max_queries: int, dim: int | None
+    queries: DataFrame, query_id: str, query_vec: str, max_queries: int
 ):
     """Bounded driver fetch of the query batch (queries are the small side
-    by definition — same contract as the broadcast in ivf_search_batch);
-    drops NULL / wrong-dim vectors exactly as the scoring paths do."""
+    by definition — same contract as the broadcast in ivf_search_batch)."""
     qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
     if len(qrows) > max_queries:
         raise QueryBatchTooLarge(
             f"query batch exceeds max_queries={max_queries}; split the batch"
         )
+    return qrows
+
+
+def _gemm_scorer(index: IVFIndex, qrows, nprobe: int, query_id: str, qid_type: str, id_col: str):
+    """Driver half of GEMM scoring over driver-held ``qrows`` ((query id,
+    vector) pairs): drops NULL / wrong-dim vectors exactly as the
+    expression paths do, picks each query's probes in numpy — same
+    distances and tie-breaks as :func:`rank_centroids` (zero-norm → +inf,
+    ties on centroid id) — and returns ``(probe_ids, out_schema,
+    make_scorer)``.  ``make_scorer(vcol, keep)`` is the mapInPandas body:
+    one (batch × dim)·(dim × nq) GEMM per Arrow batch, each query masked
+    to ITS probe set, and only the per-batch top-``keep`` per query by
+    (similarity DESC, id ASC) emitted."""
+    import numpy as np
+    import pandas as pd
+
+    dim = len(index.centers[0]) if index.centers else None
     if dim is not None:
         qrows = [r for r in qrows if r[1] is not None and len(r[1]) == dim]
     if not qrows:
         raise ValueError("empty query batch")
-    return qrows
+    qids = [r[0] for r in qrows]
+    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    qn = np.linalg.norm(qmat, axis=1)
+    live = qn > 0  # zero-norm queries produce NULL sims → no results
+    qunit = np.where(live[:, None], qmat / np.where(qn == 0, 1.0, qn)[:, None], 0.0)
+
+    cmat = np.array(index.centers, dtype=np.float64)
+    cn = np.linalg.norm(cmat, axis=1)
+    with np.errstate(invalid="ignore"):
+        cd = 1.0 - (qunit @ (cmat / np.where(cn == 0, 1.0, cn)[:, None]).T)
+    cd[:, cn == 0] = np.inf
+    cd[~live, :] = np.inf
+    n_lists = len(index.centers)
+    # the probe mask ships DENSE in the task closure — a loud valve, not
+    # an OOM, when lists × queries explodes (auto-√N lists on a 10⁹-row
+    # corpus is ~32k lists; a 10k-query batch would be a 320 MB closure)
+    if n_lists * len(qids) > 64_000_000:
+        raise ValueError(
+            f"GEMM search: probe mask {n_lists} lists × "
+            f"{len(qids)} queries exceeds 64M cells; split the query batch"
+        )
+    mask = np.zeros((n_lists, len(qids)), dtype=bool)  # (centroid, query)
+    union: set[int] = set()
+    for qi in range(len(qids)):
+        if not live[qi]:
+            continue
+        order = np.lexsort((np.arange(n_lists), cd[qi]))[:nprobe]
+        mask[order, qi] = True
+        union.update(int(c) for c in order)
+    probe_ids = sorted(union)
+
+    id_field = index.assigned.schema[id_col]
+    out_schema = (
+        f"{query_id} {qid_type}, {id_field.name} {id_field.dataType.simpleString()}, "
+        "similarity double"
+    )
+    qids_arr = np.array(qids)
+
+    def make_scorer(vcol: str, keep: int):
+        def score(batches):
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                vals = pdf[vcol].tolist()
+                ok = np.fromiter(
+                    (v is not None and len(v) == dim for v in vals),
+                    dtype=bool,
+                    count=len(vals),
+                )
+                if not ok.any():
+                    continue
+                rows = np.flatnonzero(ok)
+                m = np.stack([np.asarray(vals[i], dtype=np.float64) for i in rows])
+                nrm = np.linalg.norm(m, axis=1)
+                nz = nrm > 0
+                rows = rows[nz]
+                if not len(rows):
+                    continue
+                u = m[nz] / nrm[nz][:, None]
+                sims = np.round(u @ qunit.T, 6)  # (B, nq)
+                cids = pdf["centroid_id"].to_numpy()[rows].astype(np.int64)
+                allowed = mask[cids, :] & live[None, :]  # (B, nq)
+                sims = np.where(allowed, sims, -np.inf)
+                ids = pdf[id_field.name].to_numpy()[rows]
+                id_order = np.argsort(ids, kind="stable")
+                out_q, out_i, out_s = [], [], []
+                for qi in range(len(qids_arr)):
+                    sq = sims[id_order, qi]
+                    top = id_order[np.argsort(-sq, kind="stable")[: min(keep, len(rows))]]
+                    good = sims[top, qi] > -np.inf
+                    top = top[good]
+                    out_q.extend([qids_arr[qi]] * len(top))
+                    out_i.extend(ids[top].tolist())
+                    out_s.extend(sims[top, qi].tolist())
+                if out_q:
+                    yield pd.DataFrame(
+                        {query_id: out_q, id_field.name: out_i, "similarity": out_s}
+                    )
+
+        return score
+
+    return probe_ids, out_schema, make_scorer
+
+
+def ivf_score_gemm(
+    index: IVFIndex,
+    qrows,
+    k: int,
+    nprobe: int = 4,
+    *,
+    query_id: str = "query_id",
+    query_id_type: str = "bigint",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """GEMM scoring of DRIVER-HELD query rows (``(query id, vector)``
+    pairs): the probe-union scan of ``index.assigned`` through one
+    mapInPandas, giving ``(query_id, id, similarity)`` rows, at most ``k``
+    per query per Arrow batch.  Every global top-k row survives its own
+    batch, so one more ordering by (similarity DESC, id ASC) finishes the
+    exact top-k: :func:`ivf_search_batch_gemm` ranks per query with a
+    window, while a single query needs only ``orderBy(...).limit(k)``
+    (TakeOrderedAndProject, one job, no shuffle).  A caller that already
+    holds its query vector passes it straight here instead of building a
+    query frame only for it to be collected back."""
+    probe_ids, out_schema, make_scorer = _gemm_scorer(
+        index, qrows, nprobe, query_id, query_id_type, id_col
+    )
+    pruned = index.assigned.where(F.col("centroid_id").isin(probe_ids)).select(
+        id_col, "centroid_id", vec_col
+    )
+    return pruned.mapInPandas(make_scorer(vec_col, k), schema=out_schema)
 
 
 def ivf_search_batch_gemm(
@@ -715,108 +842,26 @@ def ivf_search_batch_gemm(
     so raw ints score correctly), keeps ``k·rescore_factor`` per query,
     and re-scores survivors at full precision — the IVF-SQ8 ladder with
     both passes GEMM-shaped."""
-    import numpy as np
-    import pandas as pd
-
-    dim = len(index.centers[0]) if index.centers else None
-    qrows = _collect_query_batch(queries, query_id, query_vec, max_queries, dim)
-    qids = [r[0] for r in qrows]
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(qmat, axis=1)
-    live = qn > 0  # zero-norm queries produce NULL sims → no results
-    qunit = np.where(live[:, None], qmat / np.where(qn == 0, 1.0, qn)[:, None], 0.0)
-
-    cmat = np.array(index.centers, dtype=np.float64)
-    cn = np.linalg.norm(cmat, axis=1)
-    with np.errstate(invalid="ignore"):
-        cd = 1.0 - (qunit @ (cmat / np.where(cn == 0, 1.0, cn)[:, None]).T)
-    cd[:, cn == 0] = np.inf
-    cd[~live, :] = np.inf
-    n_lists = len(index.centers)
-    # the probe mask ships DENSE in the task closure — a loud valve, not
-    # an OOM, when lists × queries explodes (auto-√N lists on a 10⁹-row
-    # corpus is ~32k lists; a 10k-query batch would be a 320 MB closure)
-    if n_lists * len(qids) > 64_000_000:
-        raise ValueError(
-            f"ivf_search_batch_gemm: probe mask {n_lists} lists × "
-            f"{len(qids)} queries exceeds 64M cells; split the query batch"
-        )
-    mask = np.zeros((n_lists, len(qids)), dtype=bool)  # (centroid, query)
-    union: set[int] = set()
-    for qi in range(len(qids)):
-        if not live[qi]:
-            continue
-        order = np.lexsort((np.arange(n_lists), cd[qi]))[:nprobe]
-        mask[order, qi] = True
-        union.update(int(c) for c in order)
-    probe_ids = sorted(union)
-
-    qid_t = queries.schema[query_id].dataType.simpleString()
-    id_field = index.assigned.schema[id_col]
-    out_schema = (
-        f"{query_id} {qid_t}, {id_field.name} {id_field.dataType.simpleString()}, "
-        "similarity double"
-    )
-    qids_arr = np.array(qids)
-
-    def make_scorer(vcol: str, keep: int):
-        def score(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                vals = pdf[vcol].tolist()
-                ok = np.fromiter(
-                    (v is not None and len(v) == dim for v in vals),
-                    dtype=bool,
-                    count=len(vals),
-                )
-                if not ok.any():
-                    continue
-                rows = np.flatnonzero(ok)
-                m = np.stack([np.asarray(vals[i], dtype=np.float64) for i in rows])
-                nrm = np.linalg.norm(m, axis=1)
-                nz = nrm > 0
-                rows = rows[nz]
-                if not len(rows):
-                    continue
-                u = m[nz] / nrm[nz][:, None]
-                sims = np.round(u @ qunit.T, 6)  # (B, nq)
-                cids = pdf["centroid_id"].to_numpy()[rows].astype(np.int64)
-                allowed = mask[cids, :] & live[None, :]  # (B, nq)
-                sims = np.where(allowed, sims, -np.inf)
-                ids = pdf[id_field.name].to_numpy()[rows]
-                id_order = np.argsort(ids, kind="stable")
-                out_q, out_i, out_s = [], [], []
-                for qi in range(len(qids_arr)):
-                    sq = sims[id_order, qi]
-                    top = id_order[np.argsort(-sq, kind="stable")[: min(keep, len(rows))]]
-                    good = sims[top, qi] > -np.inf
-                    top = top[good]
-                    out_q.extend([qids_arr[qi]] * len(top))
-                    out_i.extend(ids[top].tolist())
-                    out_s.extend(sims[top, qi].tolist())
-                if out_q:
-                    yield pd.DataFrame(
-                        {query_id: out_q, id_field.name: out_i, "similarity": out_s}
-                    )
-
-        return score
-
     from pyspark.sql import Window
 
+    qrows = _collect_query_batch(queries, query_id, query_vec, max_queries)
+    qid_type = queries.schema[query_id].dataType.simpleString()
     w = Window.partitionBy(query_id).orderBy(
         F.col("similarity").desc(), F.col(id_col).asc()
     )
     if sq8_store is None:
-        pruned = index.assigned.where(F.col("centroid_id").isin(probe_ids)).select(
-            id_col, "centroid_id", vec_col
+        partial = ivf_score_gemm(
+            index, qrows, k, nprobe, query_id=query_id, query_id_type=qid_type,
+            id_col=id_col, vec_col=vec_col,
         )
-        partial = pruned.mapInPandas(make_scorer(vec_col, k), schema=out_schema)
         return partial.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
             F.col("rank") <= k
         )
 
     # SQ8 ladder: int8 coarse GEMM → top k·f per query → exact rescore
+    probe_ids, out_schema, make_scorer = _gemm_scorer(
+        index, qrows, nprobe, query_id, qid_type, id_col
+    )
     first_k = k * rescore_factor
     coarse_src = sq8_store.where(F.col("centroid_id").isin(probe_ids)).select(
         id_col, "centroid_id", F.col("_qs.q").alias("_qvals")

@@ -193,6 +193,49 @@ def neighbors_above(
     )
 
 
+def _single_list_index(corpus: DataFrame, corpus_id: str, corpus_vec: str, dim: int):
+    """Every corpus row under ONE synthetic centroid: a full-probe IVF GEMM
+    search over it degenerates to exact brute force."""
+    from . import ivf as ivf_ops
+
+    assigned = corpus.select(
+        F.col(corpus_id), F.col(corpus_vec), F.lit(0).cast("int").alias("centroid_id")
+    )
+    return ivf_ops.IVFIndex(centers=[[1.0] + [0.0] * (dim - 1)], assigned=assigned)
+
+
+def topk_similarity_gemm(
+    df: DataFrame,
+    query_vec: Sequence[float],
+    k: int,
+    *,
+    dim: int,
+    embedding_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """:func:`topk_similarity` through the GEMM kernel — the WIDE-dim
+    single-query spelling, same rounding and (similarity DESC, id ASC)
+    ranking, ``(id, similarity)`` out.  ``dim`` is the corpus width the
+    caller already probed.  The query vector goes straight to the scorer
+    from the driver (no query frame), and the finish is one ordered limit
+    over the per-batch survivors: TakeOrderedAndProject, one job."""
+    from . import ivf as ivf_ops
+
+    hits = ivf_ops.ivf_score_gemm(
+        _single_list_index(df, id_col, embedding_col, dim),
+        [(0, [float(x) for x in query_vec])],
+        k,
+        nprobe=1,
+        id_col=id_col,
+        vec_col=embedding_col,
+    )
+    return (
+        hits.orderBy(F.col("similarity").desc(), F.col(id_col).asc())
+        .limit(k)
+        .select(id_col, "similarity")
+    )
+
+
 def knn_join_gemm(
     corpus: DataFrame,
     queries: DataFrame,
@@ -203,6 +246,7 @@ def knn_join_gemm(
     query_id: str = "query_id",
     query_vec: str = "query_embedding",
     max_queries: int = 10_000,
+    dim: int | None = None,
 ) -> DataFrame:
     """Exact brute-force KNN join with Arrow/GEMM scoring — the WIDE-dim
     twin of :func:`knn_join` (whose per-pair HOF fold is the right trade
@@ -214,23 +258,20 @@ def knn_join_gemm(
     `ivf.ivf_search_batch_gemm` degenerates to exact brute force (one
     (batch × dim)·(dim × nq) GEMM per Arrow batch + map-side partial
     top-k).  Output matches :func:`knn_join` row-for-row (parity-pinned:
-    same rounding, same (similarity DESC, id ASC) ranking)."""
+    same rounding, same (similarity DESC, id ASC) ranking).  ``dim`` is
+    the corpus width when the caller has already probed it; otherwise
+    one head job reads it here."""
     from . import ivf as ivf_ops
 
-    head = corpus.select(F.size(corpus_vec).alias("d")).where(
-        F.col(corpus_vec).isNotNull()
-    ).head()
-    if head is None:
-        raise ValueError("knn_join_gemm: empty corpus")
-    dim = head["d"]
-    assigned = corpus.select(
-        F.col(corpus_id), F.col(corpus_vec), F.lit(0).cast("int").alias("centroid_id")
-    )
-    index = ivf_ops.IVFIndex(
-        centers=[[1.0] + [0.0] * (dim - 1)], assigned=assigned
-    )
+    if dim is None:
+        head = corpus.select(F.size(corpus_vec).alias("d")).where(
+            F.col(corpus_vec).isNotNull()
+        ).head()
+        if head is None:
+            raise ValueError("knn_join_gemm: empty corpus")
+        dim = head["d"]
     return ivf_ops.ivf_search_batch_gemm(
-        index,
+        _single_list_index(corpus, corpus_id, corpus_vec, dim),
         queries,
         k,
         nprobe=1,

@@ -18,9 +18,12 @@ from __future__ import annotations
 
 import os
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .local import local_frame
 
 DEFAULT_TENANT = "default"  # reference database.py:21-22
 
@@ -53,6 +56,30 @@ def sanitize_tenant_id(user_id: str) -> str:
     if not s or not s[0].isalpha():
         s = "u_" + s
     return s[:63]
+
+
+def _swap_in(fs, path, live: str, staged: str) -> None:
+    """Replace directory ``live`` by ``staged`` through the Hadoop
+    FileSystem ``fs`` (``path`` builds its Path arguments).  The old
+    directory is renamed aside, the new one renamed in, and the old one
+    deleted only once both renames succeeded.  ``FileSystem.rename``
+    reports failure by returning false, not by raising, so each result
+    is checked: a failed rename raises ``OSError`` with ``live`` holding
+    its original files (or, if even the restore fails, names where they
+    are).  The aside name is unique, so a rename never lands inside a
+    directory an earlier attempt left behind."""
+    head, _, name = live.rpartition("/")
+    aside = f"{head}/.compact_old_{name}_{uuid.uuid4().hex}"
+    if not fs.rename(path(live), path(aside)):
+        raise OSError(f"compact: could not move {live} aside; it is unchanged")
+    if not fs.rename(path(staged), path(live)):
+        if not fs.rename(path(aside), path(live)):
+            raise OSError(
+                f"compact: could not move {staged} to {live} nor restore "
+                f"the original files, which are in {aside}"
+            )
+        raise OSError(f"compact: could not move {staged} to {live}; original restored")
+    fs.delete(path(aside), True)
 
 
 class TenantStore:
@@ -184,7 +211,7 @@ class TenantStore:
             cond = get_cls() if get_cls is not None else None
             if not (cond == "PATH_NOT_FOUND" and table in TABLE_SCHEMAS):
                 raise
-            df = self.spark.createDataFrame([], TABLE_SCHEMAS[table])
+            df = local_frame(self.spark, [], TABLE_SCHEMAS[table])
         else:
             if table in TABLE_SCHEMAS:
                 from pyspark.sql.types import StructType
@@ -224,12 +251,14 @@ class TenantStore:
         ``ceil(rows / target_rows_per_file)`` files in a dot-prefixed
         sibling dir (parquet readers ignore hidden dirs,
         so a concurrent scan keeps seeing the old files until the
-        swap), then delete-and-rename through the path's own Hadoop
-        filesystem (cluster-correct: works on s3a://, hdfs://, not
-        just the driver's local disk).  The swap is NOT transactional
-        — parquet has no commit protocol; run under the store's
-        one-writer-per-tenant contract (Delta/Iceberg would make this
-        step ACID).  Row content, stored ordinals, and scan results
+        swap), then swap it in with :func:`_swap_in` through the path's
+        own Hadoop filesystem (cluster-correct: works on s3a://,
+        hdfs://, not just the driver's local disk).  The swap is NOT
+        transactional — parquet has no commit protocol, and a scan
+        between its two renames finds the partition absent; run under
+        the store's one-writer-per-tenant contract (Delta/Iceberg would
+        make this step ACID).  A failed rename raises with the original
+        files back in place.  Row content, stored ordinals, and scan results
         are byte-identical before/after (everything downstream orders
         by stored columns, never file position).  Returns the data
         file count across the compacted partitions."""
@@ -261,8 +290,7 @@ class TenantStore:
             n_files = max(1, math.ceil(n_rows / target_rows_per_file))
             tmp = f"{self._path(table)}/.compact_{part}"
             df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-            fs.delete(hpath(src), True)
-            fs.rename(hpath(tmp), hpath(src))
+            _swap_in(fs, hpath, src, tmp)
             total_files += sum(
                 1
                 for st in fs.listStatus(hpath(src))

@@ -48,6 +48,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .local import local_frame
+
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
 
@@ -221,7 +223,7 @@ class TxTable:
                 from pyspark.sql.types import StructType
 
                 schema = StructType.fromJson(json.loads(json.load(f)["schema"]))
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.parquet(*[os.path.join(self.root, f) for f in files])
 
     # ------------------------------------------------------------ cleanup

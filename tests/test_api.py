@@ -345,6 +345,105 @@ def test_single_query_wide_dim_routes_gemm(engine, spark):
     assert [(r.content, r.similarity) for r in sim] == want
 
 
+def _wide_rows(rng, names, dim=272):
+    return [(n, [float(x) for x in rng.standard_normal(dim)]) for n in names]
+
+
+def _topk_reference(kb, q, k):
+    from psy_supabase_spark.operators import topk as topk_ops
+
+    return [
+        (r.content, r.similarity)
+        for r in topk_ops.topk_similarity(
+            kb, q, k=k, id_col="content", embedding_col="embedding"
+        ).collect()
+    ]
+
+
+def test_single_query_wide_tie_straddles_k(spark, tmp_path):
+    """Three stored copies of one vector tie at rank 2..4 and k=3 cuts
+    through them: the GEMM route keeps the (similarity DESC, content ASC)
+    order of the expression top-k, with the tied copies written by
+    separate appends, so they reach the finish from different files."""
+    import numpy as np
+
+    rng = np.random.default_rng(21)
+    eng = PsyEngine(spark, str(tmp_path / "wh"))
+    q = [float(x) for x in rng.standard_normal(272)]
+    near = [float(x + 0.5 * y) for x, y in zip(q, rng.standard_normal(272))]
+    tie = [float(x + 0.9 * y) for x, y in zip(q, rng.standard_normal(272))]
+    ddl = "content string, embedding array<double>"
+    eng.add_documents("t", spark.createDataFrame([("best", near), ("tie c", tie)], ddl))
+    eng.add_documents("t", spark.createDataFrame([("tie a", tie)] + _wide_rows(rng, ["x1", "x2"]), ddl))
+    eng.add_documents("t", spark.createDataFrame([("tie b", tie)], ddl))
+    got = [(r.content, r.similarity) for r in eng.get_relevant_documents("t", q, k=3).collect()]
+    assert [c for c, _ in got] == ["best", "tie a", "tie b"]
+    assert got == _topk_reference(eng.store.scan("knowledge_base", user_id="t"), q, 3)
+
+
+def test_single_query_wide_null_first_row(spark, tmp_path):
+    """The scan's first stored row has a NULL embedding: the one-row width
+    probe sees no width and falls back to the filtered probe, and the
+    query still takes the GEMM route with the expression top-k's answer."""
+    import numpy as np
+
+    rng = np.random.default_rng(22)
+    eng = PsyEngine(spark, str(tmp_path / "wh"))
+    rows = [("a null", None)] + _wide_rows(rng, ["d1", "d2", "d3", "d4"])
+    kb = spark.createDataFrame(rows, "content string, embedding array<double>").coalesce(1)
+    eng.add_documents("n", kb)
+    stored = eng.store.scan("knowledge_base", user_id="n")
+    assert stored.head().embedding is None
+    q = rows[3][1]
+    got = [(r.content, r.similarity) for r in eng.get_relevant_documents("n", q, k=3).collect()]
+    assert got[0][0] == "d3"
+    assert got == _topk_reference(stored, q, 3)
+
+
+def test_single_query_wide_default_tenant_fallback(spark, tmp_path):
+    """A tenant without a knowledge base reads the default tenant's, on
+    the GEMM route, with the expression top-k's answer."""
+    import numpy as np
+
+    rng = np.random.default_rng(23)
+    eng = PsyEngine(spark, str(tmp_path / "wh"))
+    rows = _wide_rows(rng, [f"shared {i}" for i in range(6)])
+    eng.add_documents("default", spark.createDataFrame(rows, "content string, embedding array<double>"))
+    eng.add_documents("someone_else", spark.createDataFrame(_wide_rows(rng, ["private"]), "content string, embedding array<double>"))
+    q = [float(x) for x in rng.standard_normal(272)]
+    got = [(r.content, r.similarity) for r in eng.get_relevant_documents("nobody", q, k=4).collect()]
+    assert len(got) == 4 and all(c.startswith("shared") for c, _ in got)
+    assert got == _topk_reference(eng.store.scan("knowledge_base", user_id="default"), q, 4)
+
+
+def test_single_query_wide_job_count(spark, tmp_path):
+    """A wide single-query retrieval on a populated tenant runs at most
+    three jobs: the scan's footer merge, the one width probe and the
+    top-k (one TakeOrderedAndProject job)."""
+    import uuid
+
+    import numpy as np
+
+    rng = np.random.default_rng(24)
+    eng = PsyEngine(spark, str(tmp_path / "wh"))
+    ddl = "content string, embedding array<double>"
+    for i in range(3):
+        eng.add_documents("busy", spark.createDataFrame(_wide_rows(rng, [f"b{i}-{j}" for j in range(4)]), ddl))
+    q = [float(x) for x in rng.standard_normal(272)]
+    eng.get_relevant_documents("busy", q, k=3).collect()  # warm: first-use jobs
+    sc = spark.sparkContext
+    group = f"single-query-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "single-query job count")
+    try:
+        hits = eng.get_relevant_documents("busy", q, k=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(hits) == 3
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 3, sorted(jobs)
+
+
 def test_ingest_warc_wet_facades(engine, tmp_path):
     import gzip
 
@@ -1171,6 +1270,81 @@ def test_tenant_store_compact_mixed_warehouse(spark, tmp_path):
     assert {
         r.question: r.interactionID for r in eng.build_context("alice").collect()
     } == {"q1": 1, "q2": 2, "q3": 3}
+
+
+class _StandInFS:
+    """Python stand-in for the Hadoop FileSystem calls the compaction
+    swap makes, over a local directory; ``fail_renames`` lists the
+    1-based rename calls that report failure (return False) the way
+    ``FileSystem.rename`` does."""
+
+    def __init__(self, fail_renames=()):
+        self.fail = set(fail_renames)
+        self.renames = 0
+
+    def rename(self, src, dst):
+        import os
+
+        self.renames += 1
+        if self.renames in self.fail:
+            return False
+        os.rename(src, dst)
+        return True
+
+    def delete(self, path, recursive):
+        import shutil
+
+        shutil.rmtree(path)
+        return True
+
+
+def _swap_fixture(tmp_path):
+    live, staged = tmp_path / "user_id=a", tmp_path / ".compact_user_id=a"
+    live.mkdir()
+    staged.mkdir()
+    (live / "part-old-1.parquet").write_text("old 1")
+    (live / "part-old-2.parquet").write_text("old 2")
+    (staged / "part-new.parquet").write_text("new")
+    return str(live), str(staged)
+
+
+def test_compact_swap_replaces_partition(tmp_path):
+    import os
+
+    from psy_supabase_spark.sources.tenancy import _swap_in
+
+    live, staged = _swap_fixture(tmp_path)
+    _swap_in(_StandInFS(), str, live, staged)
+    assert sorted(os.listdir(live)) == ["part-new.parquet"]
+    assert sorted(os.listdir(tmp_path)) == ["user_id=a"]
+
+
+@pytest.mark.parametrize("failing_rename", [1, 2])
+def test_compact_swap_failed_rename_keeps_original(tmp_path, failing_rename):
+    """Moving the old partition aside (rename 1) or the compacted one in
+    (rename 2) fails: the swap raises, and the partition directory still
+    holds its original files."""
+    import os
+
+    from psy_supabase_spark.sources.tenancy import _swap_in
+
+    live, staged = _swap_fixture(tmp_path)
+    with pytest.raises(OSError, match="compact"):
+        _swap_in(_StandInFS([failing_rename]), str, live, staged)
+    assert sorted(os.listdir(live)) == ["part-old-1.parquet", "part-old-2.parquet"]
+    assert (tmp_path / "user_id=a" / "part-old-1.parquet").read_text() == "old 1"
+
+
+def test_compact_swap_failed_restore_names_the_files(tmp_path):
+    import os
+
+    from psy_supabase_spark.sources.tenancy import _swap_in
+
+    live, staged = _swap_fixture(tmp_path)
+    with pytest.raises(OSError, match="compact_old_") as err:
+        _swap_in(_StandInFS([2, 3]), str, live, staged)
+    aside = str(err.value).rsplit(" ", 1)[-1]
+    assert sorted(os.listdir(aside)) == ["part-old-1.parquet", "part-old-2.parquet"]
 
 
 def test_pack_for_training_chunks_oversized_docs(engine, spark):

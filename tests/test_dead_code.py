@@ -1,9 +1,12 @@
-"""Dead-code guard: every top-level function or class in the package must
-be referenced somewhere — by name, attribute or import — in the package,
-``tools/``, ``bench.py``, ``examples/``, ``perfbench/`` or ``tests/``.
-Decorated defs are skipped: a decorator (``@register``, ``@udf``, ...)
-is itself the reference that makes them reachable.  Mentions in
-docstrings and comments do not count.  Pure ``ast``; no Spark."""
+"""Dead-code guard: every top-level function, class or assigned name in
+the package must be referenced somewhere — by name, attribute or import —
+in the package, ``tools/``, ``bench.py``, ``examples/``, ``perfbench/`` or
+``tests/``.  Only reads count: a name that is only ever assigned (its own
+definition included) is unreferenced.  Decorated defs are skipped: a
+decorator (``@register``, ``@udf``, ...) is itself the reference that
+makes them reachable.  Dunder assignments (``__all__``, ...) are skipped.
+Mentions in docstrings and comments do not count.  Pure ``ast``; no
+Spark."""
 
 from __future__ import annotations
 
@@ -31,13 +34,31 @@ def _referenced_names() -> set[str]:
     names: set[str] = set()
     for path in _py_files([*SEARCHED, ROOT / "bench.py", ROOT / "__spark_entry__.py"]):
         for node in ast.walk(_parse(path)):
-            if isinstance(node, ast.Name):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 names.add(node.id)
-            elif isinstance(node, ast.Attribute):
+            elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
                 names.add(node.attr)
             elif isinstance(node, (ast.Import, ast.ImportFrom)):
                 names.update(a.name.rsplit(".", 1)[-1] for a in node.names)
     return names
+
+
+def _defined_names(node: ast.stmt) -> list[str]:
+    """Names a top-level statement defines that the guard checks."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [] if node.decorator_list else [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and not (n.id.startswith("__") and n.id.endswith("__"))
+    ]
 
 
 def unreferenced_defs() -> list[str]:
@@ -45,15 +66,14 @@ def unreferenced_defs() -> list[str]:
     dead = []
     for path in _py_files([PACKAGE]):
         for node in _parse(path).body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not node.decorator_list
-                and node.name not in used
-            ):
-                dead.append(f"{path.relative_to(ROOT)}:{node.lineno} {node.name}")
+            dead.extend(
+                f"{path.relative_to(ROOT)}:{node.lineno} {name}"
+                for name in _defined_names(node)
+                if name not in used
+            )
     return dead
 
 
 def test_no_unreferenced_defs():
     dead = unreferenced_defs()
-    assert not dead, "top-level defs nothing references:\n" + "\n".join(dead)
+    assert not dead, "top-level names nothing references:\n" + "\n".join(dead)
