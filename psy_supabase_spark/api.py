@@ -243,9 +243,9 @@ class PsyEngine:
         recall semantics); ``method="lsh_exact_k"`` adds the brute
         completion for queries whose buckets return < k rows
         (`srp_topk(brute_fallback=True)` — exact-k contract at LSH cost
-        for the common case).  Regime note (measured, BENCH_EXTRA
-        ``srp_exact_k_*``): at broadcast-scale corpora the plain brute
-        KNN join WINS (2.0 s vs LSH's 2.4 s on the 5k-row bench corpus)
+        for the common case).  Regime note (measured at sf0.1): at
+        broadcast-scale corpora the plain brute KNN join WINS (2.0 s vs
+        LSH's 2.4 s on the 5k-row bench corpus)
         — the LSH methods are for the regime where the corpus is too
         large to score against every query, which is exactly when
         ``method="auto"``'s brute route stops being available; they are

@@ -380,16 +380,6 @@ def quantized_store(
     )
 
 
-def write_ivf_sq8_layout(
-    index: IVFIndex, path: str, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> None:
-    """Persist the SQ8 store partitioned by centroid_id — quantization is
-    index-BUILD-time work; serving must never pay it per query."""
-    quantized_store(index, id_col=id_col, vec_col=vec_col).write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(path)
-
-
 def append_to_layout(
     new_rows: DataFrame,
     path: str,
@@ -506,9 +496,9 @@ def ivf_search_batch(
     scale-invariant, so the coarse score uses the RAW int8 array (the
     per-vector scale cancels) with its norm precomputed in the store —
     one fold per row instead of dequantize + three.  Pass ``sq8_store``
-    (:func:`quantized_store`, persisted at index-build time like
-    :func:`write_ivf_sq8_layout`) to avoid quantizing per query — the
-    production shape; omitting it quantizes on the fly.  Parity with the
+    (a persisted :func:`quantized_store`, written at index-build time)
+    to avoid quantizing per query — the production shape; omitting it
+    quantizes on the fly.  Parity with the
     full-precision path holds whenever the true top-k survives the
     quantized first pass — guaranteed only as rescore_factor→list size;
     at the default factor int8 rounding can in principle flip near-tied
@@ -836,12 +826,11 @@ def ivf_search_batch_gemm(
     left-to-right — a last-ulp difference only, erased by round6 except
     on knife-edge rounding boundaries never observed).
 
-    ``sq8_store`` (from :func:`quantized_store` / a read-back
-    :func:`write_ivf_sq8_layout` layout) switches to SQ8-GEMM serving:
-    the coarse GEMM runs over the int8 codes (cosine is scale-invariant,
-    so raw ints score correctly), keeps ``k·rescore_factor`` per query,
-    and re-scores survivors at full precision — the IVF-SQ8 ladder with
-    both passes GEMM-shaped."""
+    ``sq8_store`` (a persisted :func:`quantized_store`, read back)
+    switches to SQ8-GEMM serving: the coarse GEMM runs over the int8
+    codes (cosine is scale-invariant, so raw ints score correctly), keeps
+    ``k·rescore_factor`` per query, and re-scores survivors at full
+    precision — the IVF-SQ8 ladder with both passes GEMM-shaped."""
     from pyspark.sql import Window
 
     qrows = _collect_query_batch(queries, query_id, query_vec, max_queries)

@@ -500,7 +500,7 @@ def write_ivf_pq_layout(
 ) -> None:
     """Persist the IVF-PQ store: (id, codes, centroid_id) partitioned by
     centroid_id — encode is index-BUILD work (like `ivf.write_ivf_layout`
-    and `write_ivf_sq8_layout`), and the partitioning turns
+    and a persisted `quantized_store`), and the partitioning turns
     :func:`ivf_pq_search_batch`'s probe-union filter into file-level
     partition pruning.  ~10 B/vector on disk vs 256 B float32.  The
     centroid assignment rides the encode pass (``passthrough``) — one

@@ -491,11 +491,11 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FROZEN as of r13 (r12 verdict #3: the WARC oracle harness is ~88%
     of this slot's headline number — 2.646 s harness vs a 0.36 s engine
-    residual, split-reported in BENCH_EXTRA).  This slot accepts NO new
-    oracle families: new evidence gates by replacing a stale column, or
-    — preferred — via pytest-level DuckDB parity (the tests/test_url.py
-    / tests/test_hll.py pattern).  The engine residual keeps its own
-    bench key (`multimodal_features_sans_warc_sec`).
+    residual, measured as a split).  This slot accepts NO new oracle
+    families: new evidence gates by replacing a stale column, or —
+    preferred — via pytest-level DuckDB parity (the tests/test_url.py /
+    tests/test_hll.py pattern).  The engine residual is the bare
+    `multimodal.extract_blob_features` leg.
 
     The composed evidence: the WARC/WET legs (r10, see
     `warc_roundtrip_evidence`) and — r11 — the WAT/warcinfo legs,

@@ -181,10 +181,9 @@ def training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_prefix(spark, sf_dir, "reshape")
 
 
-# Cumulative stage cut points for per-stage wall attribution (r8 verdict
-# #1): bench.py times build_prefix at each cut and differences adjacent
-# entries, so training_pipeline's 9-ish-second headline stops being one
-# opaque number.  The list IS the pipeline order.
+# Cumulative stage cut points: build_prefix truncates the DAG after any
+# of them, so per-stage cost can be timed by differencing adjacent
+# prefixes.  The list IS the pipeline order.
 STAGE_ORDER = [
     "scan",          # documents parquet scan
     "exact_dedup",   # hash-first exact-dup keepers, left-semi

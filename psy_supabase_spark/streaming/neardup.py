@@ -20,8 +20,8 @@ accumulating sketch index, composed inside ``foreachBatch``:
    and the replayed batch recomputes the identical decision (idempotent).
 
 Micro-batch sizing: per-batch wall ≈ FLOOR + rows/MARGINAL (both measured
-every bench round: `stream_*_floor_sec_per_batch`,
-`stream_*_marginal_*_per_sec` — ~2.2 s / ~540 vecs/s embedding, ~3.1 s /
+by the `stream` family of tools/scale_step.py, `stream_*_floor*` /
+`stream_*_marginal*` — ~2.2 s / ~540 vecs/s embedding, ~3.1 s /
 ~420 docs/s text at fold_every=8 on the bench box, after the r14
 sketch-once refactor).  The floor is Spark fixed cost (scheduling + the
 amortized txlog commits + the sketch and survivors checkpoints), so a

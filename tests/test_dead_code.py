@@ -5,12 +5,14 @@ in the package, ``tools/``, ``bench.py``, ``examples/``, ``perfbench/`` or
 definition included) is unreferenced.  Decorated defs are skipped: a
 decorator (``@register``, ``@udf``, ...) is itself the reference that
 makes them reachable.  Dunder assignments (``__all__``, ...) are skipped.
-Mentions in docstrings and comments do not count.  Pure ``ast``; no
-Spark."""
+Mentions in docstrings and comments do not count.  A second scan pins
+the set of ``SPARK_GRAFT_*`` environment knobs the code reads.  Pure
+``ast``; no Spark."""
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -77,3 +79,43 @@ def unreferenced_defs() -> list[str]:
 def test_no_unreferenced_defs():
     dead = unreferenced_defs()
     assert not dead, "top-level names nothing references:\n" + "\n".join(dead)
+
+
+# The environment knobs the package, ``tools/`` and ``bench.py`` may read.
+# A new one is an option, and options need a reason: add it here with it.
+ENV_KNOBS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_FAMILIES",
+    "SPARK_GRAFT_SF_DIR",
+}
+
+
+def _docstring_nodes(tree: ast.Module) -> set[int]:
+    ids = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            body = node.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                ids.add(id(body[0].value))
+    return ids
+
+
+def env_knob_names() -> set[str]:
+    """Every ``SPARK_GRAFT_*`` name in a string constant outside docstrings."""
+    names: set[str] = set()
+    for path in _py_files([PACKAGE, ROOT / "tools", ROOT / "bench.py"]):
+        tree = _parse(path)
+        docstrings = _docstring_nodes(tree)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+            ):
+                names.update(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", node.value))
+    return names
+
+
+def test_env_knobs_do_not_creep():
+    assert env_knob_names() == ENV_KNOBS

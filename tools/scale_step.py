@@ -514,13 +514,11 @@ def main() -> None:
             shutil.rmtree(wh, ignore_errors=True)
 
         if "stream" in FAMILIES:
-            # streaming near-dup filters (r15, r14 verdict #7): the r14
-            # sketch-once rework's 97→419 docs/s / 145→541 vecs/s claims
-            # lived only in OPTIMIZATION prose — price BOTH stateful
-            # filters per factor under bench.py's own 10-batch/floor/
-            # marginal protocol (10·fx single-file micro-batches, empty-
-            # batch floor at final index size, marginal = batched wall −
-            # batches × floor) so the marginal throughput FLOOR is a
+            # streaming near-dup filters: price BOTH stateful filters per
+            # factor as a fixed per-batch floor plus a marginal
+            # throughput (10·fx single-file micro-batches, empty-batch
+            # floor at final index size, marginal = batched wall −
+            # batches × floor) so the marginal throughput floor is a
             # committed, re-runnable curve.
             import shutil as _sh
 

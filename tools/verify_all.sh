@@ -1,8 +1,8 @@
 #!/usr/bin/env bash
 # The pre-snapshot verify loop (run before every round snapshot):
 #   1. oracle gate replica at sf0.01 (the driver's correctness surface)
-#   2. full pytest suite
-#   3. bench at sf0.1 (one JSON line; compare against BENCH_r{N}.json)
+#   2. tier-1 pytest suite (the ROADMAP command), then the perfbench smoke
+#   3. bench at sf0.1 (one JSON line; full telemetry in BENCH_EXTRA.json)
 #   4. driver entry smoke
 # Exit non-zero on the first failing surface.
 set -euo pipefail
@@ -28,11 +28,13 @@ echo "== 1/4 oracle gate (sf0.01) =="
 python tools/oracle_check.py /root/testdata/sf0.01
 
 echo "== 2/4 pytest =="
-python -m pytest tests/ -q
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+python -m pytest perfbench/test_smoke.py
 
 echo "== 3/4 bench (sf0.1) =="
-# bench asserts its stdout line < 1,800 chars (driver tail window) and
-# writes full telemetry to BENCH_EXTRA.json — commit that with the round
+# bench raises if its stdout line reaches 1,800 chars (stdout is parsed
+# from a 2,000-char tail window) and writes probe medians + chosen
+# configs to BENCH_EXTRA.json
 python bench.py 2>/dev/null | tail -1
 
 echo "== 4/4 entry smoke =="
