@@ -14,6 +14,8 @@ full hash-matched driver row instead of pytest-only evidence.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,7 +43,11 @@ _TENANTS = [("alice", 40), ("bob-7", 25), ("9lives", 10)]
 )
 def tenant_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    store = TenantStore(spark, tempfile.mkdtemp(prefix="tenant_roundtrip_"))
+    # the returned frame is lazy and reads this store, so it can only be
+    # removed when the process exits
+    root = tempfile.mkdtemp(prefix="tenant_roundtrip_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    store = TenantStore(spark, root)
     assert not store.table_exists("interactions")  # lazy DDL: nothing yet
 
     for user_id, cutoff in _TENANTS:

@@ -3,7 +3,7 @@
 #   1. oracle gate replica at sf0.01 (the driver's correctness surface)
 #   2. tier-1 pytest suite (the ROADMAP command), then the perfbench smoke
 #   3. bench at sf0.1 (one JSON line; full telemetry in BENCH_EXTRA.json)
-#   4. driver entry smoke
+#   4. driver entry smoke, and one Python task from outside the checkout
 # Exit non-zero on the first failing surface.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -46,6 +46,20 @@ n = df.count()
 assert n >= 0
 print(f"entry ok: {n} rows, schema [{', '.join(c for c, _ in df.dtypes)}]")
 PY
+# Python workers fork from psy_supabase_spark.daemon: a driver outside the
+# checkout, PYTHONPATH unset, must still run a Python task
+repo="$PWD"
+outside="$(mktemp -d)"
+trap 'rm -rf "$outside"' EXIT
+(cd "$outside" && env -u PYTHONPATH python - "$repo" <<'PY'
+import sys
+sys.path.insert(0, sys.argv[1])
+from psy_supabase_spark.session import get_spark
+rows = get_spark("verify-daemon").createDataFrame([(1,)], "x int").collect()
+assert [r.x for r in rows] == [1], rows
+print("python task ok outside the checkout")
+PY
+)
 echo "ALL GREEN"
 # bench/scale-step rewrite their telemetry sidecars each run — they are
 # part of the round's evidence contract, so flag them if left dirty.
