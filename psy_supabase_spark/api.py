@@ -16,11 +16,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import json_ops
 from .functions import text as TX
+from .functions.memo import per_gateway
 from .operators import ivf as ivf_ops
 from .operators import ml_udfs, topk, windows
 from .sources.local import local_frame
@@ -28,6 +29,24 @@ from .sources.tenancy import DEFAULT_TENANT, TenantStore, sanitize_tenant_id
 
 INTERACTIONS = "interactions"
 KNOWLEDGE_BASE = "knowledge_base"
+# the order of turns without a stored interaction_id (written before the
+# column existed); created_at alone ties within one multi-row append
+LEGACY_TURN_ORDER = ("created_at", "question", "answer", "context", "metadata")
+
+
+@per_gateway
+def _safety_columns(col: str) -> tuple[Column, Column]:
+    return TX.safety_struct(col), F.col("safety").isNotNull()
+
+
+@per_gateway
+def _effectiveness_columns(question_col: str, answer_col: str, template_col: str) -> tuple[Column, ...]:
+    return (
+        F.round(TX.term_overlap(question_col, answer_col), 6).alias("term_overlap"),
+        TX.token_count(answer_col).alias("response_length"),
+        TX.length_bucket(answer_col).alias("length_quality"),
+        TX.template_adherence(template_col, answer_col).alias("template_adherence"),
+    )
 
 
 class PsyEngine:
@@ -82,14 +101,22 @@ class PsyEngine:
         return self.store.scan(INTERACTIONS, user_id=user_id).orderBy("created_at")
 
     def get_recent_history(self, user_id: str, k: int = 5) -> DataFrame:
-        """W2: last-k turns (reference rag_processor.py:109), re-sorted asc."""
-        recent = windows.recent_per_key(
-            self.store.scan(INTERACTIONS, user_id=user_id),
-            k,
-            partition_by="user_id",
-            order_by=[F.col("created_at").desc()],
-        )
-        return recent.drop("rn").orderBy("created_at")
+        """W2: last-k turns (reference rag_processor.py:109), re-sorted asc.
+
+        Ordered as ``build_context`` numbers turns: the stored
+        ``interaction_id`` with legacy (null-ordinal) rows first, then the
+        legacy columns.  ``created_at`` alone ties, because a multi-row
+        append stamps ONE current_timestamp, so it cannot pick the k-th
+        row.  The tenant is already one partition of the scan, so one
+        ordered limit (a single TakeOrderedAndProject job) takes the k
+        newest rows and the ascending re-sort runs over those k only."""
+        df = self.store.scan(INTERACTIONS, user_id=user_id)
+        newest_first = [F.col(c).desc() for c in LEGACY_TURN_ORDER]
+        oldest_first = [F.col(c).asc() for c in LEGACY_TURN_ORDER]
+        if "interaction_id" in df.columns:
+            newest_first.insert(0, F.col("interaction_id").desc_nulls_last())
+            oldest_first.insert(0, F.col("interaction_id").asc_nulls_first())
+        return df.orderBy(*newest_first).limit(k).orderBy(*oldest_first)
 
     def get_all_documents_and_embeddings(self, user_id: str) -> DataFrame:
         """S1/S2: knowledge-base scan; no vector-decode step needed."""
@@ -295,23 +322,21 @@ class PsyEngine:
     # ---- pipeline scalars (reference safety_handler / prompt_selector) ----
 
     def classify_safety(self, questions: DataFrame, col: str = "question") -> DataFrame:
-        """T5: first-match-wins harm classifier + canned routing."""
-        return questions.withColumn("safety", TX.safety_struct(col)).withColumn(
-            "blocked", F.col("safety").isNotNull()
-        )
+        """T5: first-match-wins harm classifier + canned routing.  The
+        classifier tree is built once per py4j gateway for each ``col``
+        (``functions.memo.per_gateway``): a request-sized frame otherwise
+        pays more for building the tree than for running it."""
+        safety, blocked = _safety_columns(col)
+        return questions.withColumn("safety", safety).withColumn("blocked", blocked)
 
     def analyze_response_effectiveness(
         self, df: DataFrame, *, question_col: str = "question", answer_col: str = "answer",
         template_col: str = "template"
     ) -> DataFrame:
-        """A2/A3/T9 (reference prompt_selector.py:302-361)."""
-        return df.select(
-            "*",
-            F.round(TX.term_overlap(question_col, answer_col), 6).alias("term_overlap"),
-            TX.token_count(answer_col).alias("response_length"),
-            TX.length_bucket(answer_col).alias("length_quality"),
-            TX.template_adherence(template_col, answer_col).alias("template_adherence"),
-        )
+        """A2/A3/T9 (reference prompt_selector.py:302-361).  The four score
+        trees are built once per py4j gateway for each set of column names
+        (``functions.memo.per_gateway``), as in ``classify_safety``."""
+        return df.select("*", *_effectiveness_columns(question_col, answer_col, template_col))
 
     def build_context(self, user_id: str, max_context_turns: int = 3) -> DataFrame:
         """W1: rolling conversation context (reference
@@ -341,10 +366,9 @@ class PsyEngine:
         The stamped/mixed split costs ONE scalar probe over the
         pruned tenant partition (map-side count, no sort)."""
         df = self.store.scan(INTERACTIONS, user_id=user_id)
-        legacy_order = ["created_at", "question", "answer", "context", "metadata"]
         order = None
         if "interaction_id" not in df.columns:  # pure pre-r14 files
-            order = legacy_order
+            order = LEGACY_TURN_ORDER
         else:
             probe = df.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -352,11 +376,11 @@ class PsyEngine:
             ).head()
             if probe["stamped"] != probe["n"]:
                 order = (
-                    legacy_order
+                    LEGACY_TURN_ORDER
                     if probe["stamped"] == 0
                     else [
                         F.col("interaction_id").asc_nulls_first(),
-                        *legacy_order,
+                        *LEGACY_TURN_ORDER,
                     ]
                 )
         if order is None:  # fully stamped or empty
@@ -400,7 +424,8 @@ class PsyEngine:
     def clean_responses(self, df: DataFrame, col: str = "answer") -> DataFrame:
         """T6: the reference cleans every generated /chat response through
         its ~10-pass pipeline (text_generator.py:149-253); staged-column
-        spelling (hot-path safe)."""
+        spelling (hot-path safe), its stage trees built once per py4j
+        gateway for each column name (see ``apply_clean_response``)."""
         from .functions.response_clean import apply_clean_response
 
         return apply_clean_response(df, col, "cleaned_response")
@@ -414,7 +439,9 @@ class PsyEngine:
 
     def determine_topic(self, df: DataFrame, col: str = "question") -> DataFrame:
         """A1 + T4: entity-boosted topic argmax with the reference's
-        dict-order tie-break and default (prompt_selector.py:242-300)."""
+        dict-order tie-break and default (prompt_selector.py:242-300).  The
+        staged score trees are built once per py4j gateway for each column
+        name (see ``ner.with_boosted_topic``)."""
         from .functions import ner
 
         return ner.with_boosted_topic(df, col, topic_col="topic", score_col="topic_score")

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .memo import per_gateway
+
 ColumnOrName = Column | str
 
 
@@ -236,20 +238,33 @@ def apply_clean_response(df, src_col: str, out_col: str = "cleaned"):
     CollapseProject keeps multiply-referenced non-cheap aliases in their
     own Project instead of inlining them into lambdas/CASE branches.
     Intermediates are dropped; semantics identical to ``clean_response``
-    (same stage functions)."""
-    stages = {
-        "_rc_post_ab": _stage_post_ab(F.col(src_col)),
-        "_rc_tb": _stage_prededup(F.col("_rc_post_ab")),
-        "_rc_sents": _stage_sents(F.col("_rc_tb")),
-        "_rc_tc": _stage_dedup(F.col("_rc_sents")),
-        "_rc_tg": _stage_artifacts(_stage_lines_ws(F.col("_rc_tc"))),
-        "_rc_th": _stage_truncate(F.col("_rc_tg"), F.lower(F.col("_rc_tg"))),
-        out_col: _combine(
-            _stage_has_dialogue(F.col("_rc_post_ab")),
-            _stage_dialogue_result(F.col("_rc_post_ab")),
-            _stage_final_plain(F.col("_rc_th")),
-        ),
-    }
-    for name, expr in stages.items():
+    (same stage functions).
+
+    The stage trees are built once per py4j gateway for each
+    (``src_col``, ``out_col``) pair (``memo.per_gateway``): building them
+    costs ~1,200 py4j round trips, several times the cost of chaining them
+    onto a request frame."""
+    stages = _clean_response_stages(src_col, out_col)
+    for name, expr in stages:
         df = df.withColumn(name, expr)
-    return df.drop(*[c for c in stages if c != out_col])
+    return df.drop(*[name for name, _ in stages if name != out_col])
+
+
+@per_gateway
+def _clean_response_stages(src_col: str, out_col: str):
+    return (
+        ("_rc_post_ab", _stage_post_ab(F.col(src_col))),
+        ("_rc_tb", _stage_prededup(F.col("_rc_post_ab"))),
+        ("_rc_sents", _stage_sents(F.col("_rc_tb"))),
+        ("_rc_tc", _stage_dedup(F.col("_rc_sents"))),
+        ("_rc_tg", _stage_artifacts(_stage_lines_ws(F.col("_rc_tc")))),
+        ("_rc_th", _stage_truncate(F.col("_rc_tg"), F.lower(F.col("_rc_tg")))),
+        (
+            out_col,
+            _combine(
+                _stage_has_dialogue(F.col("_rc_post_ab")),
+                _stage_dialogue_result(F.col("_rc_post_ab")),
+                _stage_final_plain(F.col("_rc_th")),
+            ),
+        ),
+    )

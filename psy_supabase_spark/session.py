@@ -1,10 +1,11 @@
 """SparkSession factory.
 
-Local test profile targets ``local[$SPARK_GRAFT_CPUS]`` (driver-only JVM);
-the same builder flags are what we would ship on a 1000-executor cluster:
-AQE for runtime re-planning (skew joins, partition coalescing), Arrow for
-any pandas-UDF boundary, and a UTC session timezone so timestamp semantics
-match the DuckDB oracle exactly.
+Local test profile targets ``local[$SPARK_GRAFT_CPUS]`` (driver-only JVM),
+or ``local[<usable cores>]`` when that is unset; the same builder flags
+are what we would ship on a 1000-executor cluster: AQE for runtime
+re-planning (skew joins, partition coalescing), Arrow for any pandas-UDF
+boundary, and a UTC session timezone so timestamp semantics match the
+DuckDB oracle exactly.
 
 Python workers are forked from ``psy_supabase_spark.daemon`` rather than the
 stock ``pyspark.daemon``: PySpark calls ``importlib.invalidate_caches()``
@@ -27,8 +28,20 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 _PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
+def _usable_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity call on this platform (macOS)
+        return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "psy_supabase_spark", *, shuffle_partitions: str | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
+
+    The master is ``local[$SPARK_GRAFT_CPUS]``; unset, it is the number of
+    cores this process may run on (its CPU affinity), so a tool run on its
+    own schedules no more task slots, and forks no more Python workers,
+    than the box has cores.
 
     Cluster-scale notes: ``spark.sql.adaptive.enabled`` lets AQE coalesce
     post-shuffle partitions and split skewed ones at 100 TB;
@@ -44,7 +57,7 @@ def get_spark(app_name: str = "psy_supabase_spark", *, shuffle_partitions: str |
     does), otherwise starts workers that cannot find the daemon, and every
     Python task fails.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

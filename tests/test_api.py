@@ -1148,6 +1148,72 @@ def test_interaction_id_legacy_and_mixed_warehouse(spark, tmp_path):
     ) == [("q1", None), ("q2", None), ("q3", 1), ("q4", 2)]
 
 
+def test_recent_history_breaks_timestamp_ties_by_stored_id(spark, tmp_path):
+    """A multi-row append stamps ONE created_at, so the k-th newest turn
+    is decided by the stored interaction_id: the newest k come back, oldest
+    first."""
+    from psy_supabase_spark.sources.local import local_frame
+
+    eng = PsyEngine(spark, str(tmp_path / "wh_ties"))
+    turns = local_frame(
+        spark,
+        [(None, f"q{i}", f"a{i}", None) for i in range(1, 7)],
+        "context string, question string, answer string, metadata string",
+    )
+    eng.store.append("interactions", turns, user_id="alice", ordinal_col="interaction_id")
+    rows = eng.get_recent_history("alice", 5).collect()
+    assert [(r.interaction_id, r.question) for r in rows] == [(i, f"q{i}") for i in range(2, 7)]
+    assert len({r.created_at for r in rows}) == 1  # the tie this guards
+    assert eng.get_recent_history("bob", 5).collect() == []
+
+
+def test_recent_history_legacy_and_mixed_warehouse(spark, tmp_path):
+    """Files without interaction_id order by the legacy columns; once
+    stamped turns land, they rank after every legacy row, as in
+    build_context."""
+    wh = str(tmp_path / "wh_recent_legacy")
+    (
+        spark.createDataFrame(
+            [("c1", "q1", "a1", None, "2026-01-01 00:00:00"), ("c2", "q2", "a2", None, "2026-01-01 00:00:01"),
+             ("c3", "q3", "a3", None, "2026-01-01 00:00:01")],
+            "context string, question string, answer string, metadata string, ts string",
+        )
+        .withColumn("created_at", F.to_timestamp("ts"))
+        .drop("ts")
+        .withColumn("user_id", F.lit("alice"))
+        .write.partitionBy("user_id")
+        .parquet(wh + "/interactions")
+    )
+    eng = PsyEngine(spark, wh)
+    assert "interaction_id" not in eng.store.scan("interactions", user_id="alice").columns
+    assert [r.question for r in eng.get_recent_history("alice", 2).collect()] == ["q2", "q3"]
+    eng.add_interaction("alice", context=None, question="q4", answer="a4")
+    assert [r.question for r in eng.get_recent_history("alice", 3).collect()] == ["q2", "q3", "q4"]
+    assert [r.question for r in eng.get_recent_history("alice", 9).collect()] == ["q1", "q2", "q3", "q4"]
+
+
+def test_recent_history_job_count(spark, tmp_path):
+    """get_recent_history runs at most two jobs: the scan's footer merge
+    and one ordered limit."""
+    import uuid
+
+    eng = PsyEngine(spark, str(tmp_path / "wh_recent_jobs"))
+    for i in range(3):
+        eng.add_interaction("alice", context=None, question=f"q{i}", answer=f"a{i}")
+    eng.get_recent_history("alice", 2).collect()  # warm: first-use jobs
+    sc = spark.sparkContext
+    group = f"recent-history-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "recent history job count")
+    try:
+        rows = eng.get_recent_history("alice", 2).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [r.question for r in rows] == ["q1", "q2"]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, sorted(jobs)
+
+
 def test_tenant_scan_preserves_non_canonical_columns(spark, tmp_path):
     """The merged-footer scan must NOT mask columns outside the
     canonical schema (r14 review: a pinned-schema read silently

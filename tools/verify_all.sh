@@ -47,17 +47,21 @@ assert n >= 0
 print(f"entry ok: {n} rows, schema [{', '.join(c for c, _ in df.dtypes)}]")
 PY
 # Python workers fork from psy_supabase_spark.daemon: a driver outside the
-# checkout, PYTHONPATH unset, must still run a Python task
+# checkout, PYTHONPATH unset, must still run a Python task; with
+# SPARK_GRAFT_CPUS unset too, it gets one task slot per usable core
 repo="$PWD"
 outside="$(mktemp -d)"
 trap 'rm -rf "$outside"' EXIT
-(cd "$outside" && env -u PYTHONPATH python - "$repo" <<'PY'
+(cd "$outside" && env -u PYTHONPATH -u SPARK_GRAFT_CPUS python - "$repo" "$(env -u OMP_NUM_THREADS nproc)" <<'PY'
 import sys
 sys.path.insert(0, sys.argv[1])
 from psy_supabase_spark.session import get_spark
-rows = get_spark("verify-daemon").createDataFrame([(1,)], "x int").collect()
+spark = get_spark("verify-daemon")
+slots = spark.sparkContext.defaultParallelism
+assert slots == int(sys.argv[2]), (slots, sys.argv[2])
+rows = spark.createDataFrame([(1,)], "x int").collect()
 assert [r.x for r in rows] == [1], rows
-print("python task ok outside the checkout")
+print(f"python task ok outside the checkout, local[{slots}]")
 PY
 )
 echo "ALL GREEN"
