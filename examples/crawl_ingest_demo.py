@@ -175,29 +175,26 @@ def main() -> int:
         f"({index.count()} members indexed)"
     )
 
-    # incremental-crawl round: ONE facade call chains the legs a
-    # crawler runs each cycle — dedupe_captures (revisit collapse) →
-    # bloom filter_unseen (cross-snapshot novelty: the even-doc half
-    # plays YESTERDAY's snapshot) → frontier_allowed (robots policy) →
+    # incremental-crawl round: ONE call chains the legs a crawler runs
+    # each cycle — dedupe_captures (revisit collapse) → bloom
+    # filter_unseen (cross-snapshot novelty: the even-doc half plays
+    # YESTERDAY's snapshot) → frontier_allowed (robots policy) →
     # schedule_frontier (politeness pacing, deep hosts pre-capped)
-    from psy_supabase_spark.api import PsyEngine
     from psy_supabase_spark.operators import bloom as BLOOM
     from psy_supabase_spark.operators.robots import (
-        robots_crawl_delays, robots_rules,
+        plan_crawl_round, robots_crawl_delays, robots_rules,
     )
 
-    engine = PsyEngine(spark, str(Path(out_dir) / "warehouse"))
     digests = cdx.index_warc_members(spark, str(shard_dir), digest=True)
     prev = digests.where(F.col("url").rlike("[02468]$"))
-    n_prev = max(prev.count(), 1)
-    m_bits, k = BLOOM.bloom_params(n_prev, 0.01)
-    seen = (BLOOM.bloom_build(prev, "digest", m_bits, k), m_bits, k)
+    seen = BLOOM.build_seen_filter(prev, "digest", fp_rate=0.01)
+    _, m_bits, k = seen
     robots_src = spark.createDataFrame(
         [("example.com",
           "User-agent: *\nDisallow: /doc/13\nCrawl-delay: 0.2\n")],
         "host string, robots_txt string",
     )
-    plan = engine.plan_crawl_round(
+    plan = plan_crawl_round(
         digests,
         robots_rules(robots_src),
         seen,
@@ -212,7 +209,7 @@ def main() -> int:
         f"0.2 s/slot); fetch touches only those: "
         f"{cdx.fetch_records(plan).count()} records"
     )
-    stats = engine.snapshot_stats(digests)
+    stats = HLL.snapshot_stats(digests)
     print(
         "snapshot_stats (portable HLL, register-bounded): "
         + ", ".join(f"{k.split('_')[-1]}≈{v:.0f}" for k, v in sorted(stats.items()))
@@ -222,19 +219,9 @@ def main() -> int:
     # and <meta> fallbacks inside), transcode split-path — the UTF-8
     # majority never leaves the JVM, only the latin-1 minority rides
     # the Arrow codec leg
-    from psy_supabase_spark.functions import charset as CS
+    from psy_supabase_spark.functions.charset import decode_crawl_text
 
-    sniffed = records.withColumn(
-        "charset",
-        CS.sniff_charset(
-            F.concat(
-                F.lit("content-type: "),
-                F.coalesce("http_content_type", F.lit("")),
-            ),
-            CS.latin1_view("payload"),
-        ),
-    )
-    decoded = CS.decode_text(sniffed, out_col="page")
+    decoded = decode_crawl_text(records, out_col="page")
     by_cs = {r.charset: r["count"] for r in decoded.groupBy("charset").count().collect()}
     print(f"charset sniff + transcode: {by_cs}")
 

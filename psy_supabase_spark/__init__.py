@@ -14,7 +14,7 @@ Layout
 - ``functions``  : pure Column-expression libraries (vector, text, json, hashing)
 - ``operators``  : composed DataFrame operators (top-k, IVF, dedup, windows, ...)
 - ``streaming``  : Structured Streaming ingest / session windows
-- ``api``        : reference-parity facade (DatabaseManager-shaped)
+- ``api``        : the reference's entry points (DatabaseManager + RAGProcessor)
 
 Design rules (enforced in code review + tests):
 1. DataFrame/SQL first; RDDs never.  2. No row-at-a-time Python UDFs in any

@@ -253,6 +253,26 @@ def decode_text(
     return jvm.unionByName(rest)
 
 
+def decode_crawl_text(records: DataFrame, *, out_col: str = "text") -> DataFrame:
+    """`sources.warc.read_warc` response records → UTF-8 text in
+    ``out_col``: :func:`sniff_charset` over the record's HTTP
+    Content-Type header and a latin-1 view of its payload (into a
+    ``charset`` column), then :func:`decode_text` — the UTF-8 majority
+    stays in codegen, only the non-UTF-8 minority rides the Arrow codec
+    leg."""
+    sniffed = records.withColumn(
+        "charset",
+        sniff_charset(
+            F.concat(
+                F.lit("content-type: "),
+                F.coalesce(F.col("http_content_type"), F.lit("")),
+            ),
+            latin1_view("payload"),
+        ),
+    )
+    return decode_text(sniffed, out_col=out_col)
+
+
 def _strip_bom(text: Column) -> Column:
     # ALL leading U+FEFF, like the Python leg's lstrip — one-only would
     # make the legs disagree on '﻿﻿X' content

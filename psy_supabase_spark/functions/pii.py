@@ -23,7 +23,7 @@ are order-independent and each family is auditable on its own.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import ColumnOrName, _c
@@ -65,6 +65,16 @@ def redact_pii(col: ColumnOrName) -> Column:
     for _name, pat, token in PII_PATTERNS:
         c = F.regexp_replace(c, pat, token)
     return c
+
+
+def redact_with_counts(df: DataFrame, col: str = "text") -> DataFrame:
+    """``df`` with ``col`` redacted by :func:`redact_pii` and one
+    ``n_pii_<family>`` count column per family, counted on the ORIGINAL
+    text (the columns are added before the redaction replaces ``col``)."""
+    counts = pii_counts(col)
+    return df.withColumns(
+        {f"n_pii_{name}": counts[name] for name, _p, _t in PII_PATTERNS}
+    ).withColumn(col, redact_pii(col))
 
 
 def pii_oracle_sql(col: str) -> str:

@@ -150,6 +150,19 @@ def bloom_build(
     return words
 
 
+def build_seen_filter(
+    df: DataFrame, col: str, *, expected: int | None = None,
+    fp_rate: float = 0.01,
+) -> tuple[list[int], int, int]:
+    """A filter over a key column sized for ``fp_rate`` (the 'previous
+    crawl' side of incremental ingest): returns ``(words, m_bits, k)``
+    for :func:`filter_unseen`.  ``expected`` defaults to a count of the
+    frame."""
+    n = df.count() if expected is None else expected
+    m_bits, k = bloom_params(max(n, 1), fp_rate)
+    return bloom_build(df, col, m_bits, k), m_bits, k
+
+
 def bloom_contains_expr(
     col: ColumnOrName, words: list[int], m_bits: int, k: int
 ) -> Column:

@@ -303,3 +303,176 @@ def approx_distinct_by(
     return hll_estimate_by(
         hll_registers(df, col, b=b, by=by).collect(), by=by, b=b
     )
+
+
+def _hll_tag_card(
+    frame: DataFrame,
+    keys: tuple[str, ...],
+    tag_structs: list,
+    b: int,
+) -> list:
+    """One-pass tagged HLL card shared by both :func:`snapshot_stats`
+    branches: explode each row into its (keys…, tag, value) facets,
+    build ONE tag-grouped register set, estimate in-engine, and
+    collect the finished (keys…, tag, estimate) rows — the only
+    thing that leaves the cluster.  Register shuffle is bounded by
+    n_groups × n_tags × 2^b whatever the input size."""
+    tagged = frame.select(
+        *keys,
+        F.explode(F.array(*tag_structs)).alias("_tv"),
+    ).select(
+        *keys, F.col("_tv.t").alias("_tag"), F.col("_tv.v").alias("_v")
+    )
+    return hll_estimates(
+        hll_registers(tagged, "_v", b=b, by=(*keys, "_tag")),
+        by=(*keys, "_tag"),
+        b=b,
+    ).collect()
+
+
+def snapshot_stats(
+    index: DataFrame, *, b: int = 12,
+    cols: tuple[str, ...] = ("url", "digest"),
+    by: tuple[str, ...] | None = None,
+) -> dict[str, float] | DataFrame:
+    """Approximate distinct counts over a crawl snapshot's index —
+    one HLL sketch per column (register-bounded shuffles, ≤2^b rows
+    each, error ~1.04/sqrt(2^b)) plus a host sketch derived from the
+    url column.  The per-snapshot cardinality card (distinct pages /
+    payloads / hosts) every crawl-ops dashboard starts with, without a
+    single exact count(distinct) shuffle.
+
+    ``by`` switches to GROUPED sketches and returns a small DataFrame
+    of one row per group with an ``approx_distinct_{col}`` column per
+    sketched column.  Each ``by`` entry is an index column name or a
+    derived key: ``"host"`` (lower-cased URL host) / ``"day"`` (the
+    CDX timestamp's yyyyMMdd prefix).  Estimation runs IN-ENGINE
+    (:func:`hll_estimates` — exact DECIMAL register sum, one double op
+    per group, registers never leave the cluster); only the finished
+    per-group estimates collect, ONE row per group per sketched column
+    — so the collected size is bounded by the group count (days and TLDs
+    trivially, a million hosts is ~24 MB of rows; beyond that use
+    :func:`hll_estimates` directly and keep the result frame
+    distributed).
+
+    BOTH cards are ONE pass over the index: every sketched column
+    unpivots to a tagged (by…, col_tag, value) row — the grouped card
+    adds a per-row SENTINEL tag so a group whose every sketched value
+    is null still appears with 0.0 — and a single tag-grouped register
+    build + in-engine estimate serves all columns (and the group
+    universe) from one job, no persist needed.  Register shuffle stays
+    sketch-bounded (≤ n_groups × (n_cols+1) × 2^b rows).  Both branches
+    share :func:`_hll_tag_card` and differ only in key columns and the
+    sentinel."""
+
+    def tag_struct(tag: str, value):
+        return F.struct(
+            F.lit(tag).alias("t"), value.cast("string").alias("v")
+        )
+
+    derived_host = F.lower(F.parse_url(F.col("url"), F.lit("HOST")))
+    if by is None:
+        # the URL-derived host OWNS the 'host' tag whenever a url
+        # column exists (it replaces a same-named column's sketch) —
+        # tagging both under 'host' would estimate the UNION of the two
+        # value sets, matching neither
+        derive_host = "url" in index.columns
+        expected = [
+            c
+            for c in cols
+            if c in index.columns and not (c == "host" and derive_host)
+        ]
+        tag_structs = [tag_struct(c, F.col(c)) for c in expected]
+        if derive_host:
+            tag_structs.append(tag_struct("host", derived_host))
+            expected.append("host")
+        if not tag_structs:
+            return {}
+        got = {r[0]: r[1] for r in _hll_tag_card(index, (), tag_structs, b)}
+        # an all-null column sketches EMPTY (no register rows) and
+        # cards as 0.0, the empty-sketch posture — never missing
+        return {f"approx_distinct_{c}": got.get(c, 0.0) for c in expected}
+    keys = []
+    for k in by:
+        if k in index.columns:
+            keys.append(F.col(k))
+        elif k == "host" and "url" in index.columns:
+            keys.append(derived_host.alias("host"))
+        elif k == "day" and "timestamp" in index.columns:
+            keys.append(
+                F.substring("timestamp", 1, 8).alias("day")
+            )
+        else:
+            raise ValueError(
+                f"unknown grouping key {k!r}: not an index "
+                "column and not a derivable 'host'/'day'"
+            )
+    # a by-key is never also sketched: "distinct keys per that
+    # same key" is identically 1, and the duplicate column
+    # name would make every downstream reference ambiguous
+    sketch_cols = [
+        c for c in cols if c in index.columns and c not in by
+    ]
+    base = index.select(*keys, *[F.col(c) for c in sketch_cols])
+    nk = len(by)
+    # unpivot + sentinel: one tagged row per (input row, sketched
+    # col) + one sentinel row per input row.  The sentinel carries
+    # a constant non-null value, so EVERY group owns at least one
+    # register row and the group universe rides the same job (an
+    # all-null-sketch group must card as 0.0, not vanish).
+    # String-typed sketch values by construction (CDX index
+    # columns); the tag value never collides with a column name
+    # (\\x00 is not a legal identifier byte).
+    _GROUPS = "\x00groups"
+    est_rows = _hll_tag_card(
+        base,
+        tuple(by),
+        [tag_struct(_GROUPS, F.lit(""))]
+        + [tag_struct(c, F.col(c)) for c in sketch_cols],
+        b,
+    )
+    ests: dict[str, dict] = {c: {} for c in sketch_cols}
+    groups = set()
+    for r in est_rows:
+        g = r[0] if nk == 1 else tuple(r[:nk])
+        tag = r[nk]
+        if tag == _GROUPS:
+            groups.add(g)
+        else:
+            ests[tag][g] = r[nk + 1]
+    # null-safe deterministic ordering (unparsable-URL hosts are a
+    # null group like any other)
+    all_keys = sorted(
+        groups,
+        key=lambda g: tuple(
+            (x is None, x)
+            for x in (g if isinstance(g, tuple) else (g,))
+        ),
+    )
+    # a group with NO non-null keys in one sketched column
+    # estimates 0.0 (the empty-sketch posture), never null
+    rows = [
+        tuple([g] if len(by) == 1 else list(g))
+        + tuple(ests[c].get(g, 0.0) for c in sketch_cols)
+        for g in all_keys
+    ]
+    # explicit schema (key types from the projection itself):
+    # names-only inference crashes on an EMPTY index or an
+    # all-null key column — both realistic operational inputs
+    from pyspark.sql import types as T
+
+    from ..sources.local import local_frame
+
+    schema = T.StructType(
+        [
+            T.StructField(k, base.schema[i].dataType, True)
+            for i, k in enumerate(by)
+        ]
+        + [
+            T.StructField(
+                f"approx_distinct_{c}", T.DoubleType(), True
+            )
+            for c in sketch_cols
+        ]
+    )
+    return local_frame(index.sparkSession, rows, schema)

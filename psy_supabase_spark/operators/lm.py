@@ -231,6 +231,26 @@ def score_documents(
     )
 
 
+def score_fluency(
+    docs: DataFrame,
+    *,
+    train_on: DataFrame | None = None,
+    vocab_cap: int | None = 1_000_000,
+    bigram_cap: int | None = 10_000_000,
+) -> DataFrame:
+    """``docs`` with :func:`score_documents`' columns joined on
+    ``doc_id`` (left: every doc stays): the CCNet quality-filter stage
+    in one call.  ``train_on`` defaults to the scored corpus itself;
+    pass a clean reference corpus (CCNet uses Wikipedia) when you have
+    one.  Caps default ON so the model broadcasts at scale."""
+    model = train_bigram_lm(
+        train_on if train_on is not None else docs,
+        vocab_cap=vocab_cap,
+        bigram_cap=bigram_cap,
+    )
+    return docs.join(score_documents(docs, model), "doc_id", "left")
+
+
 def ppl_filter(
     docs: DataFrame,
     lm: BigramLM,

@@ -48,8 +48,10 @@ import tempfile
 import uuid
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .bloom import filter_unseen
 
 _DIRECTIVE_RE = r"^([A-Za-z-]+)\s*:"
 _VALUE_RE = r"^[A-Za-z-]+\s*:\s*(.*)$"
@@ -655,7 +657,7 @@ def resolve_sitemap_index(
     DataFrame of (host, url) index targets and returns (host,
     sitemap_xml) for them (compose with :func:`sitemap_xml` for gz
     payloads) — so I/O stays with the caller, the
-    `cdx.fetch_crawl_records` pattern.  The depth bound is the cycle
+    `cdx.fetch_records` pattern.  The depth bound is the cycle
     guard (a sitemap index can reference itself); targets still
     unresolved at the bound are dropped.
 
@@ -777,3 +779,187 @@ def schedule_frontier(
     if max_per_host is not None:
         out = out.where(F.col("fetch_slot") < max_per_host)
     return out
+
+
+def robots_policy(spark: SparkSession, path: str, **kw) -> DataFrame:
+    """robots.txt captures (their own WARC subset in a Common Crawl
+    snapshot) → the per-host rule table: read the shards, keep the
+    /robots.txt responses, decode bodies, parse directives into
+    (host, group, agents, directive, path) via :func:`robots_rules`.
+    ``kw`` goes to `sources.warc.read_warc`.
+
+    HTTP wire codings are decoded by DEFAULT: a robots.txt served with
+    ``Content-Encoding: gzip`` would otherwise parse as byte noise →
+    zero rules → the RFC's allowed-by-default posture, i.e. a silent
+    politeness violation on every path the host disallowed."""
+    from ..sources.warc import read_warc
+
+    kw.setdefault("decode_http_body", True)
+    recs = read_warc(spark, path, **kw).where(
+        F.col("target_uri").endswith("/robots.txt")
+        & (F.col("http_status") == 200)
+    )
+    src = recs.select(
+        F.lower(F.parse_url("target_uri", F.lit("HOST"))).alias("host"),
+        F.decode(F.col("payload").cast("binary"), "ISO-8859-1").alias(
+            "robots_txt"
+        ),
+    )
+    return robots_rules(src)
+
+
+def frontier_allowed(
+    urls: DataFrame, rules: DataFrame, *, agent: str,
+    url_col: str = "url", host_out: str | None = None,
+) -> DataFrame:
+    """Frontier filtering: annotate a URL frame with the robots
+    verdict for `agent` (host/path split JVM-side, longest-match
+    decision map-side against the broadcast rule table, through
+    :func:`robots_allowed`); compose with `bloom.filter_unseen` for the
+    full politeness + novelty frontier pass (:func:`plan_crawl_round`).
+
+    Rules match against PATH + '?' + QUERY (REP/Google semantics —
+    'Disallow: /*?sessionid=' must fire on query-bearing URLs); a
+    bare-host URL's empty path normalizes to '/' (REP: the homepage of
+    a 'Disallow: /' host is blocked — parse_url returns '' there, NOT
+    null, so a coalesce alone misses it); temp columns are
+    collision-safe so a pre-existing host/path column on the input
+    rides through untouched.  ``host_out`` keeps the derived lowercase
+    host under that name instead of dropping it (callers that need the
+    host again — :func:`plan_crawl_round` — avoid a second parse_url
+    pass)."""
+    q = F.parse_url(F.col(url_col), F.lit("QUERY"))
+    path = F.parse_url(F.col(url_col), F.lit("PATH"))
+    path = F.when(
+        path.isNull() | (path == ""), F.lit("/")
+    ).otherwise(path)
+    target = F.concat(
+        path,
+        F.when(q.isNotNull(), F.concat(F.lit("?"), q)).otherwise(
+            F.lit("")
+        ),
+    )
+    parts = urls.withColumn(
+        "_fa_host", F.lower(F.parse_url(F.col(url_col), F.lit("HOST")))
+    ).withColumn("_fa_path", target)
+    out = robots_allowed(
+        rules, parts, agent=agent,
+        host_col="_fa_host", path_col="_fa_path",
+    )
+    if host_out is not None:
+        return out.withColumnRenamed("_fa_host", host_out).drop(
+            "_fa_path"
+        )
+    return out.drop("_fa_host", "_fa_path")
+
+
+def plan_crawl_round(
+    index: DataFrame,
+    rules: DataFrame,
+    seen: tuple[list[int], int, int] | None = None,
+    *,
+    agent: str,
+    delays: DataFrame | None = None,
+    default_delay: float = 1.0,
+    max_per_host: int | None = None,
+    url_col: str = "url",
+    dedup_canonical: bool = False,
+) -> DataFrame:
+    """ONE incremental crawl round, end-to-end — the composition a
+    crawler actually runs each cycle (every leg is individually
+    oracle-gated; this function is the chaining):
+
+    1. `cdx.dedupe_captures` — collapse within-snapshot revisits
+       (same payload digest → earliest capture wins);
+    2. `bloom.filter_unseen` — drop payloads any PREVIOUS crawl's
+       filter has seen (``seen`` = (words, m_bits, k), built by
+       `bloom.build_seen_filter`, merge snapshots with `bloom_merge`;
+       None skips the leg);
+    3. (``dedup_canonical=True``) collapse URLs that share a
+       `canonical_url_key` — the same page under session ids /
+       tracking params / www-vs-bare schedules ONCE (smallest raw
+       URL wins; remaining columns break full-row ties, so the
+       winner is deterministic even when one raw URL survives
+       dedupe with several digests/timestamps).  Spelled as
+       ``groupBy(key).agg(min_by(struct(*cols), ordering))`` — an
+       aggregation partial-combines map-side, so a monster alias
+       group (one page under millions of session ids) never sorts
+       its full depth through a single window task (a ``row_number``
+       window would re-introduce exactly the skew shape
+       :func:`precap_frontier` fixes for hosts);
+    4. :func:`frontier_allowed` — robots verdict for ``agent`` against
+       the parsed rule table (:func:`robots_policy` output), rows the
+       policy forbids dropped;
+    5. :func:`schedule_frontier` — politeness pacing: per-host
+       ``fetch_slot``/``fetch_offset_sec`` off the published crawl
+       delays (:func:`robots_crawl_delays` output via ``delays``;
+       ``default_delay`` where a host published none), deep hosts
+       bounded by ``max_per_host`` (pre-capped before the slot
+       window, so a monster host never serializes one task).
+
+    Returns the paced fetch list: the surviving index rows +
+    ``fetch_slot`` + ``fetch_offset_sec``.  Feed it to
+    `cdx.fetch_records` slot-batch by slot-batch."""
+    from ..functions.url import canonical_url_key
+    from ..sources.cdx import dedupe_captures
+    from ..sources.local import local_frame
+
+    idx = dedupe_captures(index)
+    if seen is not None:
+        words, m_bits, k = seen
+        idx = filter_unseen(idx, "digest", words, m_bits, k)
+    if dedup_canonical:
+        # min_by over a groupBy, NOT a row_number window: partial
+        # aggregation bounds every partition's state regardless of
+        # how deep one canonical group runs.  The ordering struct
+        # leads with the raw URL (contract: smallest wins) and
+        # carries every remaining column as tie-breaker — CDX index
+        # columns are orderable scalars — so the surviving row is
+        # deterministic under any partitioning or retry.
+        cols = idx.columns
+        order = F.struct(
+            F.col(url_col), *[F.col(c) for c in cols if c != url_col]
+        )
+        # NULL urls pass through un-collapsed: a null canonical key is
+        # absence of evidence, not one shared identity — grouping them
+        # would silently discard all but one of N distinct
+        # (offset-fetchable) captures.  canonical_url_key itself never
+        # nulls a NON-null url (it falls back to lower(url) for
+        # unparsable ones).  Spelled as ONE pass — a two-branch
+        # where/union would re-execute the whole upstream
+        # (dedupe_captures window + bloom probe) once per branch — over
+        # a TWO-column group key: non-null urls carry (_ck=canonical
+        # key, _nu=null) and group by the key; null-url rows carry
+        # (_ck=null, _nu=their full row STRUCT), so only byte-identical
+        # null-url rows collapse (the no-op case).  The struct IS the
+        # identity — no delimiter-joined strings, so no
+        # separator/sentinel ambiguity and no hash-collision window.
+        row_struct = F.struct(*[F.col(c) for c in cols])
+        ck = F.when(
+            F.col(url_col).isNotNull(),
+            canonical_url_key(F.col(url_col)),
+        )
+        nu = F.when(F.col(url_col).isNull(), row_struct)
+        idx = (
+            idx.groupBy(ck.alias("_ck"), nu.alias("_nu"))
+            .agg(F.min_by(row_struct, order).alias("_row"))
+            .select("_row.*")
+        )
+    hosted = (
+        frontier_allowed(
+            idx, rules, agent=agent, url_col=url_col,
+            host_out="_cr_host",
+        )
+        .where(F.col("allowed"))
+        .drop("allowed")
+    )
+    if delays is None:
+        delays = local_frame(index.sparkSession, [], "host string, crawl_delay double")
+    return schedule_frontier(
+        hosted,
+        delays,
+        host_col="_cr_host",
+        url_col=url_col,
+        default_delay=default_delay,
+        max_per_host=max_per_host,
+    ).drop("_cr_host")

@@ -275,6 +275,54 @@ def pack_sequences(
     return chunks.groupBy(group_col).applyInPandas(_pack, out_schema)
 
 
+def pack_for_training(
+    docs: DataFrame,
+    merges: list[tuple[str, str]],
+    *,
+    budget: int = 2048,
+    col: str = "text",
+    group_col: str = "source",
+    chunk_tokens: int | None = None,
+    overlap: int = 16,
+) -> DataFrame:
+    """Chunks packed into model-token budgets: BPE-exact counts
+    (`functions.bpe`, ``merges`` from `bpe.train_bpe`) feeding the
+    greedy per-group packer :func:`pack_sequences`.
+
+    ``chunk_tokens`` routes documents through :func:`chunk_documents`
+    FIRST (overlapping whitespace windows, real chunk_idx), so a
+    document longer than ``budget`` splits instead of riding through
+    as one over-budget "chunk" (the default whole-doc path emits an
+    oversized sequence per pack_sequences' oversized-chunk rule — fine
+    when the caller pre-chunked, a trap otherwise).  Pick
+    ``chunk_tokens`` comfortably below ``budget`` — BPE counts run
+    ABOVE whitespace counts (subword splits), so budget//2 is a safe
+    default choice.  The default ``None`` keeps the
+    caller-pre-chunked contract."""
+    from ..functions import bpe
+
+    src = docs
+    text_col = col
+    if chunk_tokens is not None:
+        src = chunk_documents(
+            docs.select("doc_id", F.col(col).alias("text")),
+            chunk_tokens=chunk_tokens,
+            overlap=overlap,
+        ).join(docs.select("doc_id", group_col), "doc_id")
+        text_col = "chunk"
+    # pack_sequences emits an all-long schema: derive a numeric group
+    # key from the (possibly string) grouping column
+    chunks = src.select(
+        F.xxhash64(F.col(group_col)).alias("group_key"),
+        F.col("doc_id"),
+        (F.col("chunk_idx") if chunk_tokens is not None else F.lit(0)).alias(
+            "chunk_idx"
+        ),
+        bpe.bpe_token_count(text_col, merges).alias("n_tokens"),
+    )
+    return pack_sequences(chunks, budget=budget, group_col="group_key", tokens_col="n_tokens")
+
+
 def corpus_report(
     docs: DataFrame,
     *,

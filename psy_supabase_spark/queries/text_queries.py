@@ -950,7 +950,7 @@ def doc_adjacent_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crawl-delay parser over the same robots grammar — the star group
     # publishes Crawl-delay 1{j} (10/11/12 s), so slot order (per-host
     # url window) AND the delay multiplication are both on the gated
-    # path; the facade api.plan_crawl_round chains exactly these legs.
+    # path; robots.plan_crawl_round chains exactly these legs.
     fr_urls = docs.select(
         "doc_id",
         F.concat(F.lit("h"), rb_j).alias("fr_host"),

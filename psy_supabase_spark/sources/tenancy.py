@@ -92,9 +92,20 @@ class TenantStore:
     def _path(self, table: str) -> str:
         return os.path.join(self.base, table)
 
+    def _fs(self, table: str):
+        """``(FileSystem, Path class, table root Path)``: the table
+        directory's own Hadoop filesystem, so probes and renames work on
+        any warehouse URI (s3a://, hdfs://, file://), not just a local
+        disk."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        root = hpath(self._path(table))
+        return root.getFileSystem(self.spark._jsc.hadoopConfiguration()), hpath, root
+
     def table_exists(self, table: str) -> bool:
-        """S8 parity (`get_schema_exists`, query.txt:17-26)."""
-        return os.path.isdir(self._path(table))
+        """S8 parity (`get_schema_exists`, query.txt:17-26): whether an
+        append has created the table's directory."""
+        fs, _, root = self._fs(table)
+        return bool(fs.exists(root))
 
     def append(
         self,
@@ -265,10 +276,7 @@ class TenantStore:
         import math
 
         spark = self.spark
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path
-        root = hpath(self._path(table))
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hpath, root = self._fs(table)
         if not fs.exists(root):  # nothing appended yet: nothing to do
             return 0
         if user_id is not None:

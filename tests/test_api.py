@@ -1,6 +1,8 @@
-"""End-to-end reference-parity lifecycle through the PsyEngine facade:
+"""End-to-end reference-parity lifecycle through PsyEngine:
 ingest → history → JSON queries → retrieval (both score semantics) → IVF
-→ context building → training export (the §3.1 /chat flow, batch)."""
+→ context building → training export (the §3.1 /chat flow, batch); the
+tenant store under it; and the corpus-pipeline and crawl module functions
+that have no reference entry point (the ``*_facade*`` tests)."""
 
 from __future__ import annotations
 
@@ -10,7 +12,26 @@ import pytest
 from pyspark.sql import functions as F
 
 from psy_supabase_spark.api import PsyEngine
-from psy_supabase_spark.operators import ml_udfs
+from psy_supabase_spark.functions import pii
+from psy_supabase_spark.functions.html import html_to_text
+from psy_supabase_spark.functions.url import blocklist_filter
+from psy_supabase_spark.operators import (
+    bloom,
+    decontam,
+    dedup,
+    hll,
+    linkgraph,
+    lm,
+    lsh,
+    ml_udfs,
+    robots,
+    semdedup,
+    substr,
+    textanalysis,
+)
+from psy_supabase_spark.sources import cdx, warc
+from psy_supabase_spark.sources.jsonl import write_jsonl
+from psy_supabase_spark.sources.shards import write_training_shards
 
 
 @pytest.fixture(scope="module")
@@ -88,16 +109,21 @@ def test_batch_serving_both_routes(engine, spark):
     indexed = engine.find_similar_documents_batch("alice", queries, k=1, nprobe=2)
     got_idx = {r.query_id: r.content for r in indexed.collect()}
     assert got_idx == got  # full probe == brute force
-    # the train-free LSH route: same winners (self-hit-grade queries
-    # always share every band with their nearest doc)
-    lsh_hits = engine.find_similar_documents_batch("alice", queries, k=1, method="lsh")
-    got_lsh = {r.query_id: r.content for r in lsh_hits.collect()}
+    # the train-free LSH route over the tenant scan: same winners
+    # (self-hit-grade queries always share every band with their
+    # nearest doc)
+    kb = engine.store.scan("knowledge_base", user_id="alice")
+
+    def srp(k, **kw):
+        return lsh.srp_topk(
+            kb, queries, k=k, id_col="content", vec_col="embedding", dim=3, **kw
+        ).select("query_id", "content", "similarity", "rank")
+
+    got_lsh = {r.query_id: r.content for r in srp(1).collect()}
     assert got_lsh == got
     # exact-k LSH route: k exceeds what the buckets can return, so the
     # brute completion must serve full lists identical to the brute route
-    exact_k = engine.find_similar_documents_batch(
-        "alice", queries, k=3, method="lsh_exact_k"
-    )
+    exact_k = srp(3, brute_fallback=True)
     brute_k3 = engine.find_similar_documents_batch("alice", queries, k=3)
     as_rows = lambda df: sorted(  # noqa: E731
         (r.query_id, r.rank, r.content, r.similarity) for r in df.collect()
@@ -166,7 +192,7 @@ def test_clean_responses_and_topic_facade(engine, spark):
     assert ents.entities == ["panic"]  # gazetteer hit; 'anxious' != 'anxiety'
 
 
-def test_pipeline_facade_decontam_pii_export(engine, spark, tmp_path):
+def test_pipeline_facade_decontam_pii_export(spark, tmp_path):
     corpus = spark.createDataFrame(
         [
             (0, "mail me at a.b@x.org about the quick brown fox jumps over the lazy dog"),
@@ -177,17 +203,17 @@ def test_pipeline_facade_decontam_pii_export(engine, spark, tmp_path):
     bench = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog",)], "text string"
     )
-    clean = engine.decontaminate(corpus, bench)
+    clean = decontam.decontaminate(corpus, bench)
     assert [r.doc_id for r in clean.collect()] == [1]
 
-    redacted = engine.redact_pii(corpus)
+    redacted = pii.redact_with_counts(corpus)
     rows = {r.doc_id: r for r in redacted.collect()}
     # counts audit the ORIGINAL text; the text column is redacted after
     assert rows[0].n_pii_email == 1 and "[EMAIL]" in rows[0].text
     assert rows[1].n_pii_email == 0 and "[EMAIL]" not in rows[1].text
 
     out = str(tmp_path / "export")
-    engine.export_training_jsonl(redacted, out, num_shards=1)
+    write_jsonl(redacted, out, num_shards=1)
     from psy_supabase_spark.sources.jsonl import read_jsonl
 
     back = read_jsonl(
@@ -230,25 +256,25 @@ def test_decontam_is_streaming_compatible(spark, tmp_path):
     assert got == [1]
 
 
-def test_line_dedup_and_url_facades(engine, spark):
+def test_line_dedup_and_url_facades(spark):
     docs = spark.createDataFrame(
         [(1, "keep me\nSHARED"), (2, "SHARED\nmine"), (3, "see https://bad.example.com/x")],
         "doc_id long, text string",
     )
-    lines = {r.doc_id: r.text for r in engine.dedup_lines(docs).collect()}
+    lines = {r.doc_id: r.text for r in dedup.dedup_lines(docs).collect()}
     assert lines[1] == "keep me\nSHARED" and lines[2] == "mine"
-    kept = {r.doc_id for r in engine.filter_blocked_urls(docs, ["example.com"]).collect()}
+    kept = {r.doc_id for r in blocklist_filter(docs, ["example.com"]).collect()}
     assert kept == {1, 2}
 
 
-def test_fluency_semdedup_shard_facades(engine, spark, tmp_path):
+def test_fluency_semdedup_shard_facades(spark, tmp_path):
     docs = spark.createDataFrame(
         [(1, "a b a b a b"), (2, "a b a b"), (3, "zq xv")],
         "doc_id long, text string",
     )
     # train on the clean reference slice (the CCNet setup), score everything
     ref = docs.where(F.col("doc_id") < 3)
-    scored = {r.doc_id: r.ppl for r in engine.score_fluency(docs, train_on=ref).collect()}
+    scored = {r.doc_id: r.ppl for r in lm.score_fluency(docs, train_on=ref).collect()}
     assert scored[3] > scored[1]  # OOV gibberish scores worse than modal text
 
     emb = spark.createDataFrame(
@@ -257,39 +283,39 @@ def test_fluency_semdedup_shard_facades(engine, spark, tmp_path):
     )
     kept = {
         r.vec_id
-        for r in engine.semantic_dedup(
+        for r in semdedup.semdedup(
             emb, 0.99, centers=[[1.0, 0.0], [0.0, 1.0]]
         ).collect()
     }
     assert 3 in kept and len(kept) == 2  # one of the near-identical pair dropped
 
-    audit = engine.export_training_shards(docs, str(tmp_path / "sh"), 2).collect()
+    audit = write_training_shards(docs, str(tmp_path / "sh"), 2).collect()
     assert sum(r.n_rows for r in audit) == 3
 
 
-def test_substr_html_report_facades(engine, spark):
+def test_substr_html_report_facades(spark):
     boiler = " ".join(f"w{k}" for k in range(15))
     docs = spark.createDataFrame(
         [(1, f"intro {boiler} outro"), (2, f"other {boiler} tail"), (3, "clean doc")],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r.text for r in engine.excise_duplicate_spans(docs, 15).collect()}
+    out = {r.doc_id: r.text for r in substr.excise_duplicate_spans(docs, 15).collect()}
     assert boiler in out[1] and boiler not in out[2] and out[3] == "clean doc"
 
     html = spark.createDataFrame(
         [(1, "<p>hello &amp; world</p>")], "doc_id long, text string"
     )
-    assert engine.extract_html(html).head().text == "hello & world"
+    assert html.withColumn("text", html_to_text("text")).head().text == "hello & world"
 
-    rep = engine.corpus_report(docs.withColumn("lang", F.lit("en")).withColumn("source", F.lit("t")), group_cols=("lang",))
+    rep = textanalysis.corpus_report(docs.withColumn("lang", F.lit("en")).withColumn("source", F.lit("t")), group_cols=("lang",))
     rows = rep.collect()
     assert {r["lang"] for r in rows} == {None, "en"}
 
 
-def test_soft_dedup_weights_facade(engine, spark):
+def test_soft_dedup_weights_facade(spark):
     docs = spark.createDataFrame([(i, f"d{i}") for i in range(4)], "doc_id long, text string")
     pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
-    w = {r.doc_id: r.sample_weight for r in engine.soft_dedup_weights(docs, pairs).collect()}
+    w = {r.doc_id: r.sample_weight for r in dedup.duplicate_weights(docs, pairs).collect()}
     assert w == {0: 0.5, 1: 0.5, 2: 1.0, 3: 1.0}
 
 
@@ -444,7 +470,7 @@ def test_single_query_wide_job_count(spark, tmp_path):
     assert len(jobs) <= 3, sorted(jobs)
 
 
-def test_ingest_warc_wet_facades(engine, tmp_path):
+def test_ingest_warc_wet_facades(spark, tmp_path):
     import gzip
 
     def _rec(wtype, ctype, payload):
@@ -461,29 +487,29 @@ def test_ingest_warc_wet_facades(engine, tmp_path):
     (d / "a.warc.gz").write_bytes(
         gzip.compress(_rec("response", "application/http; msgtype=response", http))
     )
-    rows = engine.ingest_warc(str(d)).collect()
+    rows = warc.read_warc(spark, str(d)).collect()
     assert len(rows) == 1 and bytes(rows[0].payload) == b"<p>hi</p>"
-    assert engine.ingest_warc(str(d), streaming=True).isStreaming
+    assert warc.read_warc_stream(spark, str(d)).isStreaming
 
     w = tmp_path / "wet"
     w.mkdir()
     (w / "b.warc.wet.gz").write_bytes(
         gzip.compress(_rec("conversion", "text/plain", b"wet text"))
     )
-    rows = engine.ingest_wet(str(w)).collect()
+    rows = warc.read_wet(spark, str(w)).collect()
     assert len(rows) == 1 and rows[0].text == "wet text"
-    assert engine.ingest_wet(str(w), streaming=True).isStreaming
+    assert warc.read_wet_stream(spark, str(w)).isStreaming
 
     m = tmp_path / "wat"
     m.mkdir()
     (m / "c.warc.wat.gz").write_bytes(
         gzip.compress(_rec("metadata", "application/json", b'{"Envelope":{}}'))
     )
-    rows = engine.ingest_wat(str(m)).collect()
+    rows = warc.read_wat(spark, str(m)).collect()
     assert len(rows) == 1 and rows[0].json == '{"Envelope":{}}' 
 
 
-def test_crawl_index_and_linkgraph_facades(engine, tmp_path):
+def test_crawl_index_and_linkgraph_facades(spark, tmp_path):
     import gzip
 
     def _rec(wtype, ctype, payload, uri="http://x/1"):
@@ -505,18 +531,16 @@ def test_crawl_index_and_linkgraph_facades(engine, tmp_path):
                              http_err, "http://x/drop"))
     )
     # index → filter → fetch: only the 200 record's bytes come back
-    idx = engine.index_crawl(str(d))
+    idx = cdx.index_warc_members(spark, str(d))
     assert idx.count() == 2
     from pyspark.sql import functions as F
 
-    rows = engine.fetch_crawl_records(idx.where(F.col("status") == 200)).collect()
+    rows = cdx.fetch_records(idx.where(F.col("status") == 200)).collect()
     assert len(rows) == 1 and bytes(rows[0].payload) == b"<p>keep</p>"
-    # published-index round trip through the facade
-    from psy_supabase_spark.sources.cdx import format_cdxj
-
+    # published-index round trip
     cdx_dir = tmp_path / "cdx"
-    format_cdxj(idx).write.text(str(cdx_dir))
-    assert engine.read_crawl_index(str(cdx_dir)).count() == 2
+    cdx.format_cdxj(idx).write.text(str(cdx_dir))
+    assert cdx.read_cdx(spark, str(cdx_dir)).count() == 2
 
     m = tmp_path / "wat"
     m.mkdir()
@@ -528,18 +552,18 @@ def test_crawl_index_and_linkgraph_facades(engine, tmp_path):
     (m / "c.warc.wat.gz").write_bytes(
         gzip.compress(_rec("metadata", "application/json", env.encode()))
     )
-    links = engine.outlinks(str(m))
+    links = warc.wat_links(warc.read_wat(spark, str(m)))
     assert sorted(r.link_url for r in links.collect()) == [
         "http://x/other", "http://y.example/z",
     ]
-    stats = engine.link_graph_stats(links).collect()
+    stats = linkgraph.page_link_stats(links).collect()
     assert len(stats) == 1
     assert (stats[0].out_degree, stats[0].n_intra, stats[0].n_inter) == (2, 1, 1)
-    top = engine.top_linked_hosts(links, k=1).collect()
+    top = linkgraph.top_linked_hosts(links, k=1).collect()
     assert [(r.host, r.in_degree) for r in top] == [("x", 1)]
 
 
-def test_rank_hosts_and_seen_filter_facades(engine, spark):
+def test_rank_hosts_and_seen_filter_facades(spark):
     links = spark.createDataFrame(
         [
             ("http://a.example/p", "http://b.example/x"),
@@ -548,7 +572,10 @@ def test_rank_hosts_and_seen_filter_facades(engine, spark):
         ],
         "target_uri string, link_url string",
     )
-    ranks = {r.host: r.pagerank for r in engine.rank_hosts(links, iterations=5).collect()}
+    ranks = {
+        r.host: r.pagerank
+        for r in linkgraph.host_pagerank(linkgraph.with_hosts(links), iterations=5).collect()
+    }
     assert set(ranks) == {"a.example", "b.example", "c.example"}
     # c receives 2 in-links, a receives none: rank order follows
     assert ranks["c.example"] > ranks["b.example"] > ranks["a.example"]
@@ -556,13 +583,13 @@ def test_rank_hosts_and_seen_filter_facades(engine, spark):
 
     prev = spark.createDataFrame([(f"u{i}",) for i in range(0, 100, 2)], "url string")
     today = spark.createDataFrame([(f"u{i}",) for i in range(100)], "url string")
-    seen = engine.build_seen_filter(prev, "url", fp_rate=0.01)
-    new = {r.url for r in engine.filter_unseen(today, "url", seen).collect()}
+    seen = bloom.build_seen_filter(prev, "url", fp_rate=0.01)
+    new = {r.url for r in bloom.filter_unseen(today, "url", *seen).collect()}
     assert new.isdisjoint({f"u{i}" for i in range(0, 100, 2)})
     assert len(new) >= 45  # odds minus at most a few false positives
 
 
-def test_new_captures_cross_snapshot(engine, spark):
+def test_new_captures_cross_snapshot(spark):
     """Yesterday's digests are filtered out map-side; only genuinely new
     content survives to be fetched (minus nothing: misses are exact)."""
     prev = spark.createDataFrame(
@@ -572,13 +599,13 @@ def test_new_captures_cross_snapshot(engine, spark):
         [(f"u{i}", f"sha1:{i:032d}") for i in range(80)],
         "url string, digest string",
     )
-    seen = engine.build_seen_filter(prev, "digest", fp_rate=0.001)
-    new = {r.url for r in engine.new_captures(today, seen).collect()}
+    seen = bloom.build_seen_filter(prev, "digest", fp_rate=0.001)
+    new = {r.url for r in bloom.filter_unseen(today, "digest", *seen).collect()}
     assert new.isdisjoint({f"u{i}" for i in range(50)})
     assert len(new) >= 25  # the 30 new digests minus at most a few fps
 
 
-def test_robots_policy_and_frontier_facades(engine, spark, tmp_path):
+def test_robots_policy_and_frontier_facades(spark, tmp_path):
     import gzip
 
     robots_txt = b"User-agent: *\nDisallow: /nope\n"
@@ -592,7 +619,7 @@ def test_robots_policy_and_frontier_facades(engine, spark, tmp_path):
     d = tmp_path / "rb"
     d.mkdir()
     (d / "r.warc.gz").write_bytes(gzip.compress(rec))
-    rules = engine.robots_policy(str(d))
+    rules = robots.robots_policy(spark, str(d))
     assert [(r.host, r.directive, r.path) for r in rules.collect()] == [
         ("x.example", "disallow", "/nope")
     ]
@@ -602,7 +629,7 @@ def test_robots_policy_and_frontier_facades(engine, spark, tmp_path):
         "url string",
     )
     got = {r.url: r.allowed
-           for r in engine.frontier_allowed(urls, rules, agent="bot").collect()}
+           for r in robots.frontier_allowed(urls, rules, agent="bot").collect()}
     assert got == {
         "http://x.example/nope/1": False,
         "http://x.example/ok": True,
@@ -610,7 +637,7 @@ def test_robots_policy_and_frontier_facades(engine, spark, tmp_path):
     }
 
 
-def test_plan_crawl_round_facade(engine, spark):
+def test_plan_crawl_round_facade(spark):
     """dedupe_captures → filter_unseen → frontier_allowed →
     schedule_frontier as one call: revisits collapse, seen digests
     drop, robots-forbidden URLs drop, survivors get paced slots off
@@ -639,7 +666,7 @@ def test_plan_crawl_round_facade(engine, spark):
     )
     m, k = BL.bloom_params(100, 0.001)
     seen = (BL.bloom_local(["d2"], m, k), m, k)
-    out = engine.plan_crawl_round(
+    out = robots.plan_crawl_round(
         index, rules, seen, agent="bot", delays=delays
     )
     got = {r.url: (r.fetch_slot, r.fetch_offset_sec) for r in out.collect()}
@@ -658,7 +685,7 @@ def test_plan_crawl_round_facade(engine, spark):
         ],
         "url string, digest string, timestamp string, filename string, offset long",
     )
-    out2 = engine.plan_crawl_round(
+    out2 = robots.plan_crawl_round(
         noisy, rules, agent="bot", delays=delays, dedup_canonical=True
     )
     assert sorted(r.url for r in out2.collect()) == [
@@ -667,7 +694,7 @@ def test_plan_crawl_round_facade(engine, spark):
     ]
 
 
-def test_snapshot_stats_hll(engine, spark):
+def test_snapshot_stats_hll(spark):
     """Approximate cardinality card over a snapshot index: near-exact
     at small scale (linear-counting branch), host sketch derived from
     the url column, absent columns skipped."""
@@ -675,21 +702,21 @@ def test_snapshot_stats_hll(engine, spark):
         [(f"http://h{i % 7}.example/p/{i}", f"d{i % 40}") for i in range(200)],
         "url string, digest string",
     )
-    stats = engine.snapshot_stats(idx)
+    stats = hll.snapshot_stats(idx)
     assert abs(stats["approx_distinct_url"] - 200) < 12
     assert abs(stats["approx_distinct_digest"] - 40) < 5
     assert abs(stats["approx_distinct_host"] - 7) < 2
-    only_digest = engine.snapshot_stats(idx.select("digest"))
+    only_digest = hll.snapshot_stats(idx.select("digest"))
     assert set(only_digest) == {"approx_distinct_digest"}
     # an index carrying BOTH a host column and url: the url-derived
     # sketch owns the 'host' tag (r14 review: tagging both under one
     # tag estimated the UNION of the two value sets, matching neither)
     both = idx.withColumn("host", F.upper(F.lit("ONLY-ONE-VALUE")))
-    with_both = engine.snapshot_stats(both, cols=("digest", "host"))
+    with_both = hll.snapshot_stats(both, cols=("digest", "host"))
     assert abs(with_both["approx_distinct_host"] - 7) < 2
 
 
-def test_frontier_allowed_matches_query_string(engine, spark):
+def test_frontier_allowed_matches_query_string(spark):
     """REP rules match path+query ('Disallow: /*?sessionid=' must fire
     on query-bearing URLs), and pre-existing host/path columns on the
     input survive untouched (r11 ADVICE)."""
@@ -705,7 +732,7 @@ def test_frontier_allowed_matches_query_string(engine, spark):
          ("http://x.example/p/x", "keepme2", "keptpath2")],
         "url string, host string, path string",
     )
-    out = engine.frontier_allowed(urls, rules, agent="bot")
+    out = robots.frontier_allowed(urls, rules, agent="bot")
     assert set(out.columns) == {"url", "host", "path", "allowed"}
     # bare-host and query-only URLs normalize their empty path to '/':
     # the homepage of a fully-blocked host must be blocked (parse_url
@@ -722,7 +749,7 @@ def test_frontier_allowed_matches_query_string(engine, spark):
     )
     verdicts = {
         r.url: r.allowed
-        for r in engine.frontier_allowed(
+        for r in robots.frontier_allowed(
             bare, blocked_rules, agent="bot"
         ).collect()
     }
@@ -739,7 +766,7 @@ def test_frontier_allowed_matches_query_string(engine, spark):
     assert rows["http://x.example/p/x"].path == "keptpath2"
 
 
-def test_plan_crawl_round_canonical_dedup_skew_safe(engine, spark):
+def test_plan_crawl_round_canonical_dedup_skew_safe(spark):
     """The canonical-URL collapse is an AGGREGATION (min_by over
     groupBy), not a row_number window (r12 verdict: a monster alias
     group — one page under ~100× more session ids than any other —
@@ -769,7 +796,7 @@ def test_plan_crawl_round_canonical_dedup_skew_safe(engine, spark):
         monster + rest,
         "url string, digest string, timestamp string, filename string, offset long",
     )
-    out = engine.plan_crawl_round(
+    out = robots.plan_crawl_round(
         idx, robots_rules(rules), agent="bot", dedup_canonical=True
     )
     plan = physical_plan(out)
@@ -806,7 +833,7 @@ def test_plan_crawl_round_canonical_dedup_skew_safe(engine, spark):
     assert got == want
 
 
-def test_plan_crawl_round_canonical_dedup_deterministic_ties(engine, spark):
+def test_plan_crawl_round_canonical_dedup_deterministic_ties(spark):
     """One raw URL surviving dedupe with different digests/timestamps:
     the full-row ordering struct breaks the tie deterministically (r12
     ADVICE: the window's url-only orderBy picked an arbitrary row, so
@@ -829,7 +856,7 @@ def test_plan_crawl_round_canonical_dedup_deterministic_ties(engine, spark):
         "url string, digest string, timestamp string, filename string, offset long",
     )
     for _ in range(3):
-        rows = engine.plan_crawl_round(
+        rows = robots.plan_crawl_round(
             idx, rules, agent="bot", dedup_canonical=True
         ).collect()
         assert len(rows) == 1
@@ -838,7 +865,7 @@ def test_plan_crawl_round_canonical_dedup_deterministic_ties(engine, spark):
         assert (r.digest, r.offset) == ("aa", 100)
 
 
-def test_snapshot_stats_grouped(engine, spark):
+def test_snapshot_stats_grouped(spark):
     """Per-group cardinality cards (r12 verdict): by=('host',) and
     by=('day',) return one row per group with near-exact counts at
     linear-counting scale; unknown keys raise."""
@@ -853,7 +880,7 @@ def test_snapshot_stats_grouped(engine, spark):
         ],
         "url string, digest string, timestamp string",
     )
-    by_host = engine.snapshot_stats(idx, by=("host",)).collect()
+    by_host = hll.snapshot_stats(idx, by=("host",)).collect()
     got = {r.host: r for r in by_host}
     assert sorted(got) == [
         "h0.example", "h1.example", "h2.example",
@@ -862,7 +889,7 @@ def test_snapshot_stats_grouped(engine, spark):
         assert abs(r.approx_distinct_url - 40) < 5
         # digests repeat across hosts: 20 distinct each
         assert abs(r.approx_distinct_digest - 20) < 4
-    by_day = engine.snapshot_stats(idx, by=("day",)).collect()
+    by_day = hll.snapshot_stats(idx, by=("day",)).collect()
     days = {r.day: r.approx_distinct_url for r in by_day}
     assert sorted(days) == ["20240101", "20240102"]
     for v in days.values():
@@ -870,10 +897,10 @@ def test_snapshot_stats_grouped(engine, spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        engine.snapshot_stats(idx, by=("nope",))
+        hll.snapshot_stats(idx, by=("nope",))
 
 
-def test_snapshot_stats_grouped_edge_inputs(engine, spark):
+def test_snapshot_stats_grouped_edge_inputs(spark):
     """Operational edge inputs (r13 review): an EMPTY index returns an
     empty frame with the right schema (not an inference crash), a
     by-key that is also a sketched column is excluded (never a
@@ -881,7 +908,7 @@ def test_snapshot_stats_grouped_edge_inputs(engine, spark):
     per itself'), and a group with no non-null keys in one sketched
     column estimates 0.0, not null."""
     empty = spark.createDataFrame([], "url string, digest string")
-    out = engine.snapshot_stats(empty, by=("host",))
+    out = hll.snapshot_stats(empty, by=("host",))
     assert out.columns == [
         "host", "approx_distinct_url", "approx_distinct_digest",
     ]
@@ -891,7 +918,7 @@ def test_snapshot_stats_grouped_edge_inputs(engine, spark):
         [(f"http://h{i % 2}.example/p/{i}", f"d{i % 4}") for i in range(40)],
         "url string, digest string",
     )
-    by_digest = engine.snapshot_stats(idx, by=("digest",))
+    by_digest = hll.snapshot_stats(idx, by=("digest",))
     assert by_digest.columns == ["digest", "approx_distinct_url"]
     assert by_digest.count() == 4
     # one host's digests all null -> 0.0 for that group, never null
@@ -900,12 +927,12 @@ def test_snapshot_stats_grouped_edge_inputs(engine, spark):
          ("http://b.example/1", None), ("http://b.example/2", None)],
         "url string, digest string",
     )
-    rows = {r.host: r for r in engine.snapshot_stats(mixed, by=("host",)).collect()}
+    rows = {r.host: r for r in hll.snapshot_stats(mixed, by=("host",)).collect()}
     assert rows["b.example"].approx_distinct_digest == 0.0
     assert abs(rows["a.example"].approx_distinct_digest - 2) < 1
 
 
-def test_snapshot_stats_grouped_is_single_pass(engine, spark):
+def test_snapshot_stats_grouped_is_single_pass(spark):
     """The grouped card reads the index ONCE (r13 verdict: the old
     spelling ran one register job per sketched column plus a distinct
     collect for the group universe — 1 + n_cols + 1 scans of a 100 TB
@@ -926,7 +953,7 @@ def test_snapshot_stats_grouped_is_single_pass(engine, spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup("snap_single_pass", "grouped card job count")
     try:
-        out = engine.snapshot_stats(idx, by=("host", "day"))
+        out = hll.snapshot_stats(idx, by=("host", "day"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
@@ -936,7 +963,7 @@ def test_snapshot_stats_grouped_is_single_pass(engine, spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup("snap_single_pass_scalar", "scalar card job count")
     try:
-        scalar = engine.snapshot_stats(idx)
+        scalar = hll.snapshot_stats(idx)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
@@ -992,17 +1019,7 @@ def test_ivf_index_keys_on_sanitized_tenant(spark, tmp_path):
     assert hits[0].content == "newdoc"
 
 
-def test_batch_method_validation(engine, spark):
-    """An unrecognized method raises instead of silently routing to a
-    different algorithm (r13 review)."""
-    queries = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "query_id long, query_embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="unknown method"):
-        engine.find_similar_documents_batch("alice", queries, method="LSH")
-
-
-def test_plan_crawl_round_null_url_and_null_digest_pass_through(engine, spark):
+def test_plan_crawl_round_null_url_and_null_digest_pass_through(spark):
     """Null-evidence rows survive the dedup legs (r13 review): null
     digests pass filter_unseen (no membership evidence — they are
     offset-fetchable captures), and null URLs pass dedup_canonical
@@ -1027,7 +1044,7 @@ def test_plan_crawl_round_null_url_and_null_digest_pass_through(engine, spark):
     )
     m, k = BL.bloom_params(10, 0.01)
     seen = (BL.bloom_local(["dX"], m, k), m, k)
-    out = engine.plan_crawl_round(
+    out = robots.plan_crawl_round(
         idx, rules, seen, agent="bot", dedup_canonical=True
     ).collect()
     # both null-digest rows survived the bloom leg; both null-URL rows
@@ -1212,6 +1229,84 @@ def test_recent_history_job_count(spark, tmp_path):
     assert [r.question for r in rows] == ["q1", "q2"]
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 2, sorted(jobs)
+
+
+def test_history_reads_order_one_append_by_stored_id(spark, tmp_path):
+    """One 6-row append stamps ONE created_at, and compact rewrites the
+    rows across files in another order: the history, topic and
+    high-quality reads still order the turns by the stored
+    interaction_id."""
+    from psy_supabase_spark.sources.local import local_frame
+
+    def meta(overlap):
+        return json.dumps(
+            {"topic": "anxiety", "effectiveness": {"term_overlap": overlap, "template_adherence": "low"}}
+        )
+
+    high = {1, 3, 4, 6}  # the turns the high-quality read matches
+    eng = PsyEngine(spark, str(tmp_path / "wh_turns"))
+    turns = local_frame(
+        spark,
+        [(None, f"q{i}", f"a{i}", meta(0.9 if i in high else 0.1)) for i in range(1, 7)],
+        "context string, question string, answer string, metadata string",
+    )
+    eng.store.append("interactions", turns, user_id="alice", ordinal_col="interaction_id")
+    assert eng.store.compact("interactions", user_id="alice", target_rows_per_file=2) == 3
+    history = eng.get_conversation_history("alice").collect()
+    assert [(r.interaction_id, r.question) for r in history] == [(i, f"q{i}") for i in range(1, 7)]
+    assert len({r.created_at for r in history}) == 1  # the tie this guards
+    topical = eng.get_topic_interactions("alice", "anxiety", limit=3).collect()
+    assert [r.interaction_id for r in topical] == [6, 5, 4]
+    hq = eng.get_high_quality_interactions("alice", "anxiety", limit=2).collect()
+    assert [r.interaction_id for r in hq] == [6, 4]
+    examples = eng.generate_training_examples("alice", "anxiety").collect()
+    assert [r.input for r in examples] == ["q6", "q4", "q3", "q1"]
+
+
+def test_history_reads_legacy_warehouse_turn_order(spark, tmp_path):
+    """Files without interaction_id order the turns by LEGACY_TURN_ORDER:
+    created_at, then the text columns where one append tied it."""
+    from psy_supabase_spark.api import LEGACY_TURN_ORDER
+
+    wh = str(tmp_path / "wh_legacy_turns")
+    (
+        spark.createDataFrame(
+            [("c", f"q{i}", "a", json.dumps({"topic": "anxiety"}), ts)
+             for i, ts in ((3, "2026-01-01 00:00:01"), (2, "2026-01-01 00:00:01"), (1, "2026-01-01 00:00:00"))],
+            "context string, question string, answer string, metadata string, ts string",
+        )
+        .withColumn("created_at", F.to_timestamp("ts"))
+        .drop("ts")
+        .withColumn("user_id", F.lit("alice"))
+        .write.partitionBy("user_id")
+        .parquet(wh + "/interactions")
+    )
+    eng = PsyEngine(spark, wh)
+    scanned = eng.store.scan("interactions", user_id="alice")
+    assert "interaction_id" not in scanned.columns
+    want = [r.question for r in scanned.orderBy(*LEGACY_TURN_ORDER).collect()]
+    assert want == ["q1", "q2", "q3"]
+    assert [r.question for r in eng.get_conversation_history("alice").collect()] == want
+    newest = [r.question for r in eng.get_topic_interactions("alice", "anxiety", limit=2).collect()]
+    assert newest == ["q3", "q2"]
+
+
+def test_table_exists_on_a_uri_warehouse(spark, tmp_path):
+    """A warehouse given as a file:// URI: table_exists asks the path's
+    Hadoop filesystem, so it is False before the first append and True
+    after it."""
+    from psy_supabase_spark.sources.local import local_frame
+    from psy_supabase_spark.sources.tenancy import TenantStore
+
+    store = TenantStore(spark, "file://" + str(tmp_path / "wh_uri"))
+    assert not store.table_exists("interactions")
+    row = local_frame(
+        spark, [(None, "q", "a", None)],
+        "context string, question string, answer string, metadata string",
+    )
+    store.append("interactions", row, user_id="alice")
+    assert store.scan("interactions", user_id="alice").count() == 1
+    assert store.table_exists("interactions")
 
 
 def test_tenant_scan_preserves_non_canonical_columns(spark, tmp_path):
@@ -1413,7 +1508,7 @@ def test_compact_swap_failed_restore_names_the_files(tmp_path):
     assert sorted(os.listdir(aside)) == ["part-old-1.parquet", "part-old-2.parquet"]
 
 
-def test_pack_for_training_chunks_oversized_docs(engine, spark):
+def test_pack_for_training_chunks_oversized_docs(spark):
     """chunk_tokens splits an over-budget document into real chunks
     before packing (r13 review: the whole-doc path rode a 10x-budget
     doc through as one oversized sequence)."""
@@ -1422,7 +1517,7 @@ def test_pack_for_training_chunks_oversized_docs(engine, spark):
         [(0, big, "s1"), (1, "tiny doc", "s1")],
         "doc_id long, text string, source string",
     )
-    packed = engine.pack_for_training(
+    packed = textanalysis.pack_for_training(
         docs, merges=[], budget=100, chunk_tokens=50, overlap=10
     )
     rows = packed.collect()
@@ -1431,7 +1526,7 @@ def test_pack_for_training_chunks_oversized_docs(engine, spark):
     assert len({(r.doc_id, r.chunk_idx) for r in rows if r.doc_id == 0}) > 1
 
 
-def test_robots_policy_decodes_wire_encoded_captures(engine, tmp_path):
+def test_robots_policy_decodes_wire_encoded_captures(spark, tmp_path):
     """A robots.txt capture served with Content-Encoding: gzip parses
     to its real rules (r13 review: without default decoding it parsed
     as byte noise -> zero rules -> allowed-by-default, a silent
@@ -1453,13 +1548,13 @@ def test_robots_policy_decodes_wire_encoded_captures(engine, tmp_path):
     d = tmp_path / "rbgz"
     d.mkdir()
     (d / "r.warc.gz").write_bytes(gzip.compress(rec))
-    rules = engine.robots_policy(str(d))
+    rules = robots.robots_policy(spark, str(d))
     assert [(r.host, r.directive, r.path) for r in rules.collect()] == [
         ("gz.example", "disallow", "/secret")
     ]
 
 
-def test_snapshot_stats_group_with_no_registers_still_rows(engine, spark):
+def test_snapshot_stats_group_with_no_registers_still_rows(spark):
     """A group whose EVERY sketched column is all-null appears in no
     register frame but must still carry a 0.0 row in the card (r13
     review: the group universe comes from the base frame, not the
@@ -1470,7 +1565,7 @@ def test_snapshot_stats_group_with_no_registers_still_rows(engine, spark):
     )
     rows = {
         r.host: r.approx_distinct_digest
-        for r in engine.snapshot_stats(
+        for r in hll.snapshot_stats(
             idx, by=("host",), cols=("digest",)
         ).collect()
     }

@@ -6,8 +6,9 @@ definition included) is unreferenced.  Decorated defs are skipped: a
 decorator (``@register``, ``@udf``, ...) is itself the reference that
 makes them reachable.  Dunder assignments (``__all__``, ...) are skipped.
 Mentions in docstrings and comments do not count.  A second scan pins
-the set of ``SPARK_GRAFT_*`` environment knobs the code reads.  Pure
-``ast``; no Spark."""
+the set of ``SPARK_GRAFT_*`` environment knobs the code reads, and a
+third the public methods of ``api.PsyEngine``.  Pure ``ast``; no
+Spark."""
 
 from __future__ import annotations
 
@@ -119,3 +120,44 @@ def env_knob_names() -> set[str]:
 
 def test_env_knobs_do_not_creep():
     assert env_knob_names() == ENV_KNOBS
+
+
+# ``api.PsyEngine``'s public methods: one per reference entry point
+# (`database.py` / `rag_processor.py`).  Every other capability is a module
+# function called directly; a method that only forwards to one is a second
+# way to call it, so a new name here needs a reason.
+ENGINE_METHODS = {
+    "add_interaction",
+    "add_documents",
+    "get_conversation_history",
+    "get_recent_history",
+    "get_all_documents_and_embeddings",
+    "get_topic_interactions",
+    "get_high_quality_interactions",
+    "find_similar_documents",
+    "get_relevant_documents",
+    "create_vector_index",
+    "find_similar_documents_batch",
+    "classify_safety",
+    "analyze_response_effectiveness",
+    "build_context",
+    "generate_training_examples",
+    "is_toxic",
+    "clean_responses",
+    "extract_entities",
+    "determine_topic",
+}
+
+
+def engine_methods() -> set[str]:
+    tree = _parse(PACKAGE / "api.py")
+    (engine,) = [n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "PsyEngine"]
+    return {
+        n.name
+        for n in engine.body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and not n.name.startswith("_")
+    }
+
+
+def test_engine_surface_is_the_reference_surface():
+    assert engine_methods() == ENGINE_METHODS

@@ -58,16 +58,15 @@ def test_dedup_chunk_pack_composition(spark):
     assert over == 0
 
 
-def test_facade_corpus_pipeline(spark, tmp_path):
-    """The engine-facade spelling of the whole corpus path: quality gates
-    → near-dup keep-one → BPE tokenizer training → model-token packing."""
-    from psy_supabase_spark.api import PsyEngine
-    from psy_supabase_spark.operators import dedup
+def test_facade_corpus_pipeline(spark):
+    """The whole corpus path as module calls: quality gates → near-dup
+    keep-one → BPE tokenizer training → model-token packing."""
+    from psy_supabase_spark.functions import bpe
+    from psy_supabase_spark.functions.quality import quality_filter
 
-    eng = PsyEngine(spark, str(tmp_path / "wh"))
     docs = load_table(spark, SF, "documents")
 
-    gated = eng.filter_corpus(
+    gated = quality_filter(
         docs, min_words=5, min_stopword_hits=1, min_terminal_line_frac=0.0
     )
     n_gated = gated.count()
@@ -76,10 +75,10 @@ def test_facade_corpus_pipeline(spark, tmp_path):
     pairs = dedup.minhash_lsh_pairs(gated, 0.5)
     kept = dedup.dedup_keep_representative(gated, pairs)
 
-    merges = eng.train_tokenizer(kept, n_merges=60)
+    merges = bpe.train_bpe(kept, n_merges=60)
     assert len(merges) == 60
 
-    packed = eng.pack_for_training(kept, merges, budget=256)
+    packed = textanalysis.pack_for_training(kept, merges, budget=256)
     assert packed.count() == kept.count()  # one row per doc (unchunked path)
     over = (
         packed.groupBy("group_key", "seq_id")

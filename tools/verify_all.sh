@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # The pre-snapshot verify loop (run before every round snapshot):
 #   1. oracle gate replica at sf0.01 (the driver's correctness surface)
-#   2. tier-1 pytest suite (the ROADMAP command), then the perfbench smoke
+#   2. tier-1 pytest suite (the ROADMAP command), then the perfbench smoke,
+#      then both examples at sf0.001, each into its own temporary directory
 #   3. bench at sf0.1 (one JSON line; full telemetry in BENCH_EXTRA.json)
 #   4. driver entry smoke, and one Python task from outside the checkout
 # Exit non-zero on the first failing surface.
@@ -30,6 +31,17 @@ python tools/oracle_check.py /root/testdata/sf0.01
 echo "== 2/4 pytest =="
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 python -m pytest perfbench/test_smoke.py
+
+echo "== 2/4 examples (sf0.001) =="
+# the examples are the only non-test callers of some module functions
+# (hll.snapshot_stats, robots.plan_crawl_round, charset.decode_crawl_text);
+# with no arguments each reads sf0.001 and writes to a fresh temporary
+# directory, here one inside its own mktemp -d
+for demo in pipeline_demo crawl_ingest_demo; do
+  demo_out="$(mktemp -d)"
+  TMPDIR="$demo_out" python "examples/$demo.py"
+  rm -rf "$demo_out"
+done
 
 echo "== 3/4 bench (sf0.1) =="
 # bench raises if its stdout line reaches 1,800 chars (stdout is parsed
