@@ -42,11 +42,13 @@ def _warc_record(doc_id: int, text: str) -> bytes:
         f"<body><h1>Doc {doc_id}</h1><p>{body_text}</p></body></html>"
     ).encode("iso-8859-1" if latin else "utf-8")
     # every third page is served Content-Encoding: gzip (as real servers
-    # do) — the ingest decodes it when decode_http_body=True
+    # do) — the ingest decodes it when decode_http_body=True.  mtime=0
+    # keeps the wall clock out of the gzip header: payload digests hash
+    # these bytes, so a shard must be the same on every run
     if doc_id % 3 == 0:
         http = (
             f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n"
-            "Content-Encoding: gzip\r\n\r\n".encode() + gzip.compress(html)
+            "Content-Encoding: gzip\r\n\r\n".encode() + gzip.compress(html, mtime=0)
         )
     else:
         http = (
@@ -62,7 +64,7 @@ def _warc_record(doc_id: int, text: str) -> bytes:
         f"Content-Type: application/http; msgtype=response\r\n"
         f"Content-Length: {len(http)}\r\n\r\n"
     ).encode()
-    return gzip.compress(hdr + http + b"\r\n\r\n")
+    return gzip.compress(hdr + http + b"\r\n\r\n", mtime=0)
 
 
 def main() -> int:

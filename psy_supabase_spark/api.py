@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .functions import json_ops
 from .functions import text as TX
+from .functions import vector as V
 from .functions.memo import per_gateway
 from .operators import ivf as ivf_ops
 from .operators import ml_udfs, topk, windows
@@ -168,11 +169,6 @@ class PsyEngine:
 
     # ---- retrieval (reference query.txt:186-205, rag_processor.py:26-75) ----
 
-    # GEMM crossover: at ≥ this dim the GEMM kernels beat the expression
-    # folds by ~40× (SCALE.md §width validation).  ONE constant — the
-    # single-query and batch routes must flip kernels together.
-    _GEMM_MIN_DIM = 256
-
     @staticmethod
     def _head_dim(kb: DataFrame) -> int | None:
         """Width of the first NON-NULL stored embedding (None = no non-null
@@ -200,11 +196,6 @@ class PsyEngine:
             return True, cls._head_dim(kb)
         return True, int(d)
 
-    @classmethod
-    def _is_wide(cls, dim: int | None) -> bool:
-        """The one spelling of the GEMM threshold test, for every route."""
-        return dim is not None and dim >= cls._GEMM_MIN_DIM
-
     def find_similar_documents(self, user_id: str, query_vec: Sequence[float], k: int = 5) -> DataFrame:
         """J1 server semantics: cosine DISTANCE ASC LIMIT k.  Uses the IVF
         index when built (reference builds ivfflat but never routes queries
@@ -215,7 +206,7 @@ class PsyEngine:
             return hits.select("content", (F.lit(1.0) - F.col("similarity")).alias("distance"))
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
         _, dim = self._probe_kb(kb)
-        if self._is_wide(dim):
+        if V.is_wide(dim):
             hits = topk.topk_similarity_gemm(
                 kb, query_vec, k, dim=dim, id_col="content", embedding_col="embedding"
             )
@@ -247,7 +238,7 @@ class PsyEngine:
         if not found:
             kb = self.store.scan(KNOWLEDGE_BASE, user_id=DEFAULT_TENANT)
             _, dim = self._probe_kb(kb)
-        if self._is_wide(dim):
+        if V.is_wide(dim):
             return topk.topk_similarity_gemm(
                 kb, query_vec, k, dim=dim, id_col="content", embedding_col="embedding"
             )
@@ -298,7 +289,7 @@ class PsyEngine:
         # boundary); at the reference's real widths (1536/2048) the GEMM
         # twin wins by ~40× (SCALE.md §width validation).
         d = self._head_dim(kb)
-        if self._is_wide(d):
+        if V.is_wide(d):
             hits = topk.knn_join_gemm(
                 kb, queries, k=k, corpus_id="content", corpus_vec="embedding", dim=d
             )

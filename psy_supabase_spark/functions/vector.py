@@ -32,6 +32,19 @@ from pyspark.sql import functions as F
 ColumnOrName = Column | str
 
 
+# Kernel width rule: at and above this embedding width the Arrow/numpy GEMM
+# kernels beat the Catalyst expression folds (by ~40× at 1536; the narrow
+# folds win below it, with no Python boundary) — the crossover measured in
+# SCALE.md §width validation.  Every vector operator picks its kernel with
+# :func:`is_wide`, which reads this global at call time.
+GEMM_MIN_DIM = 256
+
+
+def is_wide(dim: int | None) -> bool:
+    """True when ``dim`` takes the GEMM kernels; an unknown width is narrow."""
+    return dim is not None and dim >= GEMM_MIN_DIM
+
+
 def _c(col: ColumnOrName) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
@@ -76,28 +89,3 @@ def round6(col: Column) -> Column:
     """Round a score for oracle comparison: 64-dim double dot products agree
     across engines to ~1e-15 relative; 6 dp makes hashes stable."""
     return F.round(col, 6)
-
-
-def quantize_int8(a: ColumnOrName) -> Column:
-    """Symmetric per-vector int8 scalar quantization:
-    ``struct(scale double, q array<tinyint>)`` with
-    ``x ≈ q * scale``, scale = max|x| / 127.
-
-    Storage at 100 TB: a float32 dim-64 embedding is 256 B/row; int8 + one
-    double is 72 B — 3.5× smaller on disk AND on the shuffle wire, which is
-    what makes billion-vector brute-force / LSH passes cheap.  The standard
-    serving pattern is quantized first-pass scoring + full-precision
-    rescoring of the top candidates (tested: top-k on dequantized vectors
-    tracks exact top-k).  Flat arithmetic lambdas — the cheap HOF kind."""
-    c = _c(a)
-    mx = F.array_max(F.transform(c, lambda x: F.abs(x.cast("double"))))
-    scale = F.when(mx == 0.0, F.lit(1.0)).otherwise(mx / F.lit(127.0))
-    q = F.transform(c, lambda x: F.round(x.cast("double") / scale).cast("tinyint"))
-    return F.struct(scale.alias("scale"), q.alias("q"))
-
-
-def dequantize_int8(s: ColumnOrName) -> Column:
-    """Inverse of quantize_int8: array<double> with |error| ≤ scale/2
-    per element."""
-    c = _c(s)
-    return F.transform(c.getField("q"), lambda x: x.cast("double") * c.getField("scale"))

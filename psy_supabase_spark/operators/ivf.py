@@ -283,101 +283,10 @@ def write_ivf_layout(index: IVFIndex, path: str, *, vec_col: str = "embedding") 
     (one directory per list — the moral equivalent of pgvector's inverted
     lists, readable with partition pruning).  The row norm is precomputed
     into ``_vnorm`` at write time — norms are index-BUILD work, so serving
-    scores with ONE fold per row instead of three (the SQ8 store keeps its
-    coarse norm for the same reason)."""
+    scores with ONE fold per row instead of three."""
     index.assigned.withColumn("_vnorm", V.l2_norm(vec_col)).write.mode(
         "overwrite"
     ).partitionBy("centroid_id").parquet(path)
-
-
-QUANTIZE_ARROW_DIM = 256  # above this width the Arrow path wins (see below)
-# historical auto-route threshold, kept for callers that assert the route
-# is engaged; since r7 the batch entrypoint routes GEMM at EVERY size —
-# measured sf0.1 batch-100: 8 lists×dim 64 = 4.4 s expression vs 0.5 s
-# GEMM, 44 lists = 5.7 s vs 0.3 s — because the per-(row, query) HOF fold
-# dominates regardless of the probe-literal count
-GEMM_ROUTE_CELLS = 4096
-
-
-def quantized_store(
-    index: IVFIndex,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    arrow: bool | None = None,
-) -> DataFrame:
-    """The IVF-SQ8 storage form: (id, centroid_id, int8 payload, coarse
-    norm).  72 B/row vs 256 B for float32 dim-64 — what a billion-vector
-    serving tier keeps hot.  ``_qnorm`` is ‖q‖ of the INT array: cosine is
-    scale-invariant, so the coarse pass scores raw ints against the query
-    with one fold and no dequantization.
-
-    ``arrow`` switches the quantize kernel: the default (None) picks the
-    codegen HOF expression below ``QUANTIZE_ARROW_DIM`` and an
-    Arrow-batched numpy pass above it.  The expression spelling is three
-    interpreted per-element folds per row — the right trade at dim 64
-    (no Python boundary), but measured 267 s for a 20k-row dim-1536
-    store vs ~2 s for the numpy pass (the round-6 width validation's
-    second finding, after the probe-literal plan).  Outputs are
-    row-identical (HALF_UP rounding reproduced in numpy; parity pinned
-    in tests)."""
-    dim = len(index.centers[0]) if index.centers else 0
-    if arrow is None:
-        arrow = dim >= QUANTIZE_ARROW_DIM
-    if not arrow:
-        base = index.assigned.select(
-            id_col, "centroid_id", V.quantize_int8(vec_col).alias("_qs")
-        )
-        return base.withColumn("_qnorm", V.l2_norm(F.col("_qs.q")))
-
-    import numpy as np
-    import pandas as pd
-
-    id_t = index.assigned.schema[id_col].dataType.simpleString()
-    schema = (
-        f"{id_col} {id_t}, centroid_id int, "
-        "_qs struct<scale: double, q: array<tinyint>>, _qnorm double"
-    )
-
-    def quant(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # same ok-mask as pq_encode / the GEMM scorer: NULL or
-            # wrong-dim rows are unservable — skip them instead of
-            # letting np.stack crash the task (the expression kernel
-            # NULLs them; every scoring path drops NULLs, so counts of
-            # SERVABLE rows agree)
-            vals = pdf[vec_col].tolist()
-            ok = np.fromiter(
-                (v is not None and len(v) == dim for v in vals),
-                dtype=bool,
-                count=len(vals),
-            )
-            if not ok.any():
-                continue
-            rows = np.flatnonzero(ok)
-            m = np.stack([np.asarray(vals[i], dtype=np.float64) for i in rows])
-            amax = np.abs(m).max(axis=1)
-            scale = np.where(amax == 0.0, 1.0, amax / 127.0)
-            r = m / scale[:, None]
-            # HALF_UP like F.round (np.round is half-even): away-from-zero
-            q = (np.floor(np.abs(r) + 0.5) * np.sign(r)).astype(np.int8)
-            qn = np.sqrt((q.astype(np.float64) ** 2).sum(axis=1))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[rows],
-                    "centroid_id": pdf["centroid_id"].to_numpy()[rows].astype("int32"),
-                    "_qs": [
-                        {"scale": float(s), "q": row} for s, row in zip(scale, q)
-                    ],
-                    "_qnorm": qn,
-                }
-            )
-
-    return index.assigned.select(id_col, "centroid_id", vec_col).mapInPandas(
-        quant, schema=schema
-    )
 
 
 def append_to_layout(
@@ -464,15 +373,20 @@ def ivf_search_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_salts: int = 16,
-    sq8: bool = False,
-    sq8_store: DataFrame | None = None,
-    rescore_factor: int = 3,
-    gemm: bool | None = None,
     max_queries: int = 10_000,
 ) -> DataFrame:
     """N-query ANN through the IVF index in ONE distributed pass — the
     production serving shape (per-query ``ivf_search`` calls cost a
     driver round-trip each; here the whole query batch rides the plan).
+
+    Routing: this delegates to :func:`ivf_search_batch_gemm` — same rows
+    (parity-pinned), Arrow scoring.  The per-(row, query) HOF fold makes
+    the expression spelling below lose at EVERY measured size, not just
+    wide dims (sf0.1 batch-100: 8 lists × dim 64 = 4.4 s expression vs
+    0.5 s GEMM; 44 lists 5.7 s vs 0.3 s; 70 lists × dim 64 14.4 s vs
+    ~1 s).  A query batch exceeding ``max_queries`` (the GEMM route's
+    bounded driver fetch) FALLS BACK, with a RuntimeWarning, to the
+    expression path, which never collects the queries:
 
     1. Probe selection is MAP-SIDE: per-centroid cosine distances are
        codegen'd expressions over the (tiny, constant) centroid table;
@@ -485,84 +399,33 @@ def ivf_search_batch(
     3. Ranking is the salted two-phase top-k (operators/topk.knn_join's
        shape): no reducer ever sorts more than its salt share.
 
-    Per-query results equal ``ivf_search`` exactly (tested).
-
-    ``sq8=True`` switches to IVF-SQ8 serving: the first pass scores int8
-    scalar-quantized vectors (functions/vector.quantize_int8 — 3.5×
-    smaller rows on disk and over the probe-join wire) and keeps
-    ``k·rescore_factor`` candidates per query; the exact top-k is then
-    re-scored at full precision over only those candidates
-    (|queries|·k·rescore_factor rows — a broadcast).  Cosine is
-    scale-invariant, so the coarse score uses the RAW int8 array (the
-    per-vector scale cancels) with its norm precomputed in the store —
-    one fold per row instead of dequantize + three.  Pass ``sq8_store``
-    (a persisted :func:`quantized_store`, written at index-build time)
-    to avoid quantizing per query — the production shape; omitting it
-    quantizes on the fly.  Parity with the
-    full-precision path holds whenever the true top-k survives the
-    quantized first pass — guaranteed only as rescore_factor→list size;
-    at the default factor int8 rounding can in principle flip near-tied
-    candidates at the k·rescore_factor boundary.  Measured equal on the
-    testdata (tests/test_dedup.py::test_ivf_sq8_composition and the
-    batch-parity test — empirical pins, not proofs); production SLAs
-    should state recall@k, not exactness.
-
-    AUTO-ROUTING: by default this delegates to
-    :func:`ivf_search_batch_gemm` — same rows (parity-pinned), Arrow
-    scoring.  The per-(row, query) HOF fold makes the expression spelling
-    lose at EVERY measured size, not just wide dims (sf0.1 batch-100:
-    8 lists × dim 64 = 4.4 s expression vs 0.5 s GEMM; 44 lists 5.7 s vs
-    0.3 s; 70 lists × dim 64 14.4 s vs ~1 s).  In auto mode a query batch
-    exceeding ``max_queries`` (the GEMM route's bounded driver fetch)
-    FALLS BACK to the expression path — which never collects queries —
-    instead of failing; pass ``gemm=True`` to make the bound a hard error,
-    or ``gemm=False`` to pin the expression path (spec twin / tests)."""
-    from pyspark.sql import Window
-
-    dim = len(index.centers[0]) if index.centers else 0
-    auto = gemm is None
-    if auto:
-        gemm = True
-    store = None
-    if sq8:
-        store = (
-            sq8_store
-            if sq8_store is not None
-            else quantized_store(index, id_col=id_col, vec_col=vec_col)
+    Per-query results equal ``ivf_search`` exactly on either route
+    (tested)."""
+    try:
+        return ivf_search_batch_gemm(
+            index,
+            queries,
+            k,
+            nprobe,
+            query_id=query_id,
+            query_vec=query_vec,
+            id_col=id_col,
+            vec_col=vec_col,
+            max_queries=max_queries,
         )
-    if gemm:
-        try:
-            return ivf_search_batch_gemm(
-                index,
-                queries,
-                k,
-                nprobe,
-                query_id=query_id,
-                query_vec=query_vec,
-                id_col=id_col,
-                vec_col=vec_col,
-                sq8_store=store,
-                rescore_factor=rescore_factor,
-                max_queries=max_queries,
-            )
-        except QueryBatchTooLarge:
-            if not auto:
-                raise
-            # auto mode: oversized batches take the unbounded (slower)
-            # declarative path rather than surprising the caller — loudly,
-            # because the cost envelope changes (sq8 stays honored: the
-            # expression path below scores the same quantized store
-            # coarse-then-rescore).
-            import warnings
+    except QueryBatchTooLarge:
+        # oversized batches take the unbounded (slower) declarative path
+        # rather than surprising the caller — loudly, because the cost
+        # envelope changes
+        import warnings
 
-            warnings.warn(
-                f"ivf_search_batch: query batch exceeds max_queries="
-                f"{max_queries}; auto-falling back from the GEMM route to "
-                "the declarative expression path (slower, never collects "
-                "queries). Pass gemm=True to make this a hard error.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        warnings.warn(
+            f"ivf_search_batch: query batch exceeds max_queries="
+            f"{max_queries}; falling back from the GEMM route to the "
+            "declarative expression path (slower, never collects queries).",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
     structs = []
     for cid, center in enumerate(index.centers):
@@ -579,39 +442,6 @@ def ivf_search_batch(
     probes = queries.select(
         query_id, query_vec, F.explode(probe_arr.cid).alias("centroid_id")
     )
-
-    if sq8:
-        first_k = k * rescore_factor
-        probes_n = probes.withColumn("_qvn", V.l2_norm(query_vec))
-        sim_q = F.when(
-            (F.col("_qnorm") == 0.0) | (F.col("_qvn") == 0.0), F.lit(None).cast("double")
-        ).otherwise(
-            V.dot(F.col("_qs.q"), F.col(query_vec)) / (F.col("_qnorm") * F.col("_qvn"))
-        )
-        coarse = (
-            store.join(F.broadcast(probes_n), "centroid_id")
-            .select(query_id, F.col(id_col), sim_q.alias("similarity"))
-            .where(F.col("similarity").isNotNull())
-        )
-        cand = _salted_topk(coarse, first_k, query_id, id_col, n_salts).select(query_id, id_col)
-        rescored = (
-            index.assigned.join(F.broadcast(cand), id_col)
-            .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
-            .select(
-                query_id,
-                F.col(id_col),
-                V.round6(V.cosine_similarity(F.col(vec_col), F.col(query_vec))).alias(
-                    "similarity"
-                ),
-            )
-            .where(F.col("similarity").isNotNull())
-        )
-        w = Window.partitionBy(query_id).orderBy(
-            F.col("similarity").desc(), F.col(id_col).asc()
-        )
-        return rescored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-            F.col("rank") <= k
-        )
 
     # norms precomputed ONCE per corpus row / per probe row: scoring then
     # costs one fold per (row, query) pair instead of three.  Same doubles
@@ -794,18 +624,16 @@ def ivf_search_batch_gemm(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_queries: int = 10_000,
-    sq8_store: DataFrame | None = None,
-    rescore_factor: int = 3,
 ) -> DataFrame:
-    """N-query IVF ANN with Arrow/GEMM scoring — the WIDE-dim serving path.
+    """N-query IVF ANN with Arrow/GEMM scoring — the batch serving path
+    :func:`ivf_search_batch` routes to at every width.
 
-    :func:`ivf_search_batch` scores each (row, query) pair with a codegen
-    HOF fold over the vector.  At dim 64 that is the right trade (stays
-    JVM-side, no Python boundary); at the reference's real width
-    (``vector(1536)``, query.txt:84 — actual embeddings dim 2048,
-    text_generator.py:314-316) the per-element interpreted lambda cost
-    dominates and the plan for probe selection would carry
-    n_lists × dim literal expressions.  This variant:
+    The expression fallback of :func:`ivf_search_batch` scores each
+    (row, query) pair with a codegen HOF fold over the vector, and its
+    probe-selection plan carries n_lists × dim literal expressions; at
+    the reference's real width (``vector(1536)``, query.txt:84 — actual
+    embeddings dim 2048, text_generator.py:314-316) the per-element
+    interpreted lambda cost dominates.  This variant:
 
     1. collects the bounded query batch driver-side (the pq_search_batch
        contract) and picks per-query probes in numpy — same distances and
@@ -821,60 +649,27 @@ def ivf_search_batch_gemm(
        O(batches · nq · k) rows;
     4. final exact top-k per query by (similarity DESC, id ASC).
 
-    Output matches :func:`ivf_search_batch` row-for-row on the testdata
+    Output matches the expression fallback row-for-row on the testdata
     (parity-tested; the GEMM accumulates pairwise vs the fold's
     left-to-right — a last-ulp difference only, erased by round6 except
-    on knife-edge rounding boundaries never observed).
-
-    ``sq8_store`` (a persisted :func:`quantized_store`, read back)
-    switches to SQ8-GEMM serving: the coarse GEMM runs over the int8
-    codes (cosine is scale-invariant, so raw ints score correctly), keeps
-    ``k·rescore_factor`` per query, and re-scores survivors at full
-    precision — the IVF-SQ8 ladder with both passes GEMM-shaped."""
+    on knife-edge rounding boundaries never observed)."""
     from pyspark.sql import Window
 
     qrows = _collect_query_batch(queries, query_id, query_vec, max_queries)
-    qid_type = queries.schema[query_id].dataType.simpleString()
+    partial = ivf_score_gemm(
+        index,
+        qrows,
+        k,
+        nprobe,
+        query_id=query_id,
+        query_id_type=queries.schema[query_id].dataType.simpleString(),
+        id_col=id_col,
+        vec_col=vec_col,
+    )
     w = Window.partitionBy(query_id).orderBy(
         F.col("similarity").desc(), F.col(id_col).asc()
     )
-    if sq8_store is None:
-        partial = ivf_score_gemm(
-            index, qrows, k, nprobe, query_id=query_id, query_id_type=qid_type,
-            id_col=id_col, vec_col=vec_col,
-        )
-        return partial.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-            F.col("rank") <= k
-        )
-
-    # SQ8 ladder: int8 coarse GEMM → top k·f per query → exact rescore
-    probe_ids, out_schema, make_scorer = _gemm_scorer(
-        index, qrows, nprobe, query_id, qid_type, id_col
-    )
-    first_k = k * rescore_factor
-    coarse_src = sq8_store.where(F.col("centroid_id").isin(probe_ids)).select(
-        id_col, "centroid_id", F.col("_qs.q").alias("_qvals")
-    )
-    cand = (
-        coarse_src.mapInPandas(make_scorer("_qvals", first_k), schema=out_schema)
-        .withColumn("_pr", F.row_number().over(w))
-        .where(F.col("_pr") <= first_k)
-        .select(query_id, id_col)
-    )
-    qdf = queries.select(query_id, query_vec)
-    rescored = (
-        index.assigned.join(F.broadcast(cand), id_col)
-        .join(F.broadcast(qdf), query_id)
-        .select(
-            query_id,
-            F.col(id_col),
-            V.round6(V.cosine_similarity(F.col(vec_col), F.col(query_vec))).alias(
-                "similarity"
-            ),
-        )
-        .where(F.col("similarity").isNotNull())
-    )
-    return rescored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
+    return partial.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
         F.col("rank") <= k
     )
 

@@ -87,8 +87,8 @@ def suggest_banding(
     max_bits: int = 20,
 ) -> tuple[int, int]:
     """(n_planes, bands) for :func:`srp_neardup_pairs`, scaled to corpus
-    size and threshold — the knob the round-6 scale-step measurement
-    showed MUST move with N: the dim-64 default (3-bit bands) keeps
+    size and threshold — the knob the scale-step measurement showed MUST
+    move with N: the dim-64 default (3-bit bands) keeps
     ~N/8-deep buckets, so candidate pairs grow ~N²/8 — 12.5M at 5k rows
     (fine), 1.25G at 50k (a wall).
 
@@ -103,9 +103,9 @@ def suggest_banding(
 
     ``dim`` shrinks the bucket target for wide vectors: verify cost is
     candidates × dim × 8 B of vector movement (the pair re-attach join),
-    so the right depth falls as ~1/dim — target_bucket = 64·64/dim above
-    the Arrow-verify width.  Measured at dim 1536 / 10k rows / t=0.9:
-    the dim-64 default (8-bit buckets, depth ~39) costs 28.8 s at 0.971
+    so the right depth falls as ~1/dim — target_bucket = 64·64/dim at
+    the GEMM widths (functions/vector.is_wide).  Measured at dim 1536 /
+    10k rows / t=0.9: the dim-64 default (8-bit buckets, depth ~39) costs 28.8 s at 0.971
     recall — ~1.7M candidates of 12 KB vectors; the dim-aware rule
     (13-bit buckets, depth ~1, 21 bands) costs 11.0 s at 0.976 — MORE
     bands and planes, ~8× fewer candidates, and both planes and explode
@@ -113,7 +113,7 @@ def suggest_banding(
     import math as m
 
     if target_bucket is None:
-        target_bucket = 64 if dim is None or dim < 256 else max(1, (64 * 64) // dim)
+        target_bucket = max(1, (64 * 64) // dim) if V.is_wide(dim) else 64
     bits = min(max(min_bits, m.ceil(m.log2(max(n_rows, 2) / target_bucket))), max_bits)
     p = 1.0 - m.acos(max(min(threshold, 1.0), -1.0)) / m.pi
     band_p = p**bits
@@ -133,10 +133,16 @@ def cosine_pairs_np(a: Column, b: Column) -> Column:
     precomputed norms) wins: no Python boundary.  At the reference's real
     width the per-element interpreted lambda dominates — 25M candidate
     folds × 1536 elements priced the dim-1536 SRP verify beyond 8 minutes,
-    vs ~1 s of GEMM (round-6 width validation).  NULL / length-mismatched
+    vs ~1 s of GEMM (SCALE.md §width validation).  NULL / length-mismatched
     / zero-norm rows yield NaN — callers MUST fold NaN to NULL before any
     threshold predicate (Spark orders NaN above all doubles); see the
-    ``F.isnan`` guard in :func:`srp_neardup_pairs`."""
+    ``F.isnan`` guard in :func:`_score_pairs`."""
+    return _cosine_udf()(a, b)
+
+
+def _cosine_udf():
+    """A fresh instance of :func:`cosine_pairs_np`'s pandas UDF — fresh,
+    because marking a UDF nondeterministic mutates it."""
 
     @F.pandas_udf("double")
     def _cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
@@ -175,46 +181,52 @@ def cosine_pairs_np(a: Column, b: Column) -> Column:
                     out[ii] = np.where(denom > 0, dots / denom, np.nan)
         return pd.Series(out)
 
-    return _cos(a, b)
+    return _cos
 
 
-def _int8_view(
-    corpus: DataFrame, *, id_col: str, vec_col: str, arrow: bool
+def _score_pairs(
+    pairs: DataFrame, a: str, b: str, dim: int, keep: list[str]
 ) -> DataFrame:
-    """(id, q array<tinyint>, qn, eps) per corpus row — the coarse-verify
-    payload.  ``q`` is the per-vector symmetric int8 quantization
-    (functions/vector.quantize_int8 semantics, HALF_UP in both kernels),
-    ``qn`` its norm, and ``eps`` the SOUND per-vector cosine error bound
-    ``scale·√d / ‖v‖``: with e = s·q − v (so ‖e‖ ≤ s·√d/2 elementwise)
+    """``keep`` plus ``similarity``: the row-wise cosine of array columns
+    ``a`` and ``b`` rounded to 6 dp, with the rows where it is undefined
+    (NULL, zero-norm or length-mismatched vectors) dropped.  The kernel
+    follows the width: :func:`cosine_pairs_np` at the GEMM widths, the
+    Catalyst fold (functions/vector.cosine_similarity) below them."""
+    if V.is_wide(dim):
+        # the UDF gets a projection of its own, marked nondeterministic so
+        # the optimizer cannot copy it into the NULL filter it pushes
+        # below the CASE: a copy runs the whole Python stage a second time
+        pairs = pairs.select(
+            *keep, _cosine_udf().asNondeterministic()(F.col(a), F.col(b)).alias("_raw")
+        )
+        # NaN → NULL before any threshold test: Spark orders NaN ABOVE
+        # every double, so a bare `NaN >= threshold` would admit the
+        # degenerate rows the expression twin's NULL rejects
+        sim = F.when(F.isnan("_raw"), F.lit(None).cast("double")).otherwise(
+            F.round("_raw", 6)
+        )
+    else:
+        sim = V.round6(V.cosine_similarity(a, b))
+    return pairs.select(*keep, sim.alias("similarity")).where(
+        F.col("similarity").isNotNull()
+    )
+
+
+def _int8_view(corpus: DataFrame, *, id_col: str, vec_col: str) -> DataFrame:
+    """(id, q array<tinyint>, eps) per corpus row — the coarse-verify
+    payload, one Arrow-batched numpy pass.  ``q`` is the per-vector
+    symmetric int8 quantization (scale = max|v| / 127, HALF_UP rounding)
+    and ``eps`` the SOUND per-vector cosine error bound ``scale·√d / ‖v‖``:
+    with e = s·q − v (so ‖e‖ ≤ s·√d/2 elementwise)
     and x̂ = x/‖x‖, the unit-vector perturbation obeys ‖q̂ − v̂‖ ≤
     2‖e‖/‖v‖ ≤ s·√d/‖v‖, and for unit vectors |q̂_a·q̂_b − v̂_a·v̂_b| ≤
     ‖q̂_a − v̂_a‖ + ‖q̂_b − v̂_b‖ — so a pair whose int8 cosine falls below
     ``threshold − (eps_a + eps_b)`` PROVABLY fails the exact test and can
-    be dropped before any float vector moves."""
-    if not arrow:
-        return (
-            corpus.select(
-                F.col(id_col).alias("id"),
-                V.quantize_int8(vec_col).alias("_qs"),
-                V.l2_norm(vec_col).alias("_nrm"),
-            )
-            .select(
-                "id",
-                F.col("_qs.q").alias("q"),
-                V.l2_norm(F.col("_qs.q")).alias("qn"),
-                # zero-norm rows can never pass the exact verify (NULL
-                # sim); +inf keeps the bound sound and ANSI-safe (double
-                # x/0 RAISES under ANSI, it does not yield Infinity)
-                F.when(F.col("_nrm") == 0.0, F.lit(float("inf"))).otherwise(
-                    F.col("_qs.scale")
-                    * F.sqrt(F.size(F.col("_qs.q")).cast("double"))
-                    / F.col("_nrm")
-                ).alias("eps"),
-            )
-        )
-
+    be dropped before any float vector moves.  NULL and empty vectors get
+    no row (they can never pass the exact verify); a zero vector gets
+    ``eps = +inf``."""
     id_t = corpus.schema[id_col].dataType.simpleString()
-    schema = f"id {id_t}, q array<tinyint>, qn double, eps double"
+    schema = f"id {id_t}, q array<tinyint>, eps double"
 
     def quant(batches):
         for pdf in batches:
@@ -230,7 +242,7 @@ def _int8_view(
                 continue
             rows = np.flatnonzero(ok)
             # ragged-safe: group by length so np.stack never mixes dims
-            out_id, out_q, out_qn, out_eps = [], [], [], []
+            out_id, out_q, out_eps = [], [], []
             by_len: dict[int, list[int]] = {}
             for i in rows:
                 by_len.setdefault(len(vals[i]), []).append(i)
@@ -241,15 +253,13 @@ def _int8_view(
                 r = m / scale[:, None]
                 # HALF_UP like F.round (np.round is half-even)
                 q = (np.floor(np.abs(r) + 0.5) * np.sign(r)).astype(np.int8)
-                qn = np.sqrt((q.astype(np.float64) ** 2).sum(axis=1))
                 nrm = np.linalg.norm(m, axis=1)
                 with np.errstate(divide="ignore"):
                     eps = np.where(nrm > 0, scale * np.sqrt(dim_l) / nrm, np.inf)
                 out_id.extend(pdf[id_col].to_numpy()[idxs].tolist())
                 out_q.extend(list(q))
-                out_qn.extend(qn.tolist())
                 out_eps.extend(eps.tolist())
-            yield pd.DataFrame({"id": out_id, "q": out_q, "qn": out_qn, "eps": out_eps})
+            yield pd.DataFrame({"id": out_id, "q": out_q, "eps": out_eps})
 
     return corpus.select(id_col, vec_col).mapInPandas(quant, schema=schema)
 
@@ -296,7 +306,6 @@ def srp_topk(
     seed: int = DEFAULT_SEED,
     bucket_cap: int | None = dedup.DEFAULT_BUCKET_CAP,
     n_salts: int = 16,
-    verify_arrow: bool | None = None,
     brute_fallback: bool = False,
 ) -> DataFrame:
     """SRP-bucketed batch ANN top-k — the LSH alternative to IVF when no
@@ -360,20 +369,14 @@ def srp_topk(
         .select("qid", "id")
         .distinct()
     )
-    if verify_arrow is None:
-        verify_arrow = dim >= 256
     qv = queries.select(F.col(query_id).alias("qid"), F.col(query_vec).alias("_qv"))
     cv = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_cv"))
-    attached = cand.join(F.broadcast(qv), "qid").join(cv, "id")
-    if verify_arrow:
-        raw = cosine_pairs_np(F.col("_cv"), F.col("_qv"))
-        sim = F.when(F.isnan(raw), F.lit(None).cast("double")).otherwise(F.round(raw, 6))
-    else:
-        sim = V.round6(V.cosine_similarity(F.col("_cv"), F.col("_qv")))
-    scored = (
-        attached.select(F.col("qid").alias(query_id), F.col("id").alias(id_col), sim.alias("similarity"))
-        .where(F.col("similarity").isNotNull())
+    attached = (
+        cand.join(F.broadcast(qv), "qid")
+        .join(cv, "id")
+        .select(F.col("qid").alias(query_id), F.col("id").alias(id_col), "_cv", "_qv")
     )
+    scored = _score_pairs(attached, "_cv", "_qv", dim, [query_id, id_col])
     ranked = _salted_topk(scored, k, query_id, id_col, n_salts)
     if not brute_fallback:
         return ranked
@@ -389,10 +392,9 @@ def srp_topk(
     # under-k = queries absent from `full` (covers zero-candidate
     # queries, which never reach `ranked` at all)
     under_q = queries.join(F.broadcast(full), query_id, "left_anti")
-    # verify_arrow was normalized above (None -> dim >= 256); honor the
-    # caller's choice uniformly so brute-completed rows use the same
-    # kernel as the LSH-scored rows in this result.
-    join_fn = topk_ops.knn_join_gemm if verify_arrow else topk_ops.knn_join
+    # same width rule as the verify, so brute-completed rows use the same
+    # kernel as the LSH-scored rows in this result
+    join_fn = topk_ops.knn_join_gemm if V.is_wide(dim) else topk_ops.knn_join
     brute = join_fn(
         corpus,
         under_q,
@@ -447,7 +449,7 @@ def _broadcast_verify_pairs(
     one-scored-row-per-duplicate behavior is not reproducible here;
     callers with duplicated ids must use verify_route='join'.
 
-    ``exact_fold`` (r14 opt): compute dots and norms with a SEQUENTIAL
+    ``exact_fold``: compute dots and norms with a SEQUENTIAL
     left-to-right fold over the dimensions (vectorized across pairs,
     ordered across dims) instead of einsum/np.linalg.norm.  Every
     multiply and add then IEEE-rounds in exactly the order of the
@@ -561,8 +563,6 @@ def srp_neardup_pairs(
     seed: int = DEFAULT_SEED,
     bucket_cap: int | None = dedup.DEFAULT_BUCKET_CAP,
     hot_id_threshold: int | None = 100_000,
-    verify_arrow: bool | None = None,
-    coarse_verify: bool | None = None,
     verify_route: str = "auto",
     n_rows: int | None = None,
     max_broadcast_bytes: int = 256 << 20,
@@ -594,9 +594,13 @@ def srp_neardup_pairs(
     salts via :func:`.scale.salted_join_hot_keys` — row-identical
     output, bounded per-reducer fan-in.
 
-    ``coarse_verify`` (default: auto — ON at the Arrow-verify width):
-    candidates are first scored on int8 quantized vectors (8× narrower
-    payload than float64 arrays) and a pair is dropped only when its
+    Verify kernel: Catalyst folds with precomputed norms at narrow dims
+    (one dot per candidate, no Python boundary); Arrow GEMM
+    (:func:`cosine_pairs_np`) at the GEMM widths
+    (functions/vector.is_wide), where the interpreted per-element fold
+    dominates.  At those widths the join route also pre-verifies
+    coarsely: candidates are first scored on int8 quantized vectors (8×
+    narrower payload than float64 arrays) and a pair is dropped only when its
     coarse cosine falls below ``threshold − (eps_a + eps_b)`` — the
     per-pair SOUND quantization error bound carried by
     :func:`_int8_view` — so the drop PROVABLY cannot lose a qualifying
@@ -616,8 +620,8 @@ def srp_neardup_pairs(
     route (pinned in tests).  "auto" broadcasts iff n·dim·8 B fits the
     valve, using ``n_rows`` when the caller knows it (else one
     parquet-metadata-cheap count job).  Kernel follows the width:
-    einsum GEMM at Arrow widths, exact sequential fold at narrow
-    widths (r14 opt — bit-identical to the narrow join route's
+    einsum GEMM at the GEMM widths, exact sequential fold at narrow
+    widths (bit-identical to the narrow join route's
     zip_with+aggregate spelling, so auto no longer excludes narrow
     dims).  Measured dim 1536 / 10k rows / t=0.9: join 11.3 s →
     broadcast ~5 s.  Duplicate-id corpora must pass "join" (the
@@ -625,7 +629,7 @@ def srp_neardup_pairs(
     ``signatures``: precomputed (id, sig) rows for exactly the rows in
     ``corpus``, built under the SAME (dim, n_planes, seed) — skips the
     signature GEMM here (the streaming filter computes it once per
-    micro-batch and feeds every consumer; r14 review).  Caller owns
+    micro-batch and feeds every consumer).  Caller owns
     both the id-set and the config equivalence; verification still
     reads vectors from ``corpus``.
     """
@@ -641,7 +645,7 @@ def srp_neardup_pairs(
     counted = dedup.counted_buckets(banded, bucket_cap)
     banded = counted.drop("_bn")
     # ids-only candidate join (vector payloads never ride the band shuffle)
-    # merge hint (r14 opt, the dedup.minhash_lsh_pairs rationale): both
+    # merge hint (the dedup.minhash_lsh_pairs rationale): both
     # sides are one signature→window subtree; broadcast computes it
     # twice, sort-merge reuses the valve window's (band, key) exchange.
     cands = (
@@ -651,40 +655,25 @@ def srp_neardup_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    # verify kernel: Catalyst folds with precomputed norms at narrow dims
-    # (one dot per candidate, no Python boundary); Arrow GEMM
-    # (cosine_pairs_np) at wide dims where the interpreted per-element
-    # fold dominates — auto-switched on ``dim``, explicit override kept
-    if verify_arrow is None:
-        verify_arrow = dim >= 256
-    if coarse_verify is None:
-        coarse_verify = verify_arrow
+    wide = V.is_wide(dim)
 
     # verify routing: "broadcast" scores bare id-pairs against a
     # broadcast corpus matrix (no payload shuffles — see
     # _broadcast_verify_pairs); "join" is the scale path (payload attach
-    # joins + sound int8 coarse pre-drop).  "auto" broadcasts iff the
-    # kernel is Arrow-width (the narrow-dim expression fold's
-    # left-to-right accumulation differs from numpy's in the last ulp,
-    # so narrow dims stay on the oracle-pinned expression path) AND the
-    # matrix fits the valve — n_rows, or ONE narrow count job when the
-    # caller didn't pass it (parquet-footer cheap next to the verify it
-    # routes).
+    # joins, plus the sound int8 coarse pre-drop at the GEMM widths).
     if verify_route not in ("auto", "join", "broadcast"):
         raise ValueError(f"unknown verify_route {verify_route!r}")
     if verify_route == "auto":
-        # r14 opt: narrow dims are broadcast-eligible too — the
-        # exact-fold kernel reproduces the Catalyst zip_with+aggregate
-        # fold bit for bit (sequential across dims, IEEE-identical ops),
-        # so the last-ulp objection that used to gate this route to the
-        # Arrow widths is gone.  The n·dim·8 B valve still decides; the
-        # count is parquet-metadata cheap when ``n_rows`` wasn't passed.
+        # every width is broadcast-eligible: the narrow exact-fold kernel
+        # reproduces the Catalyst zip_with+aggregate fold bit for bit.
+        # The n·dim·8 B valve decides; the count is parquet-metadata
+        # cheap when ``n_rows`` wasn't passed.
         n_est = n_rows if n_rows is not None else corpus.count()
         verify_route = (
             "broadcast" if n_est * dim * 8 <= max_broadcast_bytes else "join"
         )
     if verify_route == "broadcast":
-        # kernel choice: einsum GEMM at Arrow widths (the wide join
+        # kernel choice: einsum GEMM at the GEMM widths (the wide join
         # route's own kernel — routes stay row-identical), exact
         # sequential fold at narrow widths (bit-identical to the narrow
         # join route's expression spelling).  One posture note: a vector
@@ -698,7 +687,7 @@ def srp_neardup_pairs(
             vec_col=vec_col,
             dim=dim,
             max_broadcast_bytes=max_broadcast_bytes,
-            exact_fold=not verify_arrow,
+            exact_fold=not wide,
         )
         braw = F.col("_raw")
         bsim = F.when(F.isnan(braw), F.lit(None).cast("double")).otherwise(
@@ -729,62 +718,43 @@ def srp_neardup_pairs(
             return scale.salted_join_hot_keys(out, right, "id_b", hot, n_salts=16)
         return pairs.join(left, "id_a").join(right, "id_b")
 
-    if coarse_verify:
-        q8 = _int8_view(corpus, id_col=id_col, vec_col=vec_col, arrow=verify_arrow)
+    if wide:
+        q8 = _int8_view(corpus, id_col=id_col, vec_col=vec_col)
         qa = q8.select(
-            F.col("id").alias("id_a"),
-            F.col("q").alias("_qa"),
-            F.col("qn").alias("_qna"),
-            F.col("eps").alias("_ea"),
+            F.col("id").alias("id_a"), F.col("q").alias("_qa"), F.col("eps").alias("_ea")
         )
         qb = q8.select(
-            F.col("id").alias("id_b"),
-            F.col("q").alias("_qb"),
-            F.col("qn").alias("_qnb"),
-            F.col("eps").alias("_eb"),
+            F.col("id").alias("id_b"), F.col("q").alias("_qb"), F.col("eps").alias("_eb")
         )
-        coarse_joined = _attach(cands, qa, qb)
-        if verify_arrow:
-            rawc = cosine_pairs_np(F.col("_qa"), F.col("_qb"))
-            coarse = F.when(F.isnan(rawc), F.lit(None).cast("double")).otherwise(rawc)
-        else:
-            coarse = F.when(
-                (F.col("_qna") == 0.0) | (F.col("_qnb") == 0.0),
-                F.lit(None).cast("double"),
-            ).otherwise(V.dot(F.col("_qa"), F.col("_qb")) / (F.col("_qna") * F.col("_qnb")))
+        rawc = cosine_pairs_np(F.col("_qa"), F.col("_qb"))
+        coarse = F.when(F.isnan(rawc), F.lit(None).cast("double")).otherwise(rawc)
         # 1e-6 slack: the exact test compares the 6-dp HALF_UP-ROUNDED
         # cosine (round can lift a value by 5e-7), plus float ordering
         # slop — everything else is the sound quantization bound itself
-        cands = coarse_joined.where(
+        cands = _attach(cands, qa, qb).where(
             coarse.isNotNull()
             & (coarse >= F.lit(threshold) - (F.col("_ea") + F.col("_eb")) - F.lit(1e-6))
         ).select("id_a", "id_b")
 
-    if verify_arrow:
-        base = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-        va = base.select(F.col("id").alias("id_a"), F.col("vec").alias("va"))
-        vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"))
-    else:
-        # precompute norms once per vector: verification then costs ONE dot
-        # product per candidate instead of three (same doubles as computing
-        # sqrt(dot(x,x)) inline, so oracle-rounded values are unchanged)
-        withnorm = corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), V.l2_norm(vec_col).alias("nrm")
-        )
-        va = withnorm.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("nrm").alias("na"))
-        vb = withnorm.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb"))
-    joined = _attach(cands, va, vb)
-    if verify_arrow:
-        # NaN → NULL before the threshold test: Spark orders NaN ABOVE
-        # every double, so a bare `NaN >= threshold` would admit the
-        # degenerate rows the expression twin's NULL rejects
-        raw = cosine_pairs_np(F.col("va"), F.col("vb"))
-        sim = F.when(F.isnan(raw), F.lit(None).cast("double")).otherwise(F.round(raw, 6))
-    else:
-        sim = F.when(
-            (F.col("na") == 0.0) | (F.col("nb") == 0.0), F.lit(None).cast("double")
-        ).otherwise(V.round6(V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))))
+        vec = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        va = vec.select(F.col("id").alias("id_a"), F.col("vec").alias("va"))
+        vb = vec.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"))
+        scored = _score_pairs(_attach(cands, va, vb), "va", "vb", dim, ["id_a", "id_b"])
+        return scored.where(F.col("similarity") >= threshold)
+
+    # precompute norms once per vector: verification then costs ONE dot
+    # product per candidate instead of three (same doubles as computing
+    # sqrt(dot(x,x)) inline, so oracle-rounded values are unchanged)
+    withnorm = corpus.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), V.l2_norm(vec_col).alias("nrm")
+    )
+    va = withnorm.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("nrm").alias("na"))
+    vb = withnorm.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb"))
+    sim = F.when(
+        (F.col("na") == 0.0) | (F.col("nb") == 0.0), F.lit(None).cast("double")
+    ).otherwise(V.round6(V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))))
     return (
-        joined.select("id_a", "id_b", sim.alias("similarity"))
+        _attach(cands, va, vb)
+        .select("id_a", "id_b", sim.alias("similarity"))
         .where(F.col("similarity").isNotNull() & (F.col("similarity") >= threshold))
     )

@@ -23,7 +23,7 @@ Spark mapping (the part that matters at 100 TB):
   rows per query, so the shuffle carries O(batches · queries · k·f) rows
   — never the |corpus|×|queries| scored relation.  The exact top-k is
   then re-scored at full precision over the per-query survivors (a
-  broadcast join), same as the IVF-SQ8 rescore.
+  broadcast join).
 
 Scoring is cosine: vectors are unit-normalized before fit/encode, so the
 subspace dot products sum to the approximate cosine directly.  The coarse
@@ -52,7 +52,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import vector as V
 
 DEFAULT_SEED = 42
 FIT_SAMPLE_CAP = 100_000
@@ -324,7 +323,6 @@ def pq_search_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_queries: int = 10_000,
-    rescore_arrow: bool | None = None,
     residual_index=None,
     _qrows: list | None = None,
 ) -> DataFrame:
@@ -447,42 +445,16 @@ def pq_search_batch(
     # (the wide query vector attaches from the tiny queries frame, never
     # rides a per-candidate broadcast).  (query,id) pairs are unique by
     # construction — each encoded id lives in exactly one Arrow batch —
-    # so no dedup pass is needed.  The cosine kernel auto-switches like
-    # lsh.srp_neardup_pairs' verify: codegen fold with precomputed norms
-    # at narrow dims, Arrow GEMM (lsh.cosine_pairs_np, evaluated ONCE via
-    # a materialized column — a CASE around the raw UDF would run the
-    # Python stage twice) at wide dims.
-    if rescore_arrow is None:
-        rescore_arrow = dim >= 256
-    qvec_df = queries.select(query_id, query_vec)
-    base = (
+    # so no dedup pass is needed.  The cosine kernel follows the width
+    # rule, like lsh.srp_topk's verify.
+    from .lsh import _score_pairs
+
+    pairs = (
         corpus.select(id_col, vec_col)
         .join(F.broadcast(partial), id_col)
-        .join(F.broadcast(qvec_df), query_id)
+        .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
     )
-    if rescore_arrow:
-        from .lsh import cosine_pairs_np
-
-        rescored = (
-            base.withColumn("_raw", cosine_pairs_np(F.col(vec_col), F.col(query_vec)))
-            .select(
-                query_id,
-                F.col(id_col),
-                F.when(F.isnan(F.col("_raw")), F.lit(None).cast("double"))
-                .otherwise(F.round(F.col("_raw"), 6))
-                .alias("similarity"),
-            )
-            .where(F.col("similarity").isNotNull())
-        )
-    else:
-        cn, qn = V.l2_norm(vec_col), V.l2_norm(query_vec)
-        sim = F.when((cn == 0.0) | (qn == 0.0), F.lit(None).cast("double")).otherwise(
-            V.round6(V.dot(F.col(vec_col), F.col(query_vec)) / (cn * qn))
-        )
-        rescored = (
-            base.select(query_id, F.col(id_col), sim.alias("similarity"))
-            .where(F.col("similarity").isNotNull())
-        )
+    rescored = _score_pairs(pairs, vec_col, query_vec, dim, [query_id, id_col])
     w = Window.partitionBy(query_id).orderBy(F.col("similarity").desc(), F.col(id_col).asc())
     return rescored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
         F.col("rank") <= k
@@ -499,8 +471,8 @@ def write_ivf_pq_layout(
     residual: bool = False,
 ) -> None:
     """Persist the IVF-PQ store: (id, codes, centroid_id) partitioned by
-    centroid_id — encode is index-BUILD work (like `ivf.write_ivf_layout`
-    and a persisted `quantized_store`), and the partitioning turns
+    centroid_id — encode is index-BUILD work (like
+    `ivf.write_ivf_layout`), and the partitioning turns
     :func:`ivf_pq_search_batch`'s probe-union filter into file-level
     partition pruning.  ~10 B/vector on disk vs 256 B float32.  The
     centroid assignment rides the encode pass (``passthrough``) — one

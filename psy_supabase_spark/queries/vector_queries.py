@@ -123,18 +123,18 @@ def embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk.neighbors_above(emb, 0.5)
 
 
-# GEMM-route fixture: 64 fixed centroids × dim 64 = 4096 cells, exactly
-# ivf.GEMM_ROUTE_CELLS — the public batch entrypoint auto-routes to the
-# Arrow/GEMM kernel with NO override flag (asserted in the query body).
+# GEMM-route fixture: 64 fixed centroids (dim 64) and a 10-query batch —
+# far under max_queries, so the public batch entrypoint serves it with the
+# Arrow/GEMM kernel.
 _GEMM_N_CENTS = 64
 _GEMM_N_QUERIES = 10
 _GEMM_NPROBE = 8
 
-# SRP-ANN fixture (r8, r7 verdict #3): fixed seeded hyperplanes (the
-# operator's own seed-42 planes), fixed banding, the same 10-query
-# batch — lsh.srp_topk mirrored bit-for-bit in SQL: signature sign
-# bits from literal plane dot-products, band-key equi-join, exact
-# cosine over distinct candidates, salted-topk rank order.
+# SRP-ANN fixture: fixed seeded hyperplanes (the operator's own seed-42
+# planes), fixed banding, the same 10-query batch — lsh.srp_topk mirrored
+# bit-for-bit in SQL: signature sign bits from literal plane dot-products,
+# band-key equi-join, exact cosine over distinct candidates, salted-topk
+# rank order.
 _SRP_DIM = 64
 _SRP_N_PLANES = 24
 _SRP_BANDS = 4  # 6 bits/band: a real prune, not an all-pairs fallback
@@ -250,18 +250,18 @@ def ann_pruned_topk_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFra
     """X1 pruning logic, ORACLE-GATED, served by the GEMM batch kernel:
     IVF with a deterministic centroid set (the 64 vectors vec_id < 64)
     instead of KMeans, a fixed 10-query batch, and the
-    PUBLIC entrypoint `ivf.ivf_search_batch` with no route override —
-    64 lists × dim 64 = 4096 cells meets GEMM_ROUTE_CELLS exactly, so
-    the auto-route provably lands on `ivf_search_batch_gemm` (asserted
-    below; the r6 verdict's #4: the wide-dim serving path needed a
-    hash-green oracle row, not just pytest parity).  Proves
+    PUBLIC entrypoint `ivf.ivf_search_batch`.  A batch within
+    ``max_queries`` always lands on `ivf_search_batch_gemm` (only an
+    oversized batch takes the expression fallback), so this slot is the
+    GEMM serving kernel's hash-green oracle row: it proves
     assign/probe/mask/rank of the Arrow serving kernel value-for-value
-    against a recursive SQL mirror; the KMeans twin (ann_ivf_topk) adds
-    learned centroids, and the single-query expression path stays
-    pytest-parity-pinned (tests/test_gemm_search.py).
+    against a recursive SQL mirror.  The KMeans twin (ann_ivf_topk) adds
+    learned centroids; the expression fallback and the single-query
+    expression path stay pytest-parity-pinned
+    (tests/test_gemm_search.py).
 
-    Round 8 (r7 verdict #3): the slot also carries the train-free
-    SRP-bucketed ANN (`lsh.srp_topk`) under ``method = 'srp'`` — same
+    The slot also carries the train-free SRP-bucketed ANN
+    (`lsh.srp_topk`) under ``method = 'srp'`` — same
     10 fixed queries, the operator's own seed-42 hyperplanes, fixed
     24-plane/4-band banding, valve off — so BOTH batch-ANN routes
     (trained IVF/GEMM and train-free LSH) are hash-gated end-to-end:
@@ -279,12 +279,6 @@ def ann_pruned_topk_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFra
         .collect()
     ]
     dim = len(cents[0])
-    # the route is load-bearing: this query's oracle evidence is FOR the
-    # GEMM kernel, so fail loudly if a config drift would silently fall
-    # back to the expression path
-    assert len(cents) * dim >= ivf_ops.GEMM_ROUTE_CELLS, (
-        f"{len(cents)} lists x dim {dim} no longer auto-routes to GEMM"
-    )
     # the SRP mirror's plane literals are generated for _SRP_DIM — a
     # testdata width change must fail loudly, not hash-mismatch
     assert dim == _SRP_DIM, f"embeddings dim {dim} != SRP fixture {_SRP_DIM}"

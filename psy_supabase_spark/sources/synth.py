@@ -3,7 +3,7 @@
 The driver testdata fixes embeddings at dim 64 (TESTDATA.md), but the
 reference's declared workload is ``vector(1536)`` (reference
 `query.txt:84`) and its generator actually emits dim-2048 embeddings
-(reference `text_generator.py:314-316`).  GEMM batch shapes, SQ8/PQ
+(reference `text_generator.py:314-316`).  GEMM batch shapes, PQ
 compression ratios, and LSH banding constants all shift with dimension,
 so the vector family is validated at the real width against corpora
 produced here (BENCH extras ``dim1536_*``; tools/scale_step.py).

@@ -6,9 +6,9 @@ definition included) is unreferenced.  Decorated defs are skipped: a
 decorator (``@register``, ``@udf``, ...) is itself the reference that
 makes them reachable.  Dunder assignments (``__all__``, ...) are skipped.
 Mentions in docstrings and comments do not count.  A second scan pins
-the set of ``SPARK_GRAFT_*`` environment knobs the code reads, and a
-third the public methods of ``api.PsyEngine``.  Pure ``ast``; no
-Spark."""
+the set of ``SPARK_GRAFT_*`` environment knobs the code reads, a third
+the public methods of ``api.PsyEngine``, and a fourth that no function
+takes a kernel choice as a parameter.  Pure ``ast``; no Spark."""
 
 from __future__ import annotations
 
@@ -161,3 +161,28 @@ def engine_methods() -> set[str]:
 
 def test_engine_surface_is_the_reference_surface():
     assert engine_methods() == ENGINE_METHODS
+
+
+# A vector operator picks its kernel from the width it already has
+# (``functions/vector.is_wide``), never from a caller's switch: a switch only
+# tests set is a second way to run the operator that production never takes.
+KERNEL_SWITCH = re.compile(r"^(gemm|arrow|coarse_verify|.*_arrow)$")
+
+
+def kernel_switch_parameters() -> list[str]:
+    found = []
+    for path in _py_files([PACKAGE]):
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                found.extend(
+                    f"{path.relative_to(ROOT)}:{node.lineno} {arg.arg}"
+                    for arg in (*a.posonlyargs, *a.args, *a.kwonlyargs)
+                    if KERNEL_SWITCH.match(arg.arg)
+                )
+    return found
+
+
+def test_kernel_choice_is_not_a_parameter():
+    found = kernel_switch_parameters()
+    assert not found, "kernel switches as parameters:\n" + "\n".join(found)

@@ -199,33 +199,6 @@ def test_ivf_search_batch_matches_per_query(spark):
             assert got[(q.query_id, rank)] == (r.vec_id, r.similarity)
 
 
-def test_ivf_sq8_composition(spark):
-    """IVF-SQ8: int8-quantized vectors inside the IVF lists; search =
-    dequantized first pass over probed lists + full-precision rescore.
-    Must equal the full-precision IVF search on the same probes."""
-    from psy_supabase_spark.functions import vector as V
-
-    emb = load_table(spark, SF, "embeddings")
-    index = ivf.build_ivf(emb, n_lists=8)
-    qvec = list(emb.where(F.col("vec_id") == 3).select("embedding").head()[0])
-    want = [r.vec_id for r in ivf.ivf_search(index, qvec, k=5, nprobe=4).collect()]
-
-    # storage form: (vec_id, centroid_id, int8 payload) — 3.5x smaller lists
-    sq8 = index.assigned.select(
-        "vec_id", "centroid_id", V.quantize_int8("embedding").alias("qs")
-    )
-    probe_ids = ivf.rank_centroids(index.centers, qvec)[:4]
-    firstpass = (
-        sq8.where(F.col("centroid_id").isin(probe_ids))
-        .select("vec_id", V.dequantize_int8("qs").alias("embedding"))
-    )
-    cands = [r.vec_id for r in topk.topk_similarity(firstpass, qvec, k=15).collect()]
-    rescored = topk.topk_similarity(
-        emb.where(F.col("vec_id").isin(cands)), qvec, k=5
-    )
-    assert [r.vec_id for r in rescored.collect()] == want
-
-
 # ---- mega-bucket valves (round-4: the 100 TB quadratic-reducer guard) ----
 
 
@@ -303,28 +276,6 @@ def test_srp_bucket_cap_drops_degenerate_bucket(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = lsh.srp_neardup_pairs(emb, 0.5, bucket_cap=100)
     assert out.count() == 0  # zero-norm pairs are NULL-sim anyway; valve keeps it linear
-
-
-def test_ivf_search_batch_sq8_matches_full_precision(spark):
-    # IVF-SQ8 serving: int8 first pass + full-precision rescore of the top
-    # k*rescore_factor returns the SAME top-k (ids, sims, ranks) as the
-    # full-precision batch path ON THIS DATASET at the default
-    # rescore_factor — an empirical pin, not a guarantee: int8 rounding
-    # could flip near-tied candidates at the k*rescore_factor boundary on
-    # adversarial data (see ivf_search_batch docstring).  If this ever
-    # breaks after an innocuous change, weaken to id-set recall rather
-    # than forcing rank equality.
-    sf = "/root/testdata/sf0.01"
-    emb = load_table(spark, sf, "embeddings")
-    index = ivf.build_ivf_cached(emb, f"{sf}/embeddings", n_lists=8)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    full = ivf.ivf_search_batch(index, queries, k=5, nprobe=4)
-    sq8 = ivf.ivf_search_batch(index, queries, k=5, nprobe=4, sq8=True)
-    want = {(r.query_id, r.rank): (r.vec_id, r.similarity) for r in full.collect()}
-    got = {(r.query_id, r.rank): (r.vec_id, r.similarity) for r in sq8.collect()}
-    assert got == want
 
 
 def test_srp_hot_id_salting_row_identical(spark):

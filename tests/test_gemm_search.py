@@ -5,14 +5,21 @@ The GEMM path exists because the expression path's per-element HOF fold
 and per-centroid literal expressions stop being the right trade at the
 reference's real dimensionality (vector(1536), query.txt:84) — parity
 with the expression path is pinned here at dim 64, and the wide path is
-smoke-validated at dim 1536."""
+smoke-validated at dim 1536.  Kernels picked by width
+(functions/vector.is_wide) are pinned against each other at dim 64 by
+setting ``vector.GEMM_MIN_DIM`` to 0, which sends every site to its
+wide kernel."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
-from psy_supabase_spark.operators import ivf, topk
+from psy_supabase_spark.functions import vector as V
+from psy_supabase_spark.operators import ivf, lsh, topk
 from psy_supabase_spark.sources.catalog import load_table
 from psy_supabase_spark.sources.synth import scaled_documents, synthetic_embeddings
 
@@ -26,31 +33,34 @@ def _rows(df):
     }
 
 
+def _gemm_scored(df) -> bool:
+    """Does the plan score through the GEMM kernel (ivf_score_gemm's
+    ``score`` mapInPandas)?"""
+    return "MapInPandas score(" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def _expression_route(index, queries, **kw):
+    """``ivf_search_batch`` through its expression fallback: a
+    ``max_queries`` below the batch size is the only way in."""
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = ivf.ivf_search_batch(index, queries, max_queries=1, **kw)
+    assert any(
+        w.category is RuntimeWarning and "falling back" in str(w.message) for w in caught
+    )
+    assert not _gemm_scored(out)
+    return out
+
+
 def test_gemm_batch_parity_with_expression_path(spark):
     emb = load_table(spark, SF, "embeddings")
     index = ivf.build_ivf(emb, n_lists=8)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    expr = _rows(ivf.ivf_search_batch(index, queries, k=5, nprobe=3))
+    expr = _rows(_expression_route(index, queries, k=5, nprobe=3))
     gemm = _rows(ivf.ivf_search_batch_gemm(index, queries, k=5, nprobe=3))
-    assert gemm == expr
-
-
-def test_gemm_sq8_parity_with_expression_sq8(spark):
-    emb = load_table(spark, SF, "embeddings")
-    index = ivf.build_ivf(emb, n_lists=8)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    store = ivf.quantized_store(index)
-    expr = _rows(
-        ivf.ivf_search_batch(index, queries, k=5, nprobe=3, sq8=True, sq8_store=store)
-    )
-    gemm = _rows(
-        ivf.ivf_search_batch_gemm(index, queries, k=5, nprobe=3, sq8_store=store)
-    )
-    assert gemm == expr
+    assert gemm == expr and len(expr) == 25
 
 
 def test_gemm_full_probe_equals_exact(spark):
@@ -122,62 +132,22 @@ def test_scaled_documents_preserves_dup_structure(spark):
     assert kept == orig
 
 
-def test_quantized_store_arrow_parity(spark):
-    """Arrow/numpy quantization must be ROW-IDENTICAL to the codegen HOF
-    spelling (HALF_UP rounding, scale, int8 codes, coarse norm)."""
-    emb = load_table(spark, SF, "embeddings")
-    index = ivf.build_ivf(emb, n_lists=4)
-    expr = {
-        r.vec_id: (r.centroid_id, r._qs.scale, tuple(r._qs.q), r._qnorm)
-        for r in ivf.quantized_store(index, arrow=False).collect()
-    }
-    arrow = {
-        r.vec_id: (r.centroid_id, r._qs.scale, tuple(r._qs.q), r._qnorm)
-        for r in ivf.quantized_store(index, arrow=True).collect()
-    }
-    assert arrow == expr
-
-
-def test_quantized_store_arrow_handles_halfway_and_zero(spark):
-    import pandas as pd  # noqa: F401
-
-    df = spark.createDataFrame(
-        [
-            (0, [1.0, 0.5, -0.5, 0.0]),   # ±63.5 after scaling → HALF_UP ±64
-            (1, [0.0, 0.0, 0.0, 0.0]),    # zero vector → scale 1, all-0 codes
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    index = ivf.IVFIndex(centers=[[1.0, 0.0, 0.0, 0.0]], assigned=None)
-    index.assigned = ivf.assign_to_centroids(df, index.centers)
-    expr = {
-        r.vec_id: (r._qs.scale, tuple(r._qs.q), r._qnorm)
-        for r in ivf.quantized_store(index, arrow=False).collect()
-    }
-    arrow = {
-        r.vec_id: (r._qs.scale, tuple(r._qs.q), r._qnorm)
-        for r in ivf.quantized_store(index, arrow=True).collect()
-    }
-    assert arrow == expr
-    assert expr[0][1] == (127, 64, -64, 0)
-    assert expr[1][1] == (0, 0, 0, 0)
-
-
-def test_srp_arrow_verify_parity(spark):
+def test_srp_arrow_verify_parity(spark, monkeypatch):
     """Arrow GEMM verify must emit the same pairs (ids AND rounded sims)
-    as the expression-fold verify at dim 64."""
-    from psy_supabase_spark.operators import lsh
-
+    as the expression-fold verify at dim 64, on both verify routes."""
     emb = load_table(spark, SF, "embeddings")
-    expr = {
-        (r.id_a, r.id_b, r.similarity)
-        for r in lsh.srp_neardup_pairs(emb, 0.3, verify_arrow=False).collect()
-    }
-    arrow = {
-        (r.id_a, r.id_b, r.similarity)
-        for r in lsh.srp_neardup_pairs(emb, 0.3, verify_arrow=True).collect()
-    }
-    assert arrow == expr and len(expr) > 0
+
+    def pairs(route):
+        return {
+            (r.id_a, r.id_b, r.similarity)
+            for r in lsh.srp_neardup_pairs(emb, 0.3, verify_route=route).collect()
+        }
+
+    expr = {route: pairs(route) for route in ("join", "broadcast")}
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 0)
+    arrow = {route: pairs(route) for route in ("join", "broadcast")}
+    assert arrow == expr and expr["join"] == expr["broadcast"]
+    assert len(expr["join"]) > 0
 
 
 def test_cosine_pairs_np_degenerate_rows(spark):
@@ -225,25 +195,28 @@ def test_suggest_banding_low_threshold_clamps():
 
 
 def test_batch_search_auto_routes_to_gemm(spark):
-    """n_lists x dim >= GEMM_ROUTE_CELLS auto-delegates ivf_search_batch
-    to the GEMM path — rows must equal the pinned expression spelling."""
+    """A batch within max_queries routes ivf_search_batch to the GEMM
+    kernel, with no warning — rows must equal the expression fallback."""
     emb = load_table(spark, SF, "embeddings")
-    index = ivf.build_ivf(emb, n_lists=80)  # 80 x 64 = 5120 >= 4096
+    index = ivf.build_ivf(emb, n_lists=80)
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    auto = _rows(ivf.ivf_search_batch(index, queries, k=5, nprobe=3))
-    expr = _rows(ivf.ivf_search_batch(index, queries, k=5, nprobe=3, gemm=False))
-    assert auto == expr
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        auto = ivf.ivf_search_batch(index, queries, k=5, nprobe=3)
+    assert _gemm_scored(auto)
+    expr = _rows(_expression_route(index, queries, k=5, nprobe=3))
+    assert _rows(auto) == expr
 
 
 def test_dim2048_smoke_all_kernels(spark):
     """The reference's ACTUAL embedding width is 2048 (text_generator.py:
     314-316, vs the declared vector(1536) of query.txt:84) — one smoke
     over the full wide-dim kernel set at that width pins that nothing
-    hard-codes a dimension: GEMM search, Arrow quantize + SQ8 ladder,
-    PQ encode/ADC (m=16 -> dsub 128), Arrow verify."""
-    from psy_supabase_spark.operators import lsh, pq
+    hard-codes a dimension: GEMM search, PQ encode/ADC (m=16 -> dsub
+    128) with the Arrow rescore, Arrow verify."""
+    from psy_supabase_spark.operators import pq
 
     corpus = synthetic_embeddings(spark, 300, 2048, n_modes=30, seed=7)
     index = ivf.build_ivf(corpus, n_lists=8)
@@ -254,20 +227,16 @@ def test_dim2048_smoke_all_kernels(spark):
     tops = {r.query_id: r.vec_id for r in got if r.rank == 1}
     assert tops == {0: 0, 1: 1}
 
-    store = ivf.quantized_store(index)  # auto-Arrow at this width
-    got = ivf.ivf_search_batch_gemm(index, queries, k=3, nprobe=2, sq8_store=store).collect()
-    assert {r.query_id: r.vec_id for r in got if r.rank == 1} == {0: 0, 1: 1}
-
     books = pq.pq_fit(corpus, m=16, fit_sample_cap=300)
     assert books.dsub == 128
     enc = pq.pq_encode(corpus, books)
-    got = pq.pq_search_batch(enc, queries, books, corpus, k=3).collect()  # auto-Arrow rescore
+    got = pq.pq_search_batch(enc, queries, books, corpus, k=3).collect()  # Arrow rescore at this width
     assert {r.query_id: r.vec_id for r in got if r.rank == 1} == {0: 0, 1: 1}
 
     n_planes, bands = lsh.suggest_banding(300, 0.9)
     pairs = lsh.srp_neardup_pairs(
         corpus, 0.9, dim=2048, n_planes=n_planes, bands=bands
-    )  # auto-Arrow verify
+    )  # Arrow verify at this width
     assert pairs.count() > 0  # 10 near-copies per mode -> plenty of pairs
 
 
@@ -308,39 +277,6 @@ def test_gemm_search_prunes_persisted_wide_layout(spark, tmp_path):
     assert _re.search(r"PartitionFilters: \[[^\]]*centroid_id", plan)
     got = {r.query_id: r.vec_id for r in out.collect() if r.rank == 1}
     assert got == {0: 0, 1: 1, 2: 2}
-
-
-def test_quantized_store_arrow_parity_knife_edges(spark):
-    """Adversarial sweep at the HALF_UP boundaries: elements engineered
-    so x/scale lands on (or a ulp around) k+0.5 for many k, plus sign
-    flips and near-zero values — the two rounding spellings must agree
-    on every code."""
-    rows = []
-    vid = 0
-    for denom_max in (1.0, 3.7, 127.0):
-        scale = denom_max / 127.0
-        elems = [denom_max]  # pins the scale
-        for k in range(0, 126, 7):
-            elems += [(k + 0.5) * scale, -(k + 0.5) * scale]
-        for eps in (1e-16, -1e-16):
-            elems += [(63.5 + eps) * scale]
-        elems += [0.0, scale * 1e-12, -scale * 1e-12]
-        # pad to a fixed dim of 64
-        elems = (elems + [0.0] * 64)[:64]
-        rows.append((vid, [float(x) for x in elems]))
-        vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    index = ivf.IVFIndex(centers=[[1.0] + [0.0] * 63], assigned=None)
-    index.assigned = ivf.assign_to_centroids(df, index.centers)
-    expr = {
-        r.vec_id: (r._qs.scale, tuple(r._qs.q), r._qnorm)
-        for r in ivf.quantized_store(index, arrow=False).collect()
-    }
-    arrow = {
-        r.vec_id: (r._qs.scale, tuple(r._qs.q), r._qnorm)
-        for r in ivf.quantized_store(index, arrow=True).collect()
-    }
-    assert arrow == expr
 
 
 def test_scaled_documents_factor_guard(spark):
@@ -392,131 +328,82 @@ def test_suggest_banding_invariants():
                 assert recall >= 0.95 - 1e-9
 
 
-def test_quantized_store_arrow_skips_malformed(spark):
-    """NULL / wrong-dim embeddings must be SKIPPED by the Arrow quant
-    kernel (np.stack would otherwise crash the task) — the same ok-mask
-    contract as pq_encode and the GEMM scorer.  The expression kernel
-    NULLs such rows instead; every scoring path drops NULLs, so the
-    SERVABLE row sets agree."""
-    df = spark.createDataFrame(
-        [
-            (0, [1.0, 0.5, -0.5, 0.0], 0),
-            (1, None, 0),
-            (2, [1.0], 0),  # wrong dim
-            (3, [0.25, 0.25, 0.25, 0.25], 0),
-        ],
-        "vec_id long, embedding array<double>, centroid_id int",
-    )
-    index = ivf.IVFIndex(centers=[[1.0, 0.0, 0.0, 0.0]], assigned=df)
-    arrow_rows = ivf.quantized_store(index, arrow=True).collect()
-    assert sorted(r.vec_id for r in arrow_rows) == [0, 3]
-    expr_ok = {
-        r.vec_id: (r._qs.scale, tuple(r._qs.q), r._qnorm)
-        for r in ivf.quantized_store(index, arrow=False).collect()
-        if r._qs is not None
-        and r._qs.q is not None
-        and len(r._qs.q) == 4
-    }
-    got = {r.vec_id: (r._qs.scale, tuple(r._qs.q), r._qnorm) for r in arrow_rows}
-    assert got == {k: expr_ok[k] for k in (0, 3)}
-
-
 def test_ivf_search_batch_max_queries_passthrough(spark):
-    """The GEMM auto-route's driver-side query fetch is bounded by
-    max_queries — and ivf_search_batch must forward the caller's bound
-    rather than hard-failing batches over the built-in default
-    (ADVICE r6: previously-working large batches on wide indexes broke
-    when the auto-route landed)."""
-    import pytest
-
+    """The GEMM route's driver-side query fetch is bounded by
+    max_queries, and ivf_search_batch forwards the caller's bound rather
+    than the built-in default: a batch AT the bound stays on the GEMM
+    route, one query over it is refused by the GEMM entry point."""
     emb = load_table(spark, SF, "embeddings")
     index = ivf.build_ivf(emb, n_lists=8)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    with pytest.raises(ValueError, match="max_queries"):
-        ivf.ivf_search_batch(index, queries, k=3, nprobe=2, gemm=True, max_queries=3)
-    got = ivf.ivf_search_batch(
-        index, queries, k=3, nprobe=2, gemm=True, max_queries=5
-    )
+    with pytest.raises(ivf.QueryBatchTooLarge, match="max_queries"):
+        ivf.ivf_search_batch_gemm(index, queries, k=3, nprobe=2, max_queries=4)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = ivf.ivf_search_batch(index, queries, k=3, nprobe=2, max_queries=5)
+    assert _gemm_scored(got)
     assert got.select("query_id").distinct().count() == 5
 
 
 def test_auto_route_falls_back_on_oversized_batch(spark):
-    """In AUTO mode a query batch over max_queries falls back to the
-    expression path (same rows) instead of raising; explicit gemm=True
-    keeps the hard error (r7: GEMM became the default route at every
-    size, so the bound must not break large-batch callers)."""
+    """A query batch over max_queries falls back to the expression path
+    (same rows as the GEMM route) instead of raising, and says so with a
+    RuntimeWarning: GEMM is the route at every size, so its bound must
+    not break large-batch callers."""
     emb = load_table(spark, SF, "embeddings")
     index = ivf.build_ivf(emb, n_lists=8)
     queries = emb.where(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    import warnings
-
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        auto = _rows(
-            ivf.ivf_search_batch(index, queries, k=3, nprobe=2, max_queries=4)
-        )
-    expr = _rows(ivf.ivf_search_batch(index, queries, k=3, nprobe=2, gemm=False))
-    assert auto == expr
-    # ADVICE r7: the silent route change must be loud — the fallback warns
+        fallback = ivf.ivf_search_batch(index, queries, k=3, nprobe=2, max_queries=4)
     msgs = [str(w.message) for w in caught if w.category is RuntimeWarning]
     assert any("falling back" in m for m in msgs), msgs
-    # sq8 stays honored through the fallback (expression path scores the
-    # quantized store coarse-then-rescore, never silently full-precision)
-    with warnings.catch_warnings(record=True) as caught_sq8:
-        warnings.simplefilter("always")
-        auto_sq8 = _rows(
-            ivf.ivf_search_batch(
-                index, queries, k=3, nprobe=2, max_queries=4, sq8=True
-            )
-        )
-    expr_sq8 = _rows(
-        ivf.ivf_search_batch(index, queries, k=3, nprobe=2, gemm=False, sq8=True)
-    )
-    assert auto_sq8 == expr_sq8
-    assert any(
-        "falling back" in str(w.message)
-        for w in caught_sq8
-        if w.category is RuntimeWarning
-    )
+    assert not _gemm_scored(fallback)
+    gemm = _rows(ivf.ivf_search_batch_gemm(index, queries, k=3, nprobe=2))
+    assert _rows(fallback) == gemm and len(gemm) == 18
 
 
-def test_coarse_verify_row_identical_and_sound(spark):
-    """The int8 coarse pre-verify must be a PURE optimization: output
-    row-identical to the direct verify at both widths (the drop rule
-    threshold - (eps_a + eps_b) is a sound quantization bound, so only
-    provably-failing pairs are dropped), including degenerate rows
-    (NULL / zero / wrong-length vectors)."""
-    from psy_supabase_spark.operators import lsh
+def test_coarse_verify_row_identical_and_sound(spark, monkeypatch):
+    """The int8 coarse pre-verify (the join route at the GEMM widths) must
+    be a PURE optimization: output row-identical to the direct verify of
+    the broadcast route (the drop rule threshold - (eps_a + eps_b) is a
+    sound quantization bound, so only provably-failing pairs are
+    dropped), including degenerate rows (NULL / zero / wrong-length
+    vectors)."""
     from psy_supabase_spark.sources.synth import synthetic_embeddings
 
     def rows(df):
         return {(r.id_a, r.id_b, r.similarity) for r in df.collect()}
 
-    # narrow width (expression kernels), degenerate rows mixed in
+    # wide width: planted near-dup modes, degenerate rows mixed in
+    wemb = synthetic_embeddings(spark, 1_000, 512, n_modes=100)
+    degen = spark.createDataFrame(
+        [(100001, None), (100002, [0.0] * 512), (100003, [1.0, 2.0])],
+        "vec_id long, embedding array<double>",
+    )
+    wide = wemb.select("vec_id", "embedding").unionByName(degen)
+    np_, b_ = lsh.suggest_banding(1_000, 0.9, dim=512)
+    kw = dict(dim=512, n_planes=np_, bands=b_)
+    coarse = rows(lsh.srp_neardup_pairs(wide, 0.9, verify_route="join", **kw))
+    direct = rows(lsh.srp_neardup_pairs(wide, 0.9, verify_route="broadcast", **kw))
+    assert coarse == direct
+    assert len(coarse) > 0  # planted modes must actually produce pairs
+
+    # dim 64 sent to the wide kernels: the coarse pass runs on the testdata
     emb = load_table(spark, SF, "embeddings")
     degen = spark.createDataFrame(
         [(100001, None), (100002, [0.0] * 64), (100003, [1.0, 2.0])],
         "vec_id long, embedding array<double>",
     )
     corpus = emb.select("vec_id", "embedding").unionByName(degen)
-    plain = rows(lsh.srp_neardup_pairs(corpus, 0.5, coarse_verify=False))
-    coarse = rows(lsh.srp_neardup_pairs(corpus, 0.5, coarse_verify=True))
-    assert coarse == plain
-
-    # wide width (Arrow kernels + auto coarse): planted near-dup modes.
-    # verify_route pinned to "join" — the route where the coarse int8
-    # pre-drop exists (auto would take the small-corpus broadcast route)
-    wemb = synthetic_embeddings(spark, 1_000, 512, n_modes=100)
-    np_, b_ = lsh.suggest_banding(1_000, 0.9, dim=512)
-    kw = dict(dim=512, n_planes=np_, bands=b_, verify_route="join")
-    wide_plain = rows(lsh.srp_neardup_pairs(wemb, 0.9, coarse_verify=False, **kw))
-    wide_coarse = rows(lsh.srp_neardup_pairs(wemb, 0.9, **kw))  # auto → coarse ON
-    assert wide_coarse == wide_plain
-    assert len(wide_coarse) > 0  # planted modes must actually produce pairs
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 0)
+    coarse = rows(lsh.srp_neardup_pairs(corpus, 0.3, verify_route="join"))
+    direct = rows(lsh.srp_neardup_pairs(corpus, 0.3, verify_route="broadcast"))
+    assert coarse == direct and len(coarse) > 0
 
 
 def test_srp_topk_recall_and_shape(spark):

@@ -131,23 +131,6 @@ def test_valved_lsh_reuses_band_exchange(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_sq8_batch_plan_broadcasts_and_avoids_cartesian(spark):
-    from pyspark.sql import functions as F
-
-    from psy_supabase_spark.operators import ivf
-    from psy_supabase_spark.sources.catalog import load_table
-
-    emb = load_table(spark, SF, "embeddings")
-    index = ivf.build_ivf_cached(emb, f"{SF}/embeddings", n_lists=4)
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    out = ivf.ivf_search_batch(index, queries, k=3, nprobe=2, sq8=True)
-    plan = physical_plan(out)
-    assert "BroadcastHashJoin" in plan  # probes + candidates broadcast onto the store
-    assert "CartesianProduct" not in plan
-
-
 def test_registry_is_exactly_fifty_and_fully_oracled():
     """The driver records exactly the first 50 registrations (round-1
     behavior pinned in registry.py) — a 51st would be silently dropped

@@ -194,12 +194,12 @@ def test_append_to_pq_layout(spark, emb, books, tmp_path):
     assert got[0].vec_id == 450
 
 
-def test_pq_rescore_arrow_parity(spark):
+def test_pq_rescore_arrow_parity(spark, monkeypatch):
     """The Arrow rescore kernel must reproduce the expression rescore
-    row-for-row (ids, rounded sims, ranks) at dim 64."""
-    from pyspark.sql import functions as F
-
-    from psy_supabase_spark.sources.catalog import load_table
+    row-for-row (ids, rounded sims, ranks) at dim 64, and run the cosine
+    UDF once per pair: neither the NaN→NULL CASE around it nor the NULL
+    filter over it may add a second evaluation."""
+    from psy_supabase_spark.functions import vector as V
 
     emb = load_table(spark, SF, "embeddings")
     books = pq.pq_fit(emb, m=8)
@@ -207,13 +207,19 @@ def test_pq_rescore_arrow_parity(spark):
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    rows = lambda arrow: {  # noqa: E731
-        (r.query_id, r.vec_id, r.similarity, r.rank)
-        for r in pq.pq_search_batch(
-            enc, queries, books, emb, k=5, rescore_arrow=arrow
-        ).collect()
-    }
-    assert rows(True) == rows(False)
+
+    def search():
+        return pq.pq_search_batch(enc, queries, books, emb, k=5)
+
+    def rows(df):
+        return {(r.query_id, r.vec_id, r.similarity, r.rank) for r in df.collect()}
+
+    expr = rows(search())
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 0)
+    wide = search()
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1 and "pythonUDF1" not in plan
+    assert rows(wide) == expr and len(expr) == 25
 
 
 def test_vectorized_probe_union_matches_rank_centroids(spark):

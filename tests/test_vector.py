@@ -98,49 +98,6 @@ def test_neighbors_above_guards_against_production_use(spark):
     assert out.count() == 3  # all identical unit vectors pair up
 
 
-def test_int8_quantization_roundtrip_bounds(spark):
-    from psy_supabase_spark.sources.catalog import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    both = emb.select(
-        "vec_id",
-        "embedding",
-        V.dequantize_int8(V.quantize_int8("embedding")).alias("deq"),
-        V.quantize_int8("embedding").alias("qs"),
-    )
-    # per-element |error| <= scale/2; cosine(original, dequantized) ~ 1
-    checked = both.select(
-        F.array_max(
-            F.zip_with("embedding", "deq", lambda a, b: F.abs(a.cast("double") - b))
-        ).alias("max_err"),
-        (F.col("qs.scale") / 2.0 + 1e-12).alias("bound"),
-        V.cosine_similarity("embedding", "deq").alias("cos"),
-    ).collect()
-    assert all(r.max_err <= r.bound for r in checked)
-    assert all(r.cos is None or r.cos > 0.999 for r in checked)
-    # zero vector: scale falls back to 1.0, roundtrip stays all-zero
-    z = spark.createDataFrame([([0.0] * 4,)], "embedding array<double>")
-    rz = z.select(V.dequantize_int8(V.quantize_int8("embedding")).alias("d")).head()
-    assert list(rz.d) == [0.0] * 4
-
-
-def test_quantized_first_pass_tracks_exact_topk(spark):
-    """The serving pattern: rank on dequantized int8, rescore top-k' in
-    full precision — must recover the exact top-k on real data."""
-    from psy_supabase_spark.sources.catalog import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    qvec = list(emb.where(F.col("vec_id") == 7).select("embedding").head()[0])
-    exact = [r.vec_id for r in topk.topk_similarity(emb, qvec, k=5).collect()]
-    deq = emb.select("vec_id", V.dequantize_int8(V.quantize_int8("embedding")).alias("embedding"))
-    # first pass over-fetches 3x, rescore in full precision
-    cand_ids = [r.vec_id for r in topk.topk_similarity(deq, qvec, k=15).collect()]
-    rescored = topk.topk_similarity(
-        emb.where(F.col("vec_id").isin(cand_ids)), qvec, k=5
-    )
-    assert [r.vec_id for r in rescored.collect()] == exact
-
-
 def test_query_cosine_bit_identical_to_inline(spark):
     # the driver-float query-norm spelling must equal the inline
     # three-fold cosine EXACTLY (same IEEE-754 ops, same order) — exact

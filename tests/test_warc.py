@@ -1266,3 +1266,25 @@ def test_gzip_corrupt_second_member_with_magic_stays_partial():
     )
     assert st.get("decode_error") and not st.get("trailing_garbage")
     assert total == 4_000  # only the first member's entity decoded
+
+
+def test_crawl_demo_shards_are_reproducible(monkeypatch):
+    """The crawl demo's synthetic records must not depend on the clock:
+    `cdx.index_warc_members(digest=True)` hashes their wire bytes, and a
+    gzip header written with the current time changes every digest from
+    one run to the next."""
+    import importlib.util
+    import time
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "examples" / "crawl_ingest_demo.py"
+    spec = importlib.util.spec_from_file_location("crawl_ingest_demo", path)
+    demo = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(demo)
+
+    def shard(now: float) -> bytes:
+        monkeypatch.setattr(time, "time", lambda: now)
+        # doc 0 and 3 carry a gzip Content-Encoding body inside the member
+        return b"".join(demo._warc_record(i, f"text {i}") for i in range(6))
+
+    assert shard(1_000_000.0) == shard(2_000_000.0)
