@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from .functions import json_ops
 from .functions import text as TX
-from .functions import vector as V
 from .functions.memo import per_gateway
 from .operators import ivf as ivf_ops
 from .operators import ml_udfs, topk, windows
@@ -89,9 +88,9 @@ class PsyEngine:
     ) -> None:
         """S5: append one conversation turn; engine assigns created_at
         and a STORED per-tenant interaction_id at insert time — the
-        reference's SERIAL (query.txt:63, r13 verdict: assign-at-append
-        keeps ids stable across later appends and makes the
-        build_context read path sort-free).  The one-row turn is a
+        reference's SERIAL (query.txt:63).  Assigning at append keeps
+        ids stable across later appends and makes the build_context
+        read path sort-free.  The one-row turn is a
         local frame (`sources.local.local_frame`): the append's ordinal
         probe, window and write then run no Python task."""
         df = local_frame(
@@ -173,86 +172,52 @@ class PsyEngine:
     def _head_dim(kb: DataFrame) -> int | None:
         """Width of the first NON-NULL stored embedding (None = no non-null
         vectors), at the cost of one head job whose filter may read past
-        the first row.  The batch route probes with it once per batch;
-        the single-query path runs it only when :meth:`_probe_kb` finds a
-        NULL first vector.  Never inside a registered query plan."""
+        the first row.  The batch route probes with it once per batch.
+        Never inside a registered query plan."""
         head = kb.select(F.size("embedding").alias("d")).where(
             F.col("embedding").isNotNull()
         ).head()
         return None if head is None else int(head["d"])
 
-    @classmethod
-    def _probe_kb(cls, kb: DataFrame) -> tuple[bool, int | None]:
-        """``(has rows, embedding width)`` from ONE head() of
-        ``size(embedding)`` over the scan, unfiltered: no row means an
-        empty knowledge base, a non-null width routes the query.  A
-        NULL first vector (``size`` gives NULL, or -1 with ANSI mode
-        off) falls back to :meth:`_head_dim`."""
-        head = kb.select(F.size("embedding").alias("d")).head()
-        if head is None:
-            return False, None
-        d = head["d"]
-        if d is None or d < 0:
-            return True, cls._head_dim(kb)
-        return True, int(d)
+    @staticmethod
+    def _probe_kb(kb: DataFrame) -> bool:
+        """Does the tenant have knowledge-base rows?  One head() job,
+        which decides the default-KB fallback."""
+        return kb.select("content").head() is not None
 
     def find_similar_documents(self, user_id: str, query_vec: Sequence[float], k: int = 5) -> DataFrame:
         """J1 server semantics: cosine DISTANCE ASC LIMIT k.  Uses the IVF
         index when built (reference builds ivfflat but never routes queries
-        through it — we fix that dead fast-path, SURVEY.md §3.1 step 8)."""
+        through it — we fix that dead fast-path, SURVEY.md §3.1 step 8).
+        Without an index it is :func:`topk.topk_distance` over the scan,
+        which picks its kernel from the query's width: no probe job."""
         index = self._ivf_indexes.get(sanitize_tenant_id(user_id))
         if index is not None:
             hits = ivf_ops.ivf_search(index, list(query_vec), k=k, id_col="content", vec_col="embedding")
             return hits.select("content", (F.lit(1.0) - F.col("similarity")).alias("distance"))
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
-        _, dim = self._probe_kb(kb)
-        if V.is_wide(dim):
-            hits = topk.topk_similarity_gemm(
-                kb, query_vec, k, dim=dim, id_col="content", embedding_col="embedding"
-            )
-            return hits.select(
-                "content", (F.lit(1.0) - F.col("similarity")).alias("distance")
-            )
-        return topk.topk_distance(
-            kb, list(query_vec), k=k, id_col="content", embedding_col="embedding"
-        ).select("content", "distance")
+        return topk.topk_distance(kb, list(query_vec), k=k, id_col="content", embedding_col="embedding")
 
     def get_relevant_documents(self, user_id: str, query_vec: Sequence[float], k: int = 5) -> DataFrame:
         """J2 client semantics: cosine SIMILARITY DESC top-k, with the
         reference's default-KB fallback (rag_processor.py:125-126).
 
         Serving is bound by per-job latency, so the path is cut to the
-        scan, ONE probe and one top-k job.  The probe answers both "is
-        the tenant's KB empty?" and "how wide are its vectors?".  Wide
-        KBs hand the query vector to the GEMM scorer straight from the
-        driver: a query frame built from a Python list would cost a job
-        of ``defaultParallelism`` Python tasks, each with a worker
-        set-up far above its work, only to be collected back.  The
-        finish is one ordered limit (TakeOrderedAndProject), so the
-        scorer's tasks are the request's only Python tasks.  Same
-        rounding and (similarity DESC, content ASC) ranking as
-        :func:`topk.topk_similarity` on either route (parity pinned in
-        tests)."""
+        scan, ONE probe (:meth:`_probe_kb`) and one top-k job:
+        :func:`topk.topk_similarity`, which picks its kernel from the
+        query's width and finishes with one ordered limit
+        (TakeOrderedAndProject) on either kernel."""
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
-        found, dim = self._probe_kb(kb)
-        if not found:
+        if not self._probe_kb(kb):
             kb = self.store.scan(KNOWLEDGE_BASE, user_id=DEFAULT_TENANT)
-            _, dim = self._probe_kb(kb)
-        if V.is_wide(dim):
-            return topk.topk_similarity_gemm(
-                kb, query_vec, k, dim=dim, id_col="content", embedding_col="embedding"
-            )
-        return topk.topk_similarity(
-            kb, list(query_vec), k=k, id_col="content", embedding_col="embedding"
-        ).select("content", "similarity")
+        return topk.topk_similarity(kb, list(query_vec), k=k, id_col="content", embedding_col="embedding")
 
     def create_vector_index(self, user_id: str, n_lists: int = 8) -> None:
         """X1: the reference's per-request `CREATE INDEX ivfflat` becomes
         an explicit batch KMeans build (reference query.txt:208-226).
         Indexes key on the SANITIZED tenant id — the partition the store
         actually writes — so two raw spellings of one tenant share one
-        index and add_documents' invalidation always hits it (r13
-        review)."""
+        index and add_documents' invalidation always hits it."""
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
         self._ivf_indexes[sanitize_tenant_id(user_id)] = ivf_ops.build_ivf(
             kb, n_lists=n_lists, id_col="content", vec_col="embedding"
@@ -284,17 +249,11 @@ class PsyEngine:
                 index, queries, k=k, nprobe=nprobe, id_col="content", vec_col="embedding"
             ).select("query_id", F.col("content"), "similarity", "rank")
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
-        # brute route picks the kernel by measured width: the expression
-        # KNN's per-pair fold is the narrow-dim winner (no Python
-        # boundary); at the reference's real widths (1536/2048) the GEMM
-        # twin wins by ~40× (SCALE.md §width validation).
-        d = self._head_dim(kb)
-        if V.is_wide(d):
-            hits = topk.knn_join_gemm(
-                kb, queries, k=k, corpus_id="content", corpus_vec="embedding", dim=d
-            )
-        else:
-            hits = topk.knn_join(kb, queries, k=k, corpus_id="content", corpus_vec="embedding")
+        # the corpus width lets knn_join pick its kernel (SCALE.md §width
+        # validation: the GEMM scorer wins by ~40× at 1536)
+        hits = topk.knn_join(
+            kb, queries, k=k, corpus_id="content", corpus_vec="embedding", dim=self._head_dim(kb)
+        )
         return hits.select("query_id", F.col("content"), "similarity", "rank")
 
     # ---- pipeline scalars (reference safety_handler / prompt_selector) ----
@@ -322,8 +281,8 @@ class PsyEngine:
         per-tenant ordinal `add_interaction` assigned at insert time
         (the reference's SERIAL, query.txt:63) — the read path neither
         re-sorts the tenant's full history by multi-KB text columns nor
-        renumbers when a later append lands (r13 verdict: the old
-        read-time row_number did both).
+        renumbers when a later append lands, as a read-time
+        row_number would.
 
         Three warehouse states (the merged-footer scan makes the
         column check DETERMINISTIC — a single-footer read could

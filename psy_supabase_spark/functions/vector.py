@@ -59,10 +59,16 @@ def l2_norm(a: ColumnOrName) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def cosine_from_norms(a: ColumnOrName, b: ColumnOrName, na: Column, nb: Column) -> Column:
+    """cos(a,b) from norms the caller already holds (a column computed once
+    per row, or a driver-side literal), unrounded; NULL if either norm is
+    zero.  Every cosine in the package is this one expression."""
+    return F.when((na == 0.0) | (nb == 0.0), F.lit(None).cast("double")).otherwise(dot(a, b) / (na * nb))
+
+
 def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
     """cos(a,b) in [-1,1]; NULL if either vector has zero norm."""
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na == 0.0) | (nb == 0.0), F.lit(None).cast("double")).otherwise(dot(a, b) / (na * nb))
+    return cosine_from_norms(a, b, l2_norm(a), l2_norm(b))
 
 
 def cosine_distance(a: ColumnOrName, b: ColumnOrName) -> Column:

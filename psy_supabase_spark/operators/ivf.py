@@ -271,7 +271,9 @@ def ivf_search(
 
     The ``centroid_id.isin(...)`` filter is exactly what prunes parquet
     partitions when the layout is written partitionBy("centroid_id") —
-    pgvector's probes, re-expressed as partition pruning.
+    pgvector's probes, re-expressed as partition pruning.  The exact
+    top-k within is :func:`.topk.topk_similarity`, which scores wide
+    queries with the GEMM kernel.
     """
     probe_ids = rank_centroids(index.centers, query_vec)[:nprobe]
     pruned = index.assigned.where(F.col("centroid_id").isin(probe_ids))
@@ -333,9 +335,9 @@ def search_layout(
     norm is a driver-side Python float (IEEE-754 like the JVM's, same
     left-to-right accumulation order, so similarities are bit-identical
     to the inline spelling — parity-asserted in tests).  Layouts without
-    the column (pre-r5) fall back to the three-fold inline cosine, and a
-    MIXED layout (pre-r5 files + post-r5 appends) is handled per row:
-    legacy rows read ``_vnorm`` as NULL, which coalesces to the inline
+    the column fall back to the three-fold inline cosine, and a MIXED
+    layout (files without the column plus later appends) is handled per
+    row: legacy rows read ``_vnorm`` as NULL, which coalesces to the inline
     norm instead of silently NULLing the row out of the top-k."""
     import math
 
@@ -346,9 +348,7 @@ def search_layout(
         qn = math.sqrt(sum((float(x) * float(x) for x in query_vec), 0.0))
         q = V.query_vector_lit(query_vec)
         nrm = F.coalesce(F.col("_vnorm"), V.l2_norm(vec_col))
-        sim = F.when(
-            (nrm == 0.0) | (F.lit(qn) == 0.0), F.lit(None).cast("double")
-        ).otherwise(V.round6(V.dot(F.col(vec_col), q) / (nrm * F.lit(qn))))
+        sim = V.round6(V.cosine_from_norms(vec_col, q, nrm, F.lit(qn)))
         return (
             df.select(id_col, sim.alias("similarity"))
             .where(F.col("similarity").isNotNull())
@@ -372,7 +372,6 @@ def ivf_search_batch(
     query_vec: str = "query_embedding",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_salts: int = 16,
     max_queries: int = 10_000,
 ) -> DataFrame:
     """N-query ANN through the IVF index in ONE distributed pass — the
@@ -396,8 +395,8 @@ def ivf_search_batch(
        rows — BROADCASTS onto the corpus equi-join on ``centroid_id``,
        so only probed lists are scored (with a partitionBy(centroid_id)
        layout that is file-level partition pruning).
-    3. Ranking is the salted two-phase top-k (operators/topk.knn_join's
-       shape): no reducer ever sorts more than its salt share.
+    3. Ranking is the salted two-phase top-k (`topk._salted_topk`, 16
+       salts): no reducer ever sorts more than its salt share.
 
     Per-query results equal ``ivf_search`` exactly on either route
     (tested)."""
@@ -449,17 +448,13 @@ def ivf_search_batch(
     # oracle-rounded values are unchanged (parity pinned in test_dedup).
     corpus_n = index.assigned.withColumn("_cn", V.l2_norm(vec_col))
     probes_full = probes.withColumn("_qn", V.l2_norm(query_vec))
-    sim = F.when(
-        (F.col("_cn") == 0.0) | (F.col("_qn") == 0.0), F.lit(None).cast("double")
-    ).otherwise(
-        V.round6(V.dot(F.col(vec_col), F.col(query_vec)) / (F.col("_cn") * F.col("_qn")))
-    )
+    sim = V.round6(V.cosine_from_norms(vec_col, query_vec, F.col("_cn"), F.col("_qn")))
     scored = (
         corpus_n.join(F.broadcast(probes_full), "centroid_id")
         .select(query_id, F.col(id_col), sim.alias("similarity"))
         .where(F.col("similarity").isNotNull())
     )
-    return _salted_topk(scored, k, query_id, id_col, n_salts)
+    return topk_ops._salted_topk(scored, k, query_id, id_col, 16)
 
 
 class QueryBatchTooLarge(ValueError):
@@ -471,8 +466,9 @@ class QueryBatchTooLarge(ValueError):
 def _collect_query_batch(
     queries: DataFrame, query_id: str, query_vec: str, max_queries: int
 ):
-    """Bounded driver fetch of the query batch (queries are the small side
-    by definition — same contract as the broadcast in ivf_search_batch)."""
+    """Bounded driver fetch of the query batch, shared by the GEMM and PQ
+    searches (queries are the small side by definition — same contract
+    as the broadcast in ivf_search_batch)."""
     qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
     if len(qrows) > max_queries:
         raise QueryBatchTooLarge(
@@ -481,12 +477,37 @@ def _collect_query_batch(
     return qrows
 
 
+def _nearest_lists(qmat, centers: list[list[float]], nprobe: int):
+    """Each query's ``nprobe`` nearest lists, in numpy, from one
+    (nq × dim)·(dim × n_lists) GEMM: same distances and tie-breaks as
+    :func:`rank_centroids` (zero-norm → +inf, ties on centroid id).
+    Returns ``(qunit, live, probes)``: the unit query rows (zero rows for
+    zero-norm queries), which queries have a norm, and per query its
+    probed centroid ids (none for a zero-norm query)."""
+    import numpy as np
+
+    qn = np.linalg.norm(qmat, axis=1)
+    live = qn > 0  # zero-norm queries produce NULL sims → no results
+    qunit = np.where(live[:, None], qmat / np.where(qn == 0, 1.0, qn)[:, None], 0.0)
+    cmat = np.array(centers, dtype=np.float64)
+    cn = np.linalg.norm(cmat, axis=1)
+    with np.errstate(invalid="ignore"):
+        cd = 1.0 - (qunit @ (cmat / np.where(cn == 0, 1.0, cn)[:, None]).T)
+    cd[:, cn == 0] = np.inf
+    cd[~live, :] = np.inf
+    n_lists = len(centers)
+    probes = [
+        np.lexsort((np.arange(n_lists), cd[qi]))[:nprobe] if live[qi] else np.arange(0)
+        for qi in range(len(qmat))
+    ]
+    return qunit, live, probes
+
+
 def _gemm_scorer(index: IVFIndex, qrows, nprobe: int, query_id: str, qid_type: str, id_col: str):
     """Driver half of GEMM scoring over driver-held ``qrows`` ((query id,
     vector) pairs): drops NULL / wrong-dim vectors exactly as the
-    expression paths do, picks each query's probes in numpy — same
-    distances and tie-breaks as :func:`rank_centroids` (zero-norm → +inf,
-    ties on centroid id) — and returns ``(probe_ids, out_schema,
+    expression paths do, picks each query's probes
+    (:func:`_nearest_lists`) and returns ``(probe_ids, out_schema,
     make_scorer)``.  ``make_scorer(vcol, keep)`` is the mapInPandas body:
     one (batch × dim)·(dim × nq) GEMM per Arrow batch, each query masked
     to ITS probe set, and only the per-batch top-``keep`` per query by
@@ -501,16 +522,7 @@ def _gemm_scorer(index: IVFIndex, qrows, nprobe: int, query_id: str, qid_type: s
         raise ValueError("empty query batch")
     qids = [r[0] for r in qrows]
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(qmat, axis=1)
-    live = qn > 0  # zero-norm queries produce NULL sims → no results
-    qunit = np.where(live[:, None], qmat / np.where(qn == 0, 1.0, qn)[:, None], 0.0)
-
-    cmat = np.array(index.centers, dtype=np.float64)
-    cn = np.linalg.norm(cmat, axis=1)
-    with np.errstate(invalid="ignore"):
-        cd = 1.0 - (qunit @ (cmat / np.where(cn == 0, 1.0, cn)[:, None]).T)
-    cd[:, cn == 0] = np.inf
-    cd[~live, :] = np.inf
+    qunit, live, probes = _nearest_lists(qmat, index.centers, nprobe)
     n_lists = len(index.centers)
     # the probe mask ships DENSE in the task closure — a loud valve, not
     # an OOM, when lists × queries explodes (auto-√N lists on a 10⁹-row
@@ -521,14 +533,9 @@ def _gemm_scorer(index: IVFIndex, qrows, nprobe: int, query_id: str, qid_type: s
             f"{len(qids)} queries exceeds 64M cells; split the query batch"
         )
     mask = np.zeros((n_lists, len(qids)), dtype=bool)  # (centroid, query)
-    union: set[int] = set()
-    for qi in range(len(qids)):
-        if not live[qi]:
-            continue
-        order = np.lexsort((np.arange(n_lists), cd[qi]))[:nprobe]
+    for qi, order in enumerate(probes):
         mask[order, qi] = True
-        union.update(int(c) for c in order)
-    probe_ids = sorted(union)
+    probe_ids = np.flatnonzero(mask.any(axis=1)).tolist()
 
     id_field = index.assigned.schema[id_col]
     out_schema = (
@@ -653,8 +660,6 @@ def ivf_search_batch_gemm(
     (parity-tested; the GEMM accumulates pairwise vs the fold's
     left-to-right — a last-ulp difference only, erased by round6 except
     on knife-edge rounding boundaries never observed)."""
-    from pyspark.sql import Window
-
     qrows = _collect_query_batch(queries, query_id, query_vec, max_queries)
     partial = ivf_score_gemm(
         index,
@@ -666,31 +671,5 @@ def ivf_search_batch_gemm(
         id_col=id_col,
         vec_col=vec_col,
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("similarity").desc(), F.col(id_col).asc()
-    )
-    return partial.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    return topk_ops._rank_per_query(partial, k, query_id, id_col)
 
-
-def _salted_topk(
-    scored: DataFrame, k: int, query_id: str, id_col: str, n_salts: int
-) -> DataFrame:
-    """Two-phase per-query top-k on a (query_id, id, similarity) frame:
-    salted partial top-k (no reducer sorts more than its salt share), then
-    the final k among the k·n_salts survivors."""
-    from pyspark.sql import Window
-
-    order = [F.col("similarity").desc(), F.col(id_col).asc()]
-    w1 = Window.partitionBy(query_id, "_salt").orderBy(*order)
-    partial = (
-        scored.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)))
-        .withColumn("_pr", F.row_number().over(w1))
-        .where(F.col("_pr") <= k)
-        .drop("_salt", "_pr")
-    )
-    w2 = Window.partitionBy(query_id).orderBy(*order)
-    return partial.withColumn("rank", F.row_number().over(w2).cast("bigint")).where(
-        F.col("rank") <= k
-    )

@@ -305,7 +305,6 @@ def srp_topk(
     bands: int | None = None,
     seed: int = DEFAULT_SEED,
     bucket_cap: int | None = dedup.DEFAULT_BUCKET_CAP,
-    n_salts: int = 16,
     brute_fallback: bool = False,
 ) -> DataFrame:
     """SRP-bucketed batch ANN top-k — the LSH alternative to IVF when no
@@ -325,8 +324,8 @@ def srp_topk(
        the corpus side;
     3. exact cosine over candidates only (kernel auto-picked by width,
        like the near-dup verify), then the salted two-phase per-query
-       top-k (`ivf._salted_topk` — no reducer sorts more than its salt
-       share).
+       top-k (`topk._salted_topk`, 16 salts — no reducer sorts more
+       than its salt share).
 
     Output schema matches `topk.knn_join` / `ivf.ivf_search_batch`:
     (query_id, id, similarity, rank).  Recall is the banding's candidate
@@ -335,8 +334,9 @@ def srp_topk(
     (pre-filter semantics).  ``brute_fallback=True`` completes those
     queries declaratively: the ranked LSH result is checkpointed ONCE
     (≤ |queries|·k rows), queries that came back with < k rows are
-    re-served whole by the exact brute KNN join (kernel picked by
-    width, like the near-dup verify), and the union replaces their
+    re-served whole by the exact brute KNN join (`topk.knn_join`
+    given ``dim``, so its kernel follows the same width rule as the
+    verify), and the union replaces their
     partial answers — full queries keep the cheap LSH rows, so the
     brute pass touches the corpus only when at least one query fell
     short, and only for those queries (broadcast side).  Scale: the
@@ -344,7 +344,6 @@ def srp_topk(
     join), candidates ride ids-only, and vectors re-attach once per
     surviving candidate."""
     from . import topk as topk_ops
-    from .ivf import _salted_topk
 
     if n_planes is None or bands is None:
         auto_p, auto_b = suggest_banding(corpus.count(), 0.9, dim=dim)
@@ -377,7 +376,7 @@ def srp_topk(
         .select(F.col("qid").alias(query_id), F.col("id").alias(id_col), "_cv", "_qv")
     )
     scored = _score_pairs(attached, "_cv", "_qv", dim, [query_id, id_col])
-    ranked = _salted_topk(scored, k, query_id, id_col, n_salts)
+    ranked = topk_ops._salted_topk(scored, k, query_id, id_col, 16)
     if not brute_fallback:
         return ranked
     # materialize the bounded LSH answer once so the per-query counts
@@ -392,10 +391,7 @@ def srp_topk(
     # under-k = queries absent from `full` (covers zero-candidate
     # queries, which never reach `ranked` at all)
     under_q = queries.join(F.broadcast(full), query_id, "left_anti")
-    # same width rule as the verify, so brute-completed rows use the same
-    # kernel as the LSH-scored rows in this result
-    join_fn = topk_ops.knn_join_gemm if V.is_wide(dim) else topk_ops.knn_join
-    brute = join_fn(
+    brute = topk_ops.knn_join(
         corpus,
         under_q,
         k,
@@ -403,6 +399,7 @@ def srp_topk(
         corpus_vec=vec_col,
         query_id=query_id,
         query_vec=query_vec,
+        dim=dim,
     ).select(query_id, id_col, "similarity", "rank")
     kept = ranked.join(F.broadcast(full), query_id, "left_semi").select(
         query_id, id_col, "similarity", "rank"
@@ -750,9 +747,7 @@ def srp_neardup_pairs(
     )
     va = withnorm.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("nrm").alias("na"))
     vb = withnorm.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb"))
-    sim = F.when(
-        (F.col("na") == 0.0) | (F.col("nb") == 0.0), F.lit(None).cast("double")
-    ).otherwise(V.round6(V.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))))
+    sim = V.round6(V.cosine_from_norms("va", "vb", F.col("na"), F.col("nb")))
     return (
         _attach(cands, va, vb)
         .select("id_a", "id_b", sim.alias("similarity"))

@@ -349,19 +349,17 @@ def pq_search_batch(
     cosine top-k per query, ranked like `ivf.ivf_search_batch`."""
     from pyspark.sql import Window
 
+    from .ivf import _collect_query_batch
+    from .topk import _rank_per_query
+
     dim = codebooks.m * codebooks.dsub
     # _qrows: a caller (ivf_pq_search_batch) that already collected the
     # bounded query batch passes it down — one driver round trip, not two
     qrows = (
         _qrows
         if _qrows is not None
-        else queries.select(query_id, query_vec).limit(max_queries + 1).collect()
+        else _collect_query_batch(queries, query_id, query_vec, max_queries)
     )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_search_batch: query batch exceeds max_queries={max_queries}; "
-            "split the batch or raise the bound"
-        )
     # NULL / wrong-dim query vectors can't be served (and would make the
     # query matrix ragged) — drop them like pq_encode drops malformed rows
     qrows = [r for r in qrows if r[1] is not None and len(r[1]) == dim]
@@ -420,8 +418,6 @@ def pq_search_batch(
                 {query_id: out_q, id_field.name: out_i, "_adc": out_s}
             )
 
-    from pyspark.sql import Window as _W
-
     # GLOBAL per-query cap at k·f on the approx score BEFORE the rescore:
     # the map-side partials emit O(#batches · nq · k·f) rows (that is the
     # combiner design — bounded shuffle), but rescoring all of them would
@@ -429,7 +425,7 @@ def pq_search_batch(
     # nq · k·f rows regardless of batch/partition count (measured 5-10×
     # on the dim-1536 batch-100: the uncapped rescore was the whole cost).
     # Ties on (_adc, id) — deterministic under any batching.
-    w_adc = _W.partitionBy(query_id).orderBy(F.col("_adc").desc(), F.col(id_field.name).asc())
+    w_adc = Window.partitionBy(query_id).orderBy(F.col("_adc").desc(), F.col(id_field.name).asc())
     # dropDuplicates guards against encoded stores with repeated ids
     # (append/union builds): each id lives in ONE Arrow batch only when
     # ids are unique, so without it a duplicated id could occupy several
@@ -455,10 +451,7 @@ def pq_search_batch(
         .join(F.broadcast(queries.select(query_id, query_vec)), query_id)
     )
     rescored = _score_pairs(pairs, vec_col, query_vec, dim, [query_id, id_col])
-    w = Window.partitionBy(query_id).orderBy(F.col("similarity").desc(), F.col(id_col).asc())
-    return rescored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
-        F.col("rank") <= k
-    )
+    return _rank_per_query(rescored, k, query_id, id_col)
 
 
 def write_ivf_pq_layout(
@@ -678,39 +671,18 @@ def ivf_pq_search_batch(
     # ONE bounded driver fetch, enforced BEFORE anything materializes;
     # the same rows are handed to pq_search_batch so it does not collect
     # a second time
-    qrows = queries.select(qid, qvec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_pq_search_batch: query batch exceeds max_queries={max_queries}; "
-            "split the batch or raise the bound"
-        )
+    qrows = ivf_ops._collect_query_batch(queries, qid, qvec, max_queries)
     dim = codebooks.m * codebooks.dsub
-    # vectorized probe selection — one (nq × dim)·(dim × n_lists) GEMM
-    # with rank_centroids' exact semantics (zero-norm → +inf, ties on
-    # centroid id); the per-query pure-Python spelling costs
-    # nq·n_lists·dim interpreter mults (~5M at a 100-query dim-1536
-    # batch — the round-6 width validation's last Python hot spot).
-    # Malformed vectors are skipped exactly as the search drops them.
+    # the GEMM search's vectorized probe selection (the per-query
+    # pure-Python spelling costs nq·n_lists·dim interpreter mults, ~5M at
+    # a 100-query dim-1536 batch).  Malformed vectors are skipped exactly
+    # as the search drops them.
     ok_rows = [r for r in qrows if r[1] is not None and len(r[1]) == dim]
     probe_union: list[int] = []
     if ok_rows:
         qm = np.array([r[1] for r in ok_rows], dtype=np.float64)
-        qn = np.linalg.norm(qm, axis=1)
-        live = qn > 0
-        qu = np.where(live[:, None], qm / np.where(qn == 0, 1.0, qn)[:, None], 0.0)
-        cm = np.array(index.centers, dtype=np.float64)
-        cn = np.linalg.norm(cm, axis=1)
-        cd = 1.0 - (qu @ (cm / np.where(cn == 0, 1.0, cn)[:, None]).T)
-        cd[:, cn == 0] = np.inf
-        cd[~live, :] = np.inf
-        n_lists = len(index.centers)
-        union: set[int] = set()
-        for qi in range(len(ok_rows)):
-            if not live[qi]:
-                continue
-            order = np.lexsort((np.arange(n_lists), cd[qi]))[:nprobe]
-            union.update(int(c) for c in order)
-        probe_union = sorted(union)
+        _, _, probes = ivf_ops._nearest_lists(qm, index.centers, nprobe)
+        probe_union = sorted({int(c) for p in probes for c in p})
     pruned = encoded.where(F.col("centroid_id").isin(probe_union))
     if corpus is None:
         corpus = index.assigned

@@ -12,14 +12,16 @@ TakeOrderedAndProject (per-partition heap + driver merge of k rows), which
 is exactly the scalable top-k: at 100 TB each task keeps a k-row heap and
 only k rows per partition cross the wire.  The N-query generalization
 broadcasts the (tiny) query side into a crossJoin — a broadcast
-nested-loop that scans the corpus once for all queries.
+nested-loop that scans the corpus once for all queries.  Each operator
+picks its kernel (Catalyst fold or the Arrow/GEMM scorer of
+operators/ivf.py) from the width it already has.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
@@ -32,22 +34,25 @@ def topk_similarity(
     *,
     embedding_col: str = "embedding",
     id_col: str = "vec_id",
-    score_col: str = "similarity",
-    extra_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Client-semantics top-k: cosine similarity DESC (ties → id ASC).
+    """Client-semantics top-k: cosine similarity DESC (ties → id ASC),
+    ``(id, similarity)`` out.
 
     Zero-norm rows rank NULL and are dropped, matching the reference's
-    nan-never-selected accident (`rag_processor.py:57-65`).
-    """
+    nan-never-selected accident (`rag_processor.py:57-65`).  The kernel
+    follows the query's width (functions/vector.is_wide): the Catalyst
+    fold at narrow widths, :func:`_topk_similarity_gemm` at wide ones,
+    same rounding and ranking.  A row whose width differs from the query's
+    scores on neither kernel."""
+    if V.is_wide(len(query_vec)):
+        return _topk_similarity_gemm(df, query_vec, k, embedding_col=embedding_col, id_col=id_col)
     sim = V.round6(_query_cosine(embedding_col, query_vec))
-    out = (
-        df.select(id_col, *extra_cols, sim.alias(score_col))
-        .where(F.col(score_col).isNotNull())
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
+    return (
+        df.select(id_col, sim.alias("similarity"))
+        .where(F.col("similarity").isNotNull())
+        .orderBy(F.col("similarity").desc(), F.col(id_col).asc())
         .limit(k)
     )
-    return out
 
 
 def _query_cosine(embedding_col: str, query_vec: Sequence[float]):
@@ -60,10 +65,7 @@ def _query_cosine(embedding_col: str, query_vec: Sequence[float]):
 
     qn = math.sqrt(sum((float(x) * float(x) for x in query_vec), 0.0))
     q = V.query_vector_lit(query_vec)
-    cn = V.l2_norm(embedding_col)
-    return F.when((cn == 0.0) | (F.lit(qn) == 0.0), F.lit(None).cast("double")).otherwise(
-        V.dot(F.col(embedding_col), q) / (cn * F.lit(qn))
-    )
+    return V.cosine_from_norms(embedding_col, q, V.l2_norm(embedding_col), F.lit(qn))
 
 
 def topk_distance(
@@ -73,17 +75,20 @@ def topk_distance(
     *,
     embedding_col: str = "embedding",
     id_col: str = "vec_id",
-    score_col: str = "distance",
-    extra_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Server-semantics top-k: cosine distance ASC LIMIT k — pgvector `<=>`
     parity (reference `query.txt:198-201`, which misnames the distance
-    column `similarity`; we do not repeat that)."""
+    column `similarity`; we do not repeat that).  ``(id, distance)`` out;
+    a wide query ranks by :func:`_topk_similarity_gemm` and reports
+    ``1 - similarity``."""
+    if V.is_wide(len(query_vec)):
+        hits = _topk_similarity_gemm(df, query_vec, k, embedding_col=embedding_col, id_col=id_col)
+        return hits.select(id_col, (F.lit(1.0) - F.col("similarity")).alias("distance"))
     dist = V.round6(F.lit(1.0) - _query_cosine(embedding_col, query_vec))
     return (
-        df.select(id_col, *extra_cols, dist.alias(score_col))
-        .where(F.col(score_col).isNotNull())
-        .orderBy(F.col(score_col).asc(), F.col(id_col).asc())
+        df.select(id_col, dist.alias("distance"))
+        .where(F.col("distance").isNotNull())
+        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k)
     )
 
@@ -97,26 +102,38 @@ def knn_join(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_embedding",
-    score_col: str = "similarity",
-    n_salts: int = 32,
+    dim: int | None = None,
 ) -> DataFrame:
     """N-to-M brute-force KNN: for every query row, the k nearest corpus
-    rows by cosine similarity.
+    rows by cosine similarity, ``(query_id, id, similarity, rank)`` out.
 
-    The query side is broadcast (queries ≪ corpus); the corpus streams
-    through once.  Ranking is a TWO-PHASE salted top-k: a single window
-    per query_id would shuffle the whole |corpus|×|queries| scored
-    relation into |queries| reducers (each sorting ~|corpus| rows — the
-    scale-killer).  Instead phase 1 ranks within (query_id, salt) — n_salts
-    reducers per query, |corpus|/n_salts rows each — and phase 2 ranks the
-    surviving ≤ k·n_salts rows per query.  Both phases order by
-    (score DESC, id ASC), so the final ranking is identical to the
-    single-window answer: every global top-k row is a top-k row of its own
-    salt bucket.  For corpus-to-corpus similarity use the LSH operators
-    instead (operators/lsh.py).
-    """
-    from pyspark.sql import Window
+    ``dim`` is the corpus width when the caller already holds it; at the
+    GEMM widths (functions/vector.is_wide) the join is a single-list IVF
+    search with a full probe: every corpus row belongs to one synthetic
+    centroid, so `ivf.ivf_search_batch_gemm` degenerates to exact brute
+    force (one (batch × dim)·(dim × nq) GEMM per Arrow batch + map-side
+    partial top-k).  At the reference's real width — vector(1536),
+    query.txt:84 — the per-pair fold below is interpreted and dominates.
+    Both kernels give the same rows (parity-pinned: same rounding, same
+    (similarity DESC, id ASC) ranking).  ``None`` keeps the fold.
 
+    The fold's query side is broadcast (queries ≪ corpus); the corpus
+    streams through once, and ranking is :func:`_salted_topk` with 32
+    salts.  For corpus-to-corpus similarity use the LSH operators instead
+    (operators/lsh.py)."""
+    if V.is_wide(dim):
+        from . import ivf as ivf_ops
+
+        return ivf_ops.ivf_search_batch_gemm(
+            _single_list_index(corpus, corpus_id, corpus_vec, dim),
+            queries,
+            k,
+            nprobe=1,
+            query_id=query_id,
+            query_vec=query_vec,
+            id_col=corpus_id,
+            vec_col=corpus_vec,
+        )
     # norms once per corpus row / per query row (not per pair): scoring
     # costs one fold per pair instead of three.  Identical dot/(na*nb)
     # expression → same doubles as cosine_similarity inline.
@@ -124,28 +141,44 @@ def knn_join(
         corpus_id, corpus_vec, V.l2_norm(corpus_vec).alias("_cn")
     )
     queries_n = queries.select(query_id, query_vec, V.l2_norm(query_vec).alias("_qn"))
-    sim = F.when(
-        (F.col("_cn") == 0.0) | (F.col("_qn") == 0.0), F.lit(None).cast("double")
-    ).otherwise(
-        V.round6(
-            V.dot(F.col(corpus_vec), F.col(query_vec)) / (F.col("_cn") * F.col("_qn"))
-        )
-    )
+    sim = V.round6(V.cosine_from_norms(corpus_vec, query_vec, F.col("_cn"), F.col("_qn")))
     joined = (
         corpus_n.crossJoin(F.broadcast(queries_n))
-        .select(query_id, corpus_id, sim.alias(score_col))
-        .where(F.col(score_col).isNotNull())
+        .select(query_id, corpus_id, sim.alias("similarity"))
+        .where(F.col("similarity").isNotNull())
     )
-    order = [F.col(score_col).desc(), F.col(corpus_id).asc()]
+    return _salted_topk(joined, k, query_id, corpus_id, 32)
+
+
+def _salted_topk(
+    scored: DataFrame, k: int, query_id: str, id_col: str, n_salts: int
+) -> DataFrame:
+    """Per-query top-k of a (query_id, id, similarity) frame, ranked by
+    :func:`_rank_per_query`.  A single window
+    per query_id would shuffle the whole scored relation into |queries|
+    reducers, each sorting ~|corpus| rows — the scale-killer.  Instead
+    phase 1 ranks within (query_id, salt) — ``n_salts`` reducers per
+    query, |corpus|/n_salts rows each — and phase 2 ranks the surviving
+    ≤ k·n_salts rows per query.  Every global top-k row is a top-k row of
+    its own salt bucket, so the ranking equals the single-window one."""
+    order = [F.col("similarity").desc(), F.col(id_col).asc()]
     w1 = Window.partitionBy(query_id, "_salt").orderBy(*order)
     partial = (
-        joined.withColumn("_salt", F.pmod(F.xxhash64(F.col(corpus_id)), F.lit(n_salts)))
+        scored.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)))
         .withColumn("_pr", F.row_number().over(w1))
         .where(F.col("_pr") <= k)
         .drop("_salt", "_pr")
     )
-    w2 = Window.partitionBy(query_id).orderBy(*order)
-    return partial.withColumn("rank", F.row_number().over(w2).cast("bigint")).where(F.col("rank") <= k)
+    return _rank_per_query(partial, k, query_id, id_col)
+
+
+def _rank_per_query(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFrame:
+    """The k best rows of each query in a (query_id, id, similarity) frame
+    by (similarity DESC, id ASC), numbered in a bigint ``rank`` column."""
+    w = Window.partitionBy(query_id).orderBy(F.col("similarity").desc(), F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w).cast("bigint")).where(
+        F.col("rank") <= k
+    )
 
 
 def neighbors_above(
@@ -154,7 +187,6 @@ def neighbors_above(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_col: str = "similarity",
     max_rows: int | None = 1_000_000,
 ) -> DataFrame:
     """All-pairs (a<b) with cosine similarity ≥ threshold — exact
@@ -182,14 +214,12 @@ def neighbors_above(
     )
     a = withnorm.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), F.col("nrm").alias("na"))
     b = withnorm.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), F.col("nrm").alias("nb"))
-    sim = F.when((F.col("na") == 0.0) | (F.col("nb") == 0.0), F.lit(None).cast("double")).otherwise(
-        V.round6(V.dot(F.col("vec_a"), F.col("vec_b")) / (F.col("na") * F.col("nb")))
-    )
+    sim = V.round6(V.cosine_from_norms("vec_a", "vec_b", F.col("na"), F.col("nb")))
     return (
         a.crossJoin(b)
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", sim.alias(score_col))
-        .where(F.col(score_col).isNotNull() & (F.col(score_col) >= threshold))
+        .select("id_a", "id_b", sim.alias("similarity"))
+        .where(F.col("similarity").isNotNull() & (F.col("similarity") >= threshold))
     )
 
 
@@ -204,25 +234,27 @@ def _single_list_index(corpus: DataFrame, corpus_id: str, corpus_vec: str, dim: 
     return ivf_ops.IVFIndex(centers=[[1.0] + [0.0] * (dim - 1)], assigned=assigned)
 
 
-def topk_similarity_gemm(
+def _topk_similarity_gemm(
     df: DataFrame,
     query_vec: Sequence[float],
     k: int,
     *,
-    dim: int,
-    embedding_col: str = "embedding",
-    id_col: str = "vec_id",
+    embedding_col: str,
+    id_col: str,
 ) -> DataFrame:
-    """:func:`topk_similarity` through the GEMM kernel — the WIDE-dim
-    single-query spelling, same rounding and (similarity DESC, id ASC)
-    ranking, ``(id, similarity)`` out.  ``dim`` is the corpus width the
-    caller already probed.  The query vector goes straight to the scorer
-    from the driver (no query frame), and the finish is one ordered limit
-    over the per-batch survivors: TakeOrderedAndProject, one job."""
+    """:func:`topk_similarity`'s wide kernel, ``(id, similarity)`` out.
+    The query vector goes straight to the scorer from the driver: a query
+    frame built from a Python list would cost a job of
+    ``defaultParallelism`` Python tasks, each with a worker set-up far
+    above its work, only to be collected back.  The query's width is the
+    index width, so the scorer drops rows of another width.  The finish
+    is one ordered limit over the per-batch survivors:
+    TakeOrderedAndProject, one job, whose scorer tasks are the only
+    Python tasks."""
     from . import ivf as ivf_ops
 
     hits = ivf_ops.ivf_score_gemm(
-        _single_list_index(df, id_col, embedding_col, dim),
+        _single_list_index(df, id_col, embedding_col, len(query_vec)),
         [(0, [float(x) for x in query_vec])],
         k,
         nprobe=1,
@@ -233,51 +265,4 @@ def topk_similarity_gemm(
         hits.orderBy(F.col("similarity").desc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, "similarity")
-    )
-
-
-def knn_join_gemm(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    *,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_embedding",
-    max_queries: int = 10_000,
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact brute-force KNN join with Arrow/GEMM scoring — the WIDE-dim
-    twin of :func:`knn_join` (whose per-pair HOF fold is the right trade
-    only at narrow dims; at the reference's real width — vector(1536),
-    query.txt:84 — the interpreted fold dominates).
-
-    Implemented as a single-list IVF GEMM search with a full probe: all
-    corpus rows belong to one synthetic centroid, so
-    `ivf.ivf_search_batch_gemm` degenerates to exact brute force (one
-    (batch × dim)·(dim × nq) GEMM per Arrow batch + map-side partial
-    top-k).  Output matches :func:`knn_join` row-for-row (parity-pinned:
-    same rounding, same (similarity DESC, id ASC) ranking).  ``dim`` is
-    the corpus width when the caller has already probed it; otherwise
-    one head job reads it here."""
-    from . import ivf as ivf_ops
-
-    if dim is None:
-        head = corpus.select(F.size(corpus_vec).alias("d")).where(
-            F.col(corpus_vec).isNotNull()
-        ).head()
-        if head is None:
-            raise ValueError("knn_join_gemm: empty corpus")
-        dim = head["d"]
-    return ivf_ops.ivf_search_batch_gemm(
-        _single_list_index(corpus, corpus_id, corpus_vec, dim),
-        queries,
-        k,
-        nprobe=1,
-        query_id=query_id,
-        query_vec=query_vec,
-        id_col=corpus_id,
-        vec_col=corpus_vec,
-        max_queries=max_queries,
     )

@@ -408,9 +408,9 @@ def test_single_query_wide_tie_straddles_k(spark, tmp_path):
 
 
 def test_single_query_wide_null_first_row(spark, tmp_path):
-    """The scan's first stored row has a NULL embedding: the one-row width
-    probe sees no width and falls back to the filtered probe, and the
-    query still takes the GEMM route with the expression top-k's answer."""
+    """The scan's first stored row has a NULL embedding: the query still
+    takes the GEMM route, which skips the NULL row, with the expression
+    top-k's answer."""
     import numpy as np
 
     rng = np.random.default_rng(22)
@@ -444,8 +444,8 @@ def test_single_query_wide_default_tenant_fallback(spark, tmp_path):
 
 def test_single_query_wide_job_count(spark, tmp_path):
     """A wide single-query retrieval on a populated tenant runs at most
-    three jobs: the scan's footer merge, the one width probe and the
-    top-k (one TakeOrderedAndProject job)."""
+    three jobs: the scan's footer merge, the one row probe (the default-KB
+    fallback) and the top-k (one TakeOrderedAndProject job)."""
     import uuid
 
     import numpy as np
@@ -468,6 +468,52 @@ def test_single_query_wide_job_count(spark, tmp_path):
     assert len(hits) == 3
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 3, sorted(jobs)
+
+
+def test_find_similar_documents_job_count(spark, tmp_path):
+    """Without an index, find_similar_documents on a warm, populated
+    tenant runs at most two jobs: the scan's footer merge and the top-k.
+    The operator takes its kernel from the query's width, so there is no
+    probe job."""
+    import uuid
+
+    import numpy as np
+
+    rng = np.random.default_rng(26)
+    eng = PsyEngine(spark, str(tmp_path / "wh"))
+    ddl = "content string, embedding array<double>"
+    for i in range(3):
+        eng.add_documents("busy", spark.createDataFrame(_wide_rows(rng, [f"b{i}-{j}" for j in range(4)]), ddl))
+    q = [float(x) for x in rng.standard_normal(272)]
+    eng.find_similar_documents("busy", q, k=3).collect()  # warm: first-use jobs
+    sc = spark.sparkContext
+    group = f"find-similar-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "find_similar_documents job count")
+    try:
+        hits = eng.find_similar_documents("busy", q, k=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(hits) == 3
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, sorted(jobs)
+
+
+def test_query_width_mismatch_returns_no_rows(spark, tmp_path):
+    """A query whose width differs from the tenant's vectors matches no
+    row on either kernel: a width-300 KB with a width-8 query (the
+    expression fold) and a width-8 KB with a width-300 query (the GEMM
+    scorer).  Both retrieval semantics return no rows."""
+    import numpy as np
+
+    rng = np.random.default_rng(27)
+    eng = PsyEngine(spark, str(tmp_path / "wh"))
+    ddl = "content string, embedding array<double>"
+    for tenant, kb_dim, q_dim in (("wide_kb", 300, 8), ("narrow_kb", 8, 300)):
+        eng.add_documents(tenant, spark.createDataFrame(_wide_rows(rng, ["a", "b", "c"], kb_dim), ddl))
+        q = [float(x) for x in rng.standard_normal(q_dim)]
+        assert eng.get_relevant_documents(tenant, q, k=2).collect() == []
+        assert eng.find_similar_documents(tenant, q, k=2).collect() == []
 
 
 def test_ingest_warc_wet_facades(spark, tmp_path):

@@ -7,8 +7,9 @@ decorator (``@register``, ``@udf``, ...) is itself the reference that
 makes them reachable.  Dunder assignments (``__all__``, ...) are skipped.
 Mentions in docstrings and comments do not count.  A second scan pins
 the set of ``SPARK_GRAFT_*`` environment knobs the code reads, a third
-the public methods of ``api.PsyEngine``, and a fourth that no function
-takes a kernel choice as a parameter.  Pure ``ast``; no Spark."""
+the public methods of ``api.PsyEngine``, a fourth that no function
+takes a kernel choice as a parameter, and a fifth that ``api.py`` names
+no kernel.  Pure ``ast``; no Spark."""
 
 from __future__ import annotations
 
@@ -186,3 +187,31 @@ def kernel_switch_parameters() -> list[str]:
 def test_kernel_choice_is_not_a_parameter():
     found = kernel_switch_parameters()
     assert not found, "kernel switches as parameters:\n" + "\n".join(found)
+
+
+# The engine hands queries and widths to the vector operators, which pick
+# their own kernel: ``api.py`` names neither the width rule nor a kernel.
+def api_kernel_names() -> list[str]:
+    found = []
+    for node in ast.walk(_parse(PACKAGE / "api.py")):
+        if isinstance(node, ast.Name):
+            names = [node.id]
+        elif isinstance(node, ast.Attribute):
+            names = [node.attr]
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            names = [node.name]
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names = [a.asname or a.name.rsplit(".", 1)[-1] for a in node.names]
+        else:
+            continue
+        found.extend(
+            f"api.py:{node.lineno} {n}"
+            for n in names
+            if n in ("is_wide", "GEMM_MIN_DIM") or n.endswith("_gemm")
+        )
+    return found
+
+
+def test_api_picks_no_kernel():
+    found = api_kernel_names()
+    assert not found, "kernel choice in api.py:\n" + "\n".join(found)

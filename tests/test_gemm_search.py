@@ -240,21 +240,39 @@ def test_dim2048_smoke_all_kernels(spark):
     assert pairs.count() > 0  # 10 near-copies per mode -> plenty of pairs
 
 
-def test_knn_join_gemm_parity(spark):
-    """Brute-force GEMM KNN must equal the expression knn_join exactly."""
+def test_knn_join_gemm_parity(spark, monkeypatch):
+    """knn_join's wide (GEMM) branch must equal its expression fold
+    exactly: a corpus ``dim`` takes the GEMM branch once the width rule
+    says wide, and no ``dim`` keeps the fold."""
     emb = load_table(spark, SF, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    expr = {
-        (r.query_id, r.vec_id, r.similarity, r.rank)
-        for r in topk.knn_join(emb, queries, k=4).collect()
-    }
-    gemm = {
-        (r.query_id, r.vec_id, r.similarity, r.rank)
-        for r in topk.knn_join_gemm(emb, queries, k=4).collect()
-    }
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 0)
+    expr_df = topk.knn_join(emb, queries, k=4)
+    gemm_df = topk.knn_join(emb, queries, k=4, dim=64)
+    assert not _gemm_scored(expr_df) and _gemm_scored(gemm_df)
+    expr = {(r.query_id, r.vec_id, r.similarity, r.rank) for r in expr_df.collect()}
+    gemm = {(r.query_id, r.vec_id, r.similarity, r.rank) for r in gemm_df.collect()}
     assert gemm == expr and len(expr) == 20
+
+
+def test_ivf_search_scores_wide_queries_with_gemm(spark, monkeypatch):
+    """ivf.ivf_search's exact top-k within the probed lists is
+    topk.topk_similarity, which scores a wide query with the GEMM kernel;
+    its rows equal the expression fold's, reached by raising the width
+    rule's cut-off above the corpus width."""
+    corpus = synthetic_embeddings(spark, 400, 300, n_modes=4, seed=13)
+    index = ivf.build_ivf(corpus, n_lists=4)
+    q = [float(x) for x in corpus.where(F.col("vec_id") == 7).head().embedding]
+    gemm_df = ivf.ivf_search(index, q, k=5, nprobe=2)
+    assert _gemm_scored(gemm_df)
+    gemm = [(r.vec_id, r.similarity) for r in gemm_df.collect()]
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 301)
+    expr_df = ivf.ivf_search(index, q, k=5, nprobe=2)
+    assert not _gemm_scored(expr_df)
+    assert gemm == [(r.vec_id, r.similarity) for r in expr_df.collect()]
+    assert len(gemm) == 5 and gemm[0][0] == 7
 
 
 def test_gemm_search_prunes_persisted_wide_layout(spark, tmp_path):

@@ -131,6 +131,28 @@ def test_valved_lsh_reuses_band_exchange(spark):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize("route", ["broadcast", "join"])
+def test_srp_neardup_signs_the_corpus_once(spark, route):
+    """Once AQE has settled the plan, srp_neardup_pairs evaluates the SRP
+    signature UDF ONCE on either verify route: the candidate self-join
+    reads the valve window's exchange as a ReusedExchange.
+    AdaptiveSparkPlan also prints the initial plan, where the two join
+    sides still carry a signature each, so count the final section only.
+    (The join route's hot-id estimate is a separate job, which recomputes
+    the signature by design.)"""
+    from psy_supabase_spark.operators import lsh
+    from psy_supabase_spark.sources.catalog import load_table
+
+    emb = load_table(spark, SF, "embeddings")
+    df = lsh.srp_neardup_pairs(emb, 0.5, verify_route=route)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    sig_evals = [ln for ln in final.splitlines() if "ArrowEvalPython [_sig(" in ln]
+    assert len(sig_evals) == 1, final
+    assert "ReusedExchange" in final
+
+
 def test_registry_is_exactly_fifty_and_fully_oracled():
     """The driver records exactly the first 50 registrations (round-1
     behavior pinned in registry.py) — a 51st would be silently dropped
