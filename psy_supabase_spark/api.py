@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .functions import json_ops
 from .functions import text as TX
+from .functions import vector as V
 from .functions.memo import per_gateway
 from .operators import ivf as ivf_ops
 from .operators import ml_udfs, topk, windows
@@ -169,17 +170,6 @@ class PsyEngine:
     # ---- retrieval (reference query.txt:186-205, rag_processor.py:26-75) ----
 
     @staticmethod
-    def _head_dim(kb: DataFrame) -> int | None:
-        """Width of the first NON-NULL stored embedding (None = no non-null
-        vectors), at the cost of one head job whose filter may read past
-        the first row.  The batch route probes with it once per batch.
-        Never inside a registered query plan."""
-        head = kb.select(F.size("embedding").alias("d")).where(
-            F.col("embedding").isNotNull()
-        ).head()
-        return None if head is None else int(head["d"])
-
-    @staticmethod
     def _probe_kb(kb: DataFrame) -> bool:
         """Does the tenant have knowledge-base rows?  One head() job,
         which decides the default-KB fallback."""
@@ -194,7 +184,7 @@ class PsyEngine:
         index = self._ivf_indexes.get(sanitize_tenant_id(user_id))
         if index is not None:
             hits = ivf_ops.ivf_search(index, list(query_vec), k=k, id_col="content", vec_col="embedding")
-            return hits.select("content", (F.lit(1.0) - F.col("similarity")).alias("distance"))
+            return hits.select("content", V.round6(F.lit(1.0) - F.col("similarity")).alias("distance"))
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
         return topk.topk_distance(kb, list(query_vec), k=k, id_col="content", embedding_col="embedding")
 
@@ -235,7 +225,8 @@ class PsyEngine:
         query_embedding)` rows in, `(query_id, content, similarity, rank)`
         out.  Routes through the IVF index when built
         (`ivf.ivf_search_batch` — GEMM-default serving, salted two-phase
-        top-k), else the brute-force broadcast KNN join.  A corpus too
+        top-k), else the brute-force broadcast KNN join (`topk.knn_join`,
+        which takes its kernel from the queries' width).  A corpus too
         large to score against every query, with no index, is
         `lsh.srp_topk`'s regime (train-free SRP-bucketed ANN over
         ``store.scan``); at broadcast-scale corpora the brute KNN join
@@ -249,11 +240,7 @@ class PsyEngine:
                 index, queries, k=k, nprobe=nprobe, id_col="content", vec_col="embedding"
             ).select("query_id", F.col("content"), "similarity", "rank")
         kb = self.store.scan(KNOWLEDGE_BASE, user_id=user_id)
-        # the corpus width lets knn_join pick its kernel (SCALE.md §width
-        # validation: the GEMM scorer wins by ~40× at 1536)
-        hits = topk.knn_join(
-            kb, queries, k=k, corpus_id="content", corpus_vec="embedding", dim=self._head_dim(kb)
-        )
+        hits = topk.knn_join(kb, queries, k=k, corpus_id="content", corpus_vec="embedding")
         return hits.select("query_id", F.col("content"), "similarity", "rank")
 
     # ---- pipeline scalars (reference safety_handler / prompt_selector) ----

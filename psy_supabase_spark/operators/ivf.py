@@ -338,12 +338,14 @@ def search_layout(
     the column fall back to the three-fold inline cosine, and a MIXED
     layout (files without the column plus later appends) is handled per
     row: legacy rows read ``_vnorm`` as NULL, which coalesces to the inline
-    norm instead of silently NULLing the row out of the top-k."""
+    norm instead of silently NULLing the row out of the top-k.  A wide
+    query (functions/vector.is_wide) goes to :func:`.topk.topk_similarity`
+    on either layout: its GEMM kernel computes the row norms itself."""
     import math
 
     probe_ids = rank_centroids(centers, query_vec)[:nprobe]
     df = spark.read.parquet(path).where(F.col("centroid_id").isin(probe_ids))
-    if "_vnorm" in df.columns:
+    if "_vnorm" in df.columns and not V.is_wide(len(query_vec)):
         # left-to-right accumulation, matching F.aggregate's fold order
         qn = math.sqrt(sum((float(x) * float(x) for x in query_vec), 0.0))
         q = V.query_vector_lit(query_vec)
@@ -511,15 +513,21 @@ def _gemm_scorer(index: IVFIndex, qrows, nprobe: int, query_id: str, qid_type: s
     make_scorer)``.  ``make_scorer(vcol, keep)`` is the mapInPandas body:
     one (batch × dim)·(dim × nq) GEMM per Arrow batch, each query masked
     to ITS probe set, and only the per-batch top-``keep`` per query by
-    (similarity DESC, id ASC) emitted."""
+    (similarity DESC, id ASC) emitted.  With no query left there is
+    nothing to probe, and the scorer emits no rows."""
     import numpy as np
     import pandas as pd
 
     dim = len(index.centers[0]) if index.centers else None
     if dim is not None:
         qrows = [r for r in qrows if r[1] is not None and len(r[1]) == dim]
+    id_field = index.assigned.schema[id_col]
+    out_schema = (
+        f"{query_id} {qid_type}, {id_field.name} {id_field.dataType.simpleString()}, "
+        "similarity double"
+    )
     if not qrows:
-        raise ValueError("empty query batch")
+        return [], out_schema, lambda vcol, keep: lambda batches: iter(())
     qids = [r[0] for r in qrows]
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
     qunit, live, probes = _nearest_lists(qmat, index.centers, nprobe)
@@ -536,12 +544,6 @@ def _gemm_scorer(index: IVFIndex, qrows, nprobe: int, query_id: str, qid_type: s
     for qi, order in enumerate(probes):
         mask[order, qi] = True
     probe_ids = np.flatnonzero(mask.any(axis=1)).tolist()
-
-    id_field = index.assigned.schema[id_col]
-    out_schema = (
-        f"{query_id} {qid_type}, {id_field.name} {id_field.dataType.simpleString()}, "
-        "similarity double"
-    )
     qids_arr = np.array(qids)
 
     def make_scorer(vcol: str, keep: int):

@@ -334,9 +334,9 @@ def srp_topk(
     (pre-filter semantics).  ``brute_fallback=True`` completes those
     queries declaratively: the ranked LSH result is checkpointed ONCE
     (≤ |queries|·k rows), queries that came back with < k rows are
-    re-served whole by the exact brute KNN join (`topk.knn_join`
-    given ``dim``, so its kernel follows the same width rule as the
-    verify), and the union replaces their
+    re-served whole by the exact brute KNN join (`topk.knn_join`, whose
+    kernel follows the same width rule as the verify), and the union
+    replaces their
     partial answers — full queries keep the cheap LSH rows, so the
     brute pass touches the corpus only when at least one query fell
     short, and only for those queries (broadcast side).  Scale: the
@@ -399,7 +399,6 @@ def srp_topk(
         corpus_vec=vec_col,
         query_id=query_id,
         query_vec=query_vec,
-        dim=dim,
     ).select(query_id, id_col, "similarity", "rank")
     kept = ranked.join(F.broadcast(full), query_id, "left_semi").select(
         query_id, id_col, "similarity", "rank"

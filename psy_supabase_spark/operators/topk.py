@@ -80,10 +80,10 @@ def topk_distance(
     parity (reference `query.txt:198-201`, which misnames the distance
     column `similarity`; we do not repeat that).  ``(id, distance)`` out;
     a wide query ranks by :func:`_topk_similarity_gemm` and reports
-    ``1 - similarity``."""
+    ``1 - similarity``, rounded as the fold rounds."""
     if V.is_wide(len(query_vec)):
         hits = _topk_similarity_gemm(df, query_vec, k, embedding_col=embedding_col, id_col=id_col)
-        return hits.select(id_col, (F.lit(1.0) - F.col("similarity")).alias("distance"))
+        return hits.select(id_col, V.round6(F.lit(1.0) - F.col("similarity")).alias("distance"))
     dist = V.round6(F.lit(1.0) - _query_cosine(embedding_col, query_vec))
     return (
         df.select(id_col, dist.alias("distance"))
@@ -102,38 +102,46 @@ def knn_join(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """N-to-M brute-force KNN: for every query row, the k nearest corpus
     rows by cosine similarity, ``(query_id, id, similarity, rank)`` out.
 
-    ``dim`` is the corpus width when the caller already holds it; at the
-    GEMM widths (functions/vector.is_wide) the join is a single-list IVF
-    search with a full probe: every corpus row belongs to one synthetic
-    centroid, so `ivf.ivf_search_batch_gemm` degenerates to exact brute
-    force (one (batch × dim)·(dim × nq) GEMM per Arrow batch + map-side
-    partial top-k).  At the reference's real width — vector(1536),
-    query.txt:84 — the per-pair fold below is interpreted and dominates.
-    Both kernels give the same rows (parity-pinned: same rounding, same
-    (similarity DESC, id ASC) ranking).  ``None`` keeps the fold.
+    The kernel follows the queries' width.  The bounded query batch is
+    fetched to the driver (`ivf._collect_query_batch`); when every query
+    vector has one width and it is a GEMM width (functions/vector.is_wide),
+    the join is a single-list IVF search with a full probe: every corpus
+    row belongs to one synthetic centroid, so `ivf.ivf_score_gemm`
+    degenerates to exact brute force (one (batch × dim)·(dim × nq) GEMM
+    per Arrow batch + map-side partial top-k).  At the reference's real
+    width — vector(1536), query.txt:84 — the per-pair fold below is
+    interpreted and dominates.  Narrow or mixed widths, no queries, or a
+    batch over the fetch bound keep the fold.  Both kernels give the same
+    rows (parity-pinned: same rounding, same (similarity DESC, id ASC)
+    ranking), and a corpus row of another width scores on neither.
 
     The fold's query side is broadcast (queries ≪ corpus); the corpus
     streams through once, and ranking is :func:`_salted_topk` with 32
     salts.  For corpus-to-corpus similarity use the LSH operators instead
     (operators/lsh.py)."""
-    if V.is_wide(dim):
-        from . import ivf as ivf_ops
+    from . import ivf as ivf_ops
 
-        return ivf_ops.ivf_search_batch_gemm(
+    try:
+        qrows = ivf_ops._collect_query_batch(queries, query_id, query_vec, 10_000)
+    except ivf_ops.QueryBatchTooLarge:
+        qrows = []
+    widths = {len(r[1]) for r in qrows if r[1] is not None}
+    if len(widths) == 1 and V.is_wide(dim := widths.pop()):
+        partial = ivf_ops.ivf_score_gemm(
             _single_list_index(corpus, corpus_id, corpus_vec, dim),
-            queries,
+            qrows,
             k,
             nprobe=1,
             query_id=query_id,
-            query_vec=query_vec,
+            query_id_type=queries.schema[query_id].dataType.simpleString(),
             id_col=corpus_id,
             vec_col=corpus_vec,
         )
+        return _rank_per_query(partial, k, query_id, corpus_id)
     # norms once per corpus row / per query row (not per pair): scoring
     # costs one fold per pair instead of three.  Identical dot/(na*nb)
     # expression → same doubles as cosine_similarity inline.

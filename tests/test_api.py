@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from psy_supabase_spark.api import PsyEngine
 from psy_supabase_spark.functions import pii
+from psy_supabase_spark.functions import vector as V
 from psy_supabase_spark.functions.html import html_to_text
 from psy_supabase_spark.functions.url import blocklist_filter
 from psy_supabase_spark.operators import (
@@ -90,6 +91,23 @@ def test_ivf_route(engine):
     engine.create_vector_index("alice", n_lists=2)
     hits = engine.find_similar_documents("alice", [1.0, 0.0, 0.0], k=1).collect()
     assert hits[0].content == "doc east"
+
+
+def test_ivf_route_distance_rounds_like_the_scan(spark, tmp_path):
+    """With every list probed, the indexed find_similar_documents returns
+    the scan's rows exactly: its distance is rounded as topk_distance
+    rounds, not taken as ``1 -`` a rounded similarity."""
+    import numpy as np
+
+    rng = np.random.default_rng(28)
+    eng = PsyEngine(spark, str(tmp_path / "wh"))
+    rows = [(f"d{i}", [float(x) for x in rng.standard_normal(8)]) for i in range(20)]
+    eng.add_documents("r", spark.createDataFrame(rows, "content string, embedding array<double>"))
+    q = [float(x) for x in rng.standard_normal(8)]
+    scan = [tuple(r) for r in eng.find_similar_documents("r", q, k=20).collect()]
+    eng.create_vector_index("r", n_lists=2)  # ivf_search probes 4 lists: all of them
+    assert [tuple(r) for r in eng.find_similar_documents("r", q, k=20).collect()] == scan
+    assert len(scan) == 20
 
 
 def test_batch_serving_both_routes(engine, spark):
@@ -320,8 +338,8 @@ def test_soft_dedup_weights_facade(spark):
 
 
 def test_batch_serving_wide_dim_routes_gemm(engine, spark):
-    """A wide-dim tenant KB must route the brute batch path through the
-    GEMM kernel (width-probed) and still rank correctly."""
+    """Wide-dim queries over a tenant KB must route the brute batch path
+    through the GEMM kernel and still rank correctly."""
     import numpy as np
 
     rng = np.random.default_rng(5)
@@ -336,7 +354,9 @@ def test_batch_serving_wide_dim_routes_gemm(engine, spark):
         [(0, [float(x) for x in base.tolist()])],
         "query_id long, query_embedding array<double>",
     )
-    got = engine.find_similar_documents_batch("wide_user", queries, k=1).collect()
+    got_df = engine.find_similar_documents_batch("wide_user", queries, k=1)
+    assert _gemm_scored(got_df)
+    got = got_df.collect()
     assert got[0].content == "doc a" and got[0].rank == 1
 
 
@@ -354,36 +374,46 @@ def test_single_query_wide_dim_routes_gemm(engine, spark):
     engine.add_documents("wide_single", kb)
     q = [float(x) for x in vecs[2]]
 
-    sim = engine.get_relevant_documents("wide_single", q, k=2).collect()
+    sim_df = engine.get_relevant_documents("wide_single", q, k=2)
+    assert _gemm_scored(sim_df)
+    sim = sim_df.collect()
     assert sim[0].content == "wd2" and abs(sim[0].similarity - 1.0) < 1e-6
 
-    dist = engine.find_similar_documents("wide_single", q, k=2).collect()
+    dist_df = engine.find_similar_documents("wide_single", q, k=2)
+    assert _gemm_scored(dist_df)
+    dist = dist_df.collect()
     assert dist[0].content == "wd2" and abs(dist[0].distance) < 1e-6
     # parity with the expression spelling on the same KB
-    from psy_supabase_spark.operators import topk as topk_ops
-
-    want = [
-        (r.content, r.similarity)
-        for r in topk_ops.topk_similarity(
-            kb, q, k=2, id_col="content", embedding_col="embedding"
-        ).collect()
-    ]
-    assert [(r.content, r.similarity) for r in sim] == want
+    assert [(r.content, r.similarity) for r in sim] == _topk_reference(kb, q, 2)
 
 
 def _wide_rows(rng, names, dim=272):
     return [(n, [float(x) for x in rng.standard_normal(dim)]) for n in names]
 
 
+def _gemm_scored(df) -> bool:
+    """Does the plan score through the GEMM kernel (the ``score``
+    mapInPandas of operators/ivf.py)?"""
+    return "MapInPandas score(" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def _topk_reference(kb, q, k):
+    """The expression fold's top-k: the width rule's cut-off is raised
+    above the query's width for this call only."""
     from psy_supabase_spark.operators import topk as topk_ops
 
-    return [
-        (r.content, r.similarity)
-        for r in topk_ops.topk_similarity(
-            kb, q, k=k, id_col="content", embedding_col="embedding"
-        ).collect()
-    ]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(V, "GEMM_MIN_DIM", 10**9)
+        ref = topk_ops.topk_similarity(kb, q, k=k, id_col="content", embedding_col="embedding")
+    assert not _gemm_scored(ref)
+    return [(r.content, r.similarity) for r in ref.collect()]
+
+
+def _wide_hits(df):
+    """``(content, similarity)`` rows of an engine call that took the GEMM
+    kernel."""
+    assert _gemm_scored(df)
+    return [(r.content, r.similarity) for r in df.collect()]
 
 
 def test_single_query_wide_tie_straddles_k(spark, tmp_path):
@@ -402,7 +432,7 @@ def test_single_query_wide_tie_straddles_k(spark, tmp_path):
     eng.add_documents("t", spark.createDataFrame([("best", near), ("tie c", tie)], ddl))
     eng.add_documents("t", spark.createDataFrame([("tie a", tie)] + _wide_rows(rng, ["x1", "x2"]), ddl))
     eng.add_documents("t", spark.createDataFrame([("tie b", tie)], ddl))
-    got = [(r.content, r.similarity) for r in eng.get_relevant_documents("t", q, k=3).collect()]
+    got = _wide_hits(eng.get_relevant_documents("t", q, k=3))
     assert [c for c, _ in got] == ["best", "tie a", "tie b"]
     assert got == _topk_reference(eng.store.scan("knowledge_base", user_id="t"), q, 3)
 
@@ -421,7 +451,7 @@ def test_single_query_wide_null_first_row(spark, tmp_path):
     stored = eng.store.scan("knowledge_base", user_id="n")
     assert stored.head().embedding is None
     q = rows[3][1]
-    got = [(r.content, r.similarity) for r in eng.get_relevant_documents("n", q, k=3).collect()]
+    got = _wide_hits(eng.get_relevant_documents("n", q, k=3))
     assert got[0][0] == "d3"
     assert got == _topk_reference(stored, q, 3)
 
@@ -437,7 +467,7 @@ def test_single_query_wide_default_tenant_fallback(spark, tmp_path):
     eng.add_documents("default", spark.createDataFrame(rows, "content string, embedding array<double>"))
     eng.add_documents("someone_else", spark.createDataFrame(_wide_rows(rng, ["private"]), "content string, embedding array<double>"))
     q = [float(x) for x in rng.standard_normal(272)]
-    got = [(r.content, r.similarity) for r in eng.get_relevant_documents("nobody", q, k=4).collect()]
+    got = _wide_hits(eng.get_relevant_documents("nobody", q, k=4))
     assert len(got) == 4 and all(c.startswith("shared") for c, _ in got)
     assert got == _topk_reference(eng.store.scan("knowledge_base", user_id="default"), q, 4)
 
@@ -503,17 +533,25 @@ def test_query_width_mismatch_returns_no_rows(spark, tmp_path):
     """A query whose width differs from the tenant's vectors matches no
     row on either kernel: a width-300 KB with a width-8 query (the
     expression fold) and a width-8 KB with a width-300 query (the GEMM
-    scorer).  Both retrieval semantics return no rows."""
+    scorer).  Both retrieval semantics and the batch path return no rows,
+    with and without an IVF index; so does an empty query batch."""
     import numpy as np
 
     rng = np.random.default_rng(27)
     eng = PsyEngine(spark, str(tmp_path / "wh"))
     ddl = "content string, embedding array<double>"
+    qddl = "query_id long, query_embedding array<double>"
     for tenant, kb_dim, q_dim in (("wide_kb", 300, 8), ("narrow_kb", 8, 300)):
         eng.add_documents(tenant, spark.createDataFrame(_wide_rows(rng, ["a", "b", "c"], kb_dim), ddl))
         q = [float(x) for x in rng.standard_normal(q_dim)]
-        assert eng.get_relevant_documents(tenant, q, k=2).collect() == []
-        assert eng.find_similar_documents(tenant, q, k=2).collect() == []
+        queries = spark.createDataFrame([(0, q), (1, [-x for x in q])], qddl)
+        for indexed in (False, True):
+            if indexed:
+                eng.create_vector_index(tenant, n_lists=2)
+            assert eng.get_relevant_documents(tenant, q, k=2).collect() == []
+            assert eng.find_similar_documents(tenant, q, k=2).collect() == []
+            assert eng.find_similar_documents_batch(tenant, queries, k=2).collect() == []
+            assert eng.find_similar_documents_batch(tenant, spark.createDataFrame([], qddl), k=2).collect() == []
 
 
 def test_ingest_warc_wet_facades(spark, tmp_path):

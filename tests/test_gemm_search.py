@@ -242,15 +242,15 @@ def test_dim2048_smoke_all_kernels(spark):
 
 def test_knn_join_gemm_parity(spark, monkeypatch):
     """knn_join's wide (GEMM) branch must equal its expression fold
-    exactly: a corpus ``dim`` takes the GEMM branch once the width rule
-    says wide, and no ``dim`` keeps the fold."""
+    exactly: the dim-64 queries keep the fold under the default cut-off
+    and take the GEMM branch once the width rule says wide."""
     emb = load_table(spark, SF, "embeddings")
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    monkeypatch.setattr(V, "GEMM_MIN_DIM", 0)
     expr_df = topk.knn_join(emb, queries, k=4)
-    gemm_df = topk.knn_join(emb, queries, k=4, dim=64)
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 0)
+    gemm_df = topk.knn_join(emb, queries, k=4)
     assert not _gemm_scored(expr_df) and _gemm_scored(gemm_df)
     expr = {(r.query_id, r.vec_id, r.similarity, r.rank) for r in expr_df.collect()}
     gemm = {(r.query_id, r.vec_id, r.similarity, r.rank) for r in gemm_df.collect()}
@@ -271,6 +271,40 @@ def test_ivf_search_scores_wide_queries_with_gemm(spark, monkeypatch):
     monkeypatch.setattr(V, "GEMM_MIN_DIM", 301)
     expr_df = ivf.ivf_search(index, q, k=5, nprobe=2)
     assert not _gemm_scored(expr_df)
+    assert gemm == [(r.vec_id, r.similarity) for r in expr_df.collect()]
+    assert len(gemm) == 5 and gemm[0][0] == 7
+
+
+def test_topk_distance_kernels_agree(spark, monkeypatch):
+    """topk_distance's wide branch reports ``1 - similarity`` rounded as
+    the fold rounds: its rows equal the fold's exactly."""
+    emb = load_table(spark, SF, "embeddings")
+    q = [float(x) for x in emb.where(F.col("vec_id") == 3).head().embedding]
+    expr_df = topk.topk_distance(emb, q, k=10)
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 0)
+    gemm_df = topk.topk_distance(emb, q, k=10)
+    assert not _gemm_scored(expr_df) and _gemm_scored(gemm_df)
+    expr = [(r.vec_id, r.distance) for r in expr_df.collect()]
+    assert [(r.vec_id, r.distance) for r in gemm_df.collect()] == expr
+    assert len(expr) == 10 and expr[0][0] == 3
+
+
+def test_search_layout_scores_wide_queries_with_gemm(spark, tmp_path, monkeypatch):
+    """A wide query on a persisted layout takes the GEMM kernel like the
+    in-memory index does; its rows equal the ``_vnorm`` fold's, reached by
+    raising the width rule's cut-off above the corpus width."""
+    corpus = synthetic_embeddings(spark, 400, 300, n_modes=4, seed=13)
+    index = ivf.build_ivf(corpus, n_lists=4)
+    path = str(tmp_path / "layout")
+    ivf.write_ivf_layout(index, path)
+    q = [float(x) for x in corpus.where(F.col("vec_id") == 7).head().embedding]
+    gemm_df = ivf.search_layout(spark, path, index.centers, q, k=5, nprobe=2)
+    assert _gemm_scored(gemm_df)
+    gemm = [(r.vec_id, r.similarity) for r in gemm_df.collect()]
+    monkeypatch.setattr(V, "GEMM_MIN_DIM", 301)
+    expr_df = ivf.search_layout(spark, path, index.centers, q, k=5, nprobe=2)
+    assert not _gemm_scored(expr_df)
+    assert "_vnorm" in expr_df._jdf.queryExecution().executedPlan().toString()
     assert gemm == [(r.vec_id, r.similarity) for r in expr_df.collect()]
     assert len(gemm) == 5 and gemm[0][0] == 7
 
